@@ -1022,7 +1022,7 @@ def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     .ppl_buckets) over the lm_perplexity scores: the exact
     interpolated percentile (one scalar aggregate broadcast back —
     no global sort) matches DuckDB's quantile_cont bit-for-bit on
-    the round-6 ppl values, so the bucketing is hash-gated on top
+    the round-6 ppl values, so the tercile split is hash-gated on top
     of the already-gated LM scoring."""
     from osm_wayback_spark.operators.lm import ppl_buckets
 

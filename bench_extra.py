@@ -6,7 +6,7 @@ expensive queries with the noop sink (guide §1.4), labels jobs
 
 Usage:
     python bench_extra.py <section> [...sections]
-sections: dedup, winnow, lm, pipeline, skew, misc, all
+sections: dedup, winnow, lm, skew, misc, all
 """
 
 from __future__ import annotations
@@ -173,60 +173,6 @@ def sec_lm(spark):
     save_plan(score(), "plans/r07/_lm_full.txt")
 
 
-def sec_pipeline(spark):
-    import __spark_entry__ as entrymod
-    from pyspark.sql import functions as F
-
-    from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.tiles import assign_tiles
-    from osm_wayback_spark.sources.extract import (
-        dedup_versions,
-        extract_versions_native,
-        features_from_versions,
-        node_locations_from_versions,
-    )
-
-    pages = entrymod._pages(spark, SF_DIR)
-    timed(spark, "pipe/pages_scan", lambda: pages)
-    timed(
-        spark, "pipe/extract_native",
-        lambda: extract_versions_native(pages),
-    )
-    timed(
-        spark, "pipe/extract+dedup",
-        lambda: dedup_versions(extract_versions_native(pages)),
-    )
-    versions_ext = dedup_versions(extract_versions_native(pages))
-    timed(
-        spark, "pipe/features",
-        lambda: features_from_versions(versions_ext),
-    )
-    timed(
-        spark, "pipe/node_locations",
-        lambda: node_locations_from_versions(
-            versions_ext.drop("geometry_json")
-        ),
-    )
-    timed(
-        spark, "pipe/history_geom",
-        lambda: pipeline.geometry_pipeline(pages),
-        passes=PASSES,
-    )
-
-    def recon():
-        return pipeline.reconstruction_pipeline(pages)
-
-    def e2e():
-        spark.catalog.clearCache()
-        recon_df = pipeline.reconstruction_pipeline(pages)
-        return assign_tiles(
-            recon_df.filter(F.col("geometry").isNotNull()), z=15
-        )
-
-    timed(spark, "pipe/reconstruct", recon)
-    timed(spark, "pipe/e2e_tiles", e2e)
-
-
 def sec_skew(spark):
     import bench as benchmod
 
@@ -267,7 +213,6 @@ SECTIONS = {
     "dedup": sec_dedup,
     "winnow": sec_winnow,
     "lm": sec_lm,
-    "pipeline": sec_pipeline,
     "skew": sec_skew,
     "misc": sec_misc,
 }

@@ -17,8 +17,7 @@ A from-scratch rebuild of the capabilities of osmlab/osm-wayback
   Web-Mercator column math + a (z, x)-partitioned table.
 
 Plus the large-scale training-data ops: dedup (exact / MinHash-LSH /
-SimHash / n-gram Jaccard), similarity search, text analysis, and
-multimodal column plumbing.
+SimHash / n-gram Jaccard), similarity search and text analysis.
 """
 
 __version__ = "0.1.0"

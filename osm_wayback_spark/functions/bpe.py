@@ -199,28 +199,3 @@ def encode_bpe_reference(text: str, merges: list[tuple[str, str]]) -> list[str]:
             syms = merge_word(syms, l, r)
         toks.extend(syms)
     return toks
-
-
-def write_bpe_vocab(
-    spark, merges: list[tuple[str, str]], path: str
-) -> None:
-    """Persist a trained merge list as the tokenizer artifact
-    (one-row JSON text through Spark's Hadoop filesystem, so `path`
-    may be any warehouse URI — hdfs://, s3a://, file:/ — and the
-    artifact lands on the SAME filesystem as the corpus, like
-    `similarity.write_ivf_index`)."""
-    import json
-
-    payload = json.dumps({"version": 1, "merges": [list(m) for m in merges]})
-    spark.createDataFrame([(payload,)], "value string").coalesce(
-        1
-    ).write.mode("overwrite").text(path)
-
-
-def read_bpe_vocab(spark, path: str) -> list[tuple[str, str]]:
-    """Load a merge list written by `write_bpe_vocab` (rank order
-    preserved)."""
-    import json
-
-    payload = json.loads(spark.read.text(path).collect()[0].value)
-    return [tuple(m) for m in payload["merges"]]

@@ -86,14 +86,6 @@ def parent_cell_cols(res_fine: Column, x: Column, y: Column, res: Column) -> Col
     )
 
 
-def cell_id_col(lon: Column, lat: Column, res: Column) -> Column:
-    """cell_id with a COLUMN resolution: lets a mixed-res cell table
-    join against points without any driver-side enumeration of the
-    res values."""
-    x, y = tile_xy_cols(lon, lat, res)
-    return pack_cell_cols(res, x, y)
-
-
 def pack_cell(res: int, x, y) -> int:
     return res * _R_SHIFT + x * _X_SHIFT + y
 

@@ -33,11 +33,3 @@ def tile_y(lat: Column, z: int) -> Column:
     merc = F.log(F.tan(rad) + F.lit(1.0) / F.cos(rad))
     y = F.floor((F.lit(1.0) - merc / F.lit(math.pi)) / F.lit(2.0) * F.lit(n))
     return F.greatest(F.lit(0), F.least(F.lit(int(n) - 1), y)).cast("long")
-
-
-def tile_cols(lon: Column, lat: Column, z: int = DEFAULT_ZOOM) -> list[Column]:
-    return [
-        F.lit(z).alias("z"),
-        tile_x(lon, z).alias("x"),
-        tile_y(lat, z).alias("y"),
-    ]

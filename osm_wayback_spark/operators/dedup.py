@@ -382,43 +382,6 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return voted.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def simhash_pairs(
-    sim: DataFrame, bits: int = SIMHASH_BITS, chunks: int = 4,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Near-dup candidates: docs sharing ≥1 of `chunks` bit-slices
-    (detects pairs within hamming distance < chunks by pigeonhole).
-    ``max_bucket`` drops degenerate hot slices before the self-join
-    (logged; see _cap_buckets); None is the exact configuration."""
-    width = bits // chunks
-    slices = [
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.shiftright(F.col("simhash"), c * width)
-            .bitwiseAND(F.lit(2**width - 1))
-            .alias("val"),
-        )
-        for c in range(chunks)
-    ]
-    bucketed = sim.select(
-        "doc_id", F.explode(F.array(*slices)).alias("s")
-    ).select("doc_id", "s.chunk", "s.val")
-    bucketed = _cap_buckets(bucketed, ["chunk", "val"], max_bucket, "simhash_pairs")
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.chunk") == F.col("b.chunk"),
-                F.col("a.val") == F.col("b.val"),
-                F.col("a.doc_id") < F.col("b.doc_id"),
-            ],
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
 def _cc_star(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
     """Large-star/small-star contraction (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14) → (node, component)

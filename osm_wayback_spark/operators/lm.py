@@ -149,7 +149,7 @@ def ppl_buckets(
     labels: tuple[str, str, str] = ("head", "middle", "tail"),
     exact: bool = True,
 ) -> DataFrame:
-    """CCNet-style perplexity bucketing (Wenzek et al. 2020 split the
+    """CCNet-style perplexity terciles (Wenzek et al. 2020 split the
     corpus into head/middle/tail by LM perplexity terciles; head =
     lowest perplexity = most in-distribution): + ``bucket``.
 

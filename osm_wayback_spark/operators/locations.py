@@ -5,11 +5,11 @@ all history versions into a std::set, point-gets each node's
 per-changeset location history from the `locations` CF, and attaches a
 nested ``nodeLocations`` dict (add_geometry.cpp:50-152).
 
-Spark shape: explode → per-row distinct → equi-join on node_id →
-re-nest with two staged map_from_entries aggregations. The join
-shuffles on node_id (the natural key); the two re-nest aggregations
-shuffle on (feature, node_id) then (feature) — each strictly narrower
-than its input. ``nodeLocations`` is attached only when ≥1 node
+Spark shape: explode the versions' node refs → distinct → equi-join
+on node_id → re-nest with two staged map_from_entries aggregations.
+The join shuffles on node_id (the natural key); the two re-nest
+aggregations shuffle on (feature, node_id) then (feature) — each
+strictly narrower than its input. ``nodeLocations`` is attached only when ≥1 node
 resolved (add_geometry.cpp:150: left join → null for none).
 """
 
@@ -33,63 +33,37 @@ def _inner_record():
 def add_node_locations(
     with_history: DataFrame,
     node_locations: DataFrame,
-    refs_source: DataFrame | None = None,
+    refs_source: DataFrame,
 ) -> DataFrame:
     """Attach ``node_locations: map<long, map<long, struct>>`` to
     every non-node feature of an add_history output; node features
     pass through with a null column (P7, add_geometry.cpp:46).
 
-    ``refs_source`` (late r7): the versions table the history was
-    built from. When given, the referenced-node set is derived from
-    it DIRECTLY — ``distinct (element_type, id, node_refs[i])`` over
-    the version rows — instead of re-exploding ``with_history``'s
-    nested arrays. The two are equivalent: a feature's ``@history``
-    holds every version of the entity (``features_from_versions``
-    keeps the MAX version, so add_history's ``v.version <=
-    f.version`` range keeps all rows), its records' ``n`` is the
-    version rows' ``node_refs`` verbatim, and entities with no
-    feature row contribute keys the final left join drops. Why it
-    matters: deriving refs from ``with_history`` makes the optimizer
-    materialize the whole history-assembly subtree TWICE (the pushed
-    non-node filter defeats exchange reuse — the physical plan shows
-    two copies of the features window + tag-diff join + collect_list
-    aggregate); the versions-derived refs replace the duplicated
-    heavy subtree with one narrow 3-column distinct (guide §2.4
-    "remove shuffles outright" / §2.3 "shuffle keys, not payloads").
+    ``refs_source`` must be the versions table ``with_history`` was
+    built from (``add_history(features_from_versions(v), v)``). The
+    referenced-node set is ``distinct (element_type, id,
+    node_refs[i])`` over its non-node rows — the std::set-union of
+    ``n`` across all history versions (add_geometry.cpp:53-62):
+    ``features_from_versions`` keeps the MAX version, so a feature's
+    ``@history`` holds every version row of the entity and each
+    record's ``n`` is that row's ``node_refs`` verbatim; entities
+    with no feature row contribute keys the final left join drops.
+    Passing any other table silently yields missing or extra node
+    entries. Deriving the refs from the versions table, not from
+    ``with_history``'s nested arrays, keeps the optimizer from
+    materializing the history-assembly subtree twice.
     """
-    if refs_source is not None:
-        refs = (
-            refs_source.filter(F.col("element_type") != "node")
-            .select(
-                "element_type",
-                "id",
-                F.explode("node_refs").alias("node_id"),
-            )
-            # across-version duplicates must collapse BEFORE the
-            # changeset collect: map_from_entries rejects dup keys
-            .distinct()
-        )
-    else:
-        non_node = with_history.filter(F.col("element_type") != "node")
-        refs = non_node.select(
+    refs = (
+        refs_source.filter(F.col("element_type") != "node")
+        .select(
             "element_type",
             "id",
-            F.explode(
-                # std::set-union of n across all history versions
-                # (add_geometry.cpp:53-62): flatten + per-row distinct —
-                # no global distinct shuffle needed.
-                F.array_distinct(
-                    F.flatten(
-                        F.transform(
-                            "history",
-                            lambda r: F.coalesce(
-                                r["n"], F.array().cast("array<bigint>")
-                            ),
-                        )
-                    )
-                )
-            ).alias("node_id"),
+            F.explode("node_refs").alias("node_id"),
         )
+        # across-version duplicates must collapse BEFORE the
+        # changeset collect: map_from_entries rejects dup keys
+        .distinct()
+    )
     resolved = refs.join(node_locations, on="node_id", how="inner")
     per_node = resolved.groupBy("element_type", "id", "node_id").agg(
         F.map_from_entries(

@@ -1,4 +1,4 @@
-"""Raster↔vector conversion over the quadtree cell grid (north rule:
+"""Vector → raster conversion over the quadtree cell grid (north rule:
 "H3/S2 index, point-in-polygon, kNN, raster↔vector").
 
 A "raster" here is the engine's cell table: (cell long, value) at a
@@ -8,8 +8,7 @@ fixed resolution — the discrete form every gridded layer reduces to.
   over their bbox cover (Arrow kernel, pure math), then each
   candidate cell keeps only if its CENTER lies inside the rings
   (center-sampling rasterization, the common GIS convention).
-- ``vectorize_cells``: raster → vector. Each cell becomes its bbox
-  Polygon (GeoJSON) — the exact inverse tiling.
+- ``zonal_stats``: per-polygon aggregates of a cell-keyed raster.
 
 Both are cell-equi-join / narrow-map shaped: no cross product, no
 driver-side geometry.
@@ -37,18 +36,6 @@ def _cell_center(cell: int) -> tuple[float, float]:
     yn = (y + 0.5) / n
     lat = math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * yn))))
     return lon, lat
-
-
-def _cell_bounds(cell: int) -> tuple[float, float, float, float]:
-    res, x, y = unpack_cell(cell)
-    n = 2**res
-
-    def lat_of(yy: float) -> float:
-        return math.degrees(math.atan(math.sinh(math.pi * (1 - 2 * yy / n))))
-
-    lon0 = x / n * 360.0 - 180.0
-    lon1 = (x + 1) / n * 360.0 - 180.0
-    return lon0, lat_of(y + 1), lon1, lat_of(y)
 
 
 def rasterize_polygons(
@@ -79,36 +66,6 @@ def rasterize_polygons(
             yield pd.DataFrame(rows, columns=["polygon_id", "cell"])
 
     return polygons.mapInPandas(kernel, schema="polygon_id long, cell long")
-
-
-def vectorize_cells(cells: DataFrame, cell_col: str = "cell") -> DataFrame:
-    """(…, cell) → (…, geometry GeoJSON Polygon of the cell bbox)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            geoms = []
-            for c in pdf[cell_col]:
-                lon0, lat0, lon1, lat1 = _cell_bounds(int(c))
-                geoms.append(
-                    json.dumps(
-                        {
-                            "type": "Polygon",
-                            "coordinates": [[
-                                [lon0, lat0], [lon1, lat0], [lon1, lat1],
-                                [lon0, lat1], [lon0, lat0],
-                            ]],
-                        },
-                        separators=(",", ":"),
-                    )
-                )
-            out = pdf.copy()
-            out["geometry"] = geoms
-            yield out
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cells.schema.fields
-    ) + ", geometry string"
-    return cells.mapInPandas(kernel, schema=schema)
 
 
 def zonal_stats(

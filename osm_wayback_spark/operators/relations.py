@@ -44,16 +44,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# relation_members rows: one per (relation id, version, member)
-MEMBERS_SCHEMA = (
-    "id long, version int, ts long, member_idx int, member_ref long, "
-    "member_role string"
-)
-# way_geoms rows: one per reconstructed way version interval
-WAY_GEOMS_SCHEMA = (
-    "way_id long, valid_since long, valid_until long, coords_json string"
-)
-
 
 def member_ways_asof(
     relation_members: DataFrame, way_geoms: DataFrame
@@ -65,8 +55,10 @@ def member_ways_asof(
     later / deleted) yield a NULL coords_json — kept, so assembly
     can count unresolved members instead of silently dropping them.
 
-    → (id, version, ts, member_idx, member_ref, member_role,
-    coords_json).
+    relation_members(id, version, ts, member_idx, member_ref,
+    member_role) × way_geoms(way_id, valid_since, valid_until,
+    coords_json) → (id, version, ts, member_idx, member_ref,
+    member_role, coords_json).
 
     ONE left join with the interval predicate in the join condition
     (unmatched members surface as a single NULL-coords row directly —

@@ -86,25 +86,6 @@ def _planes(dim: int, n_planes: int, table: int = 0) -> np.ndarray:
     return out
 
 
-def lsh_buckets(embeddings: DataFrame, n_planes: int = 12) -> DataFrame:
-    """→ (vec_id, bucket): sign-bit bucket id per vector (vectorized
-    Arrow kernel: one matmul per batch)."""
-
-    @pandas_udf("long")
-    def bucket_udf(emb: pd.Series) -> pd.Series:
-        if emb.empty:
-            return pd.Series([], dtype="int64")
-        mat = np.stack(emb.to_numpy())
-        planes = _planes(mat.shape[1], n_planes)
-        bits = (mat @ planes.T) > 0
-        weights = (2 ** np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return embeddings.select(
-        "vec_id", "embedding", bucket_udf("embedding").alias("bucket")
-    )
-
-
 def lsh_bucket_rows(
     embeddings: DataFrame, n_planes: int = 8, tables: int = 1
 ) -> DataFrame:

@@ -16,14 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.tiles import DEFAULT_ZOOM, tile_x, tile_y
-
-# GeoJSON coordinates, permissively nested: we flatten any of
-# Point/LineString/Polygon/MultiPolygon to a lon/lat list by regex —
-# cheaper than a triple schema union, and exact for bbox purposes.
-_COORD_SCHEMA = T.StructType([T.StructField("type", T.StringType())])
 
 
 def _flat_lonlats(geometry_col: str):

@@ -18,38 +18,32 @@ from .operators.locations import add_node_locations
 from .operators.reconstruction import reconstruct
 from .sources.extract import (
     dedup_versions,
-    extract_versions,
     extract_versions_native,
     features_from_versions,
     node_locations_from_versions,
 )
 
 
-def build_tables(
-    pages: DataFrame, native: bool = True, reuse: bool = True
-) -> dict[str, DataFrame]:
-    """``native=True`` parses the payload JVM-side (throughput path);
-    False uses the Arrow kernel (the general-purpose extraction path —
-    real-world html needs a real parser). Outputs are bit-identical
-    on the synthetic corpus (tested). Re-crawled versions are deduped
-    last-write-wins (dedup_versions) before anything downstream.
+def build_tables(pages: DataFrame) -> dict[str, DataFrame]:
+    """Parse the payload JVM-side (``extract_versions_native``) and
+    dedup re-crawled versions last-write-wins (dedup_versions) before
+    anything downstream.
 
-    ``reuse=True`` persists the extracted versions (MEMORY_AND_DISK):
-    the three branches (versions / features / node_locations) form a
-    diamond DAG that would otherwise re-scan + re-extract the pages
-    input once per branch — free at test scale, 2-3 redundant full
-    scans of the (much larger) pages table at 100 TB. The persisted
-    table is the small side of the diamond (columnar versions, no
-    html), so caching it — not the input — is the right trade; on a
-    cluster the executor block manager spills it if needed. Measured
-    at sf0.1/local[32]: 9.9 s → 5.7 s end-to-end. (For durable,
+    The extracted versions are persisted (MEMORY_AND_DISK): the three
+    branches (versions / features / node_locations) form a diamond
+    DAG that would otherwise re-scan + re-extract the pages input
+    once per branch — free at test scale, 2-3 redundant full scans
+    of the (much larger) pages table at 100 TB. The persisted table
+    is the small side of the diamond (columnar versions, no html),
+    so caching it — not the input — is the right trade; on a cluster
+    the executor block manager spills it if needed. Measured at
+    sf0.1/local[32]: 9.9 s → 5.7 s end-to-end. (For durable,
     resumable materialization use staged_pipeline instead.)"""
     from pyspark import StorageLevel
 
-    extractor = extract_versions_native if native else extract_versions
-    versions_ext = dedup_versions(extractor(pages))
-    if reuse:
-        versions_ext = versions_ext.persist(StorageLevel.MEMORY_AND_DISK)
+    versions_ext = dedup_versions(extract_versions_native(pages)).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     versions = versions_ext.drop("geometry_json")
     return {
         "versions": versions,
@@ -68,9 +62,6 @@ def geometry_pipeline(pages: DataFrame) -> DataFrame:
     """pages → features with @history + nodeLocations (≙ .history.geometries)."""
     t = build_tables(pages)
     hist = add_history(t["features"], t["versions"])
-    # refs_source: derive the referenced-node set straight from the
-    # versions table — equivalent output, and the optimizer no longer
-    # materializes the history-assembly subtree twice (locations.py)
     return add_node_locations(
         hist, t["node_locations"], refs_source=t["versions"]
     )

@@ -26,7 +26,7 @@ Two safety guards make it composable:
   unchanged (they are shuffle-parallel already, and a second fanout
   layer — e.g. an operator called on an already-fanned frame — must
   not re-probe an Exchange).
-- **size guard**: inputs under ``min_bytes`` (dimension tables) are
+- **size guard**: inputs under ``_MIN_BYTES`` (dimension tables) are
   left alone — scheduling 32 tasks over a 2 KB table is pure
   overhead.
 """
@@ -54,7 +54,7 @@ _BARRIER_NODES = (
     "FlatMapGroups",
 )
 
-_DEFAULT_MIN_BYTES = 192 * 1024
+_MIN_BYTES = 192 * 1024
 
 # logical-plan node names whose output partitioning is shuffle-derived
 # (hash/range over the configured shuffle-partition count, AQE-coalesced
@@ -110,19 +110,13 @@ def probe_scan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def fanout_small(
-    df: DataFrame,
-    factor: int = 1,
-    target: int | None = None,
-    min_bytes: int = _DEFAULT_MIN_BYTES,
-) -> DataFrame:
-    """Round-robin repartition ``df`` up to ``target`` (default: the
-    session's defaultParallelism x ``factor``) when its scan resolves
-    to fewer partitions; identity otherwise. Row-wise deterministic
-    (sort-before-repartition is on by default), and a no-op at scale.
+def fanout_small(df: DataFrame) -> DataFrame:
+    """Round-robin repartition ``df`` up to the session's
+    defaultParallelism when its scan resolves to fewer partitions;
+    identity otherwise. Row-wise deterministic (sort-before-repartition
+    is on by default), and a no-op at scale.
     """
-    sc = df.sparkSession.sparkContext
-    tgt = target if target is not None else sc.defaultParallelism * factor
+    tgt = df.sparkSession.sparkContext.defaultParallelism
     if tgt <= 1:
         return df
     try:
@@ -139,7 +133,7 @@ def fanout_small(
                 except OSError:
                     total = None
                     break
-            if total is not None and total < min_bytes:
+            if total is not None and total < _MIN_BYTES:
                 return df
         n = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - planning quirks: keep plan

@@ -44,22 +44,6 @@ VERSIONS = T.StructType(
     ]
 )
 
-# node_locations ≙ the `locations` CF (json_encoding.hpp:30-68), but
-# normalized to a long table; the read-modify-write upsert keeping the
-# max version per (node, changeset) (db.hpp:225-258,
-# json_encoding.hpp:51-57) becomes a window dedup at build time.
-NODE_LOCATIONS = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("changeset", T.LongType(), False),
-        T.StructField("version", T.IntegerType(), False),
-        T.StructField("ts", T.LongType(), False),
-        T.StructField("uid", T.IntegerType(), True),
-        T.StructField("user", T.StringType(), True),
-        T.StructField("lonlat", T.ArrayType(T.DoubleType()), True),
-    ]
-)
-
 # features ≙ the osmium-export geojsonseq stream (run.sh:20,
 # example/osmiumconfig): current version of each object + geometry.
 FEATURES = T.StructType(
@@ -115,44 +99,5 @@ RECONSTRUCTED = T.StructType(
         T.StructField("user", T.StringType(), True),
         T.StructField("geometry", T.StringType(), True),  # GeoJSON
         T.StructField("tags", T.MapType(T.StringType(), T.StringType()), True),
-    ]
-)
-
-# tiles ≙ the tippecanoe .mbtiles output (run.sh:65), as a table
-# partitionable by (z, x).
-TILES = T.StructType(
-    [
-        T.StructField("z", T.IntegerType(), False),
-        T.StructField("x", T.LongType(), False),
-        T.StructField("y", T.LongType(), False),
-        T.StructField("element_type", T.StringType(), False),
-        T.StructField("id", T.LongType(), False),
-        T.StructField("feature_json", T.StringType(), True),
-    ]
-)
-
-# Per-partition lineage/metrics (north rule: every stage resumable,
-# per-partition lineage + metrics checkpointed).
-LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("rows_out", T.LongType(), False),
-        T.StructField("checksum", T.LongType(), False),
-        T.StructField("wall_ms", T.DoubleType(), False),
-    ]
-)
-
-# Multimodal: opaque payload + typed metadata (decode stubbed — see
-# operators/multimodal.py).
-MEDIA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("duration_ms", T.IntegerType(), True),
     ]
 )

@@ -106,12 +106,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-
-
 def ensure_checkpoint_dir(spark: SparkSession) -> None:
     """Make sure a RELIABLE checkpoint dir is configured before an
     eager ``.checkpoint()`` (ANN candidate materialization, kNN

@@ -42,8 +42,8 @@ def extract_text(html_bytes: bytes) -> str:
 
 
 def _probe_lxml():
-    """Pillow-pattern probe (see operators/multimodal.py): import the
-    optional real-HTML parser at call time, never at module import."""
+    """Optional-dependency probe: import the real-HTML parser at call
+    time, never at module import."""
     try:
         import lxml.html as lh  # noqa: PLC0415
 

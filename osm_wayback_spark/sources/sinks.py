@@ -1,12 +1,5 @@
-"""Sinks + export-side classification (SURVEY.md rows S3, S8, S9, F7).
+"""Sinks (SURVEY.md rows S9, F7).
 
-- ``classify_geometry``: the osmium-export linear/area tag
-  classification (example/osmiumconfig:12-19 — ``area_tags`` like
-  building/landuse make a closed way a Polygon, ``linear_tags`` force
-  LineString). Pure column logic.
-- ``write_geojsonseq``: line-delimited GeoJSON export (≙ the
-  reference's stdout JSON sink, add_history.cpp:219-222) with the
-  short-key property scheme already embedded in the rows.
 - ``to_topojson_history``: the reference's WRITE_TOPOJSON_HISTORY
   output mode (map-geom-reconstruction.js:257-275), backed by the
   pure-Python topology encoder in functions/topojson.py.
@@ -21,41 +14,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# osmiumconfig-style defaults (example/osmiumconfig:12-19)
-AREA_TAGS = ["building", "landuse", "natural", "amenity", "leisure", "area"]
-LINEAR_TAGS = ["highway", "barrier", "waterway", "railway"]
-
-
-def classify_geometry(
-    tags: Column,
-    is_closed: Column,
-    area_tags: list[str] | None = None,
-    linear_tags: list[str] | None = None,
-) -> Column:
-    """'Polygon' | 'LineString' per export-config tag classification.
-
-    linear tags win (a closed ``highway`` ring is still a road);
-    otherwise a closed way with an area tag becomes a Polygon.
-    """
-    area = F.array(*[F.lit(t) for t in (area_tags or AREA_TAGS)])
-    linear = F.array(*[F.lit(t) for t in (linear_tags or LINEAR_TAGS)])
-    has = lambda vocab: F.exists(  # noqa: E731
-        F.map_keys(tags), lambda k: F.array_contains(vocab, k)
-    )
-    return (
-        F.when(has(linear), F.lit("LineString"))
-        .when(is_closed & has(area), F.lit("Polygon"))
-        .otherwise(F.lit("LineString"))
-    )
-
-
-def write_geojsonseq(df: DataFrame, path: str, json_col: str = "feature_json") -> None:
-    """One GeoJSON Feature per line (≙ .geojsonseq staged files,
-    README.md:52-62)."""
-    df.select(F.col(json_col).alias("value")).write.mode("overwrite").text(path)
 
 
 def write_mbtiles(
@@ -201,103 +161,3 @@ def to_topojson_history(
         # Arrow-native inputs carry coordinates as numpy arrays
         default=lambda o: o.tolist(),
     )
-
-
-def with_observed_counts(df: DataFrame, name: str) -> DataFrame:
-    """A4 — the reference's run counters (feature_count /
-    lookup_fail, add_history.cpp:54-60) as Spark observed metrics:
-    collected by the driver on action completion with zero extra
-    passes."""
-    return df.observe(name, F.count(F.lit(1)).alias("rows"))
-
-
-def write_corpus_shards(
-    docs: DataFrame,
-    path: str,
-    n_shards: int = 16,
-    id_col: str = "doc_id",
-    token_col: str | None = None,
-) -> dict:
-    """Training-corpus shard writer: deterministic hash sharding +
-    a verifiable manifest — the artifact a data loader consumes.
-
-        <path>/data.parquet/shard=N/   (one directory per shard)
-        <path>/manifest.json           (per-shard rows, token sums,
-                                        order-insensitive checksums)
-
-    Scale shape: shard = pmod(xxhash64(id), n_shards) — deterministic
-    across runs/partitionings/engines, so a re-run produces
-    byte-stable shard MEMBERSHIP (loaders can resume mid-epoch and
-    dedup bookkeeping survives rewrites). ONE repartition on the
-    shard column co-locates each shard into one task's output;
-    the manifest aggregate reuses the same Exchange. Checksum =
-    sum(pmod(xxhash64(id), 2^31)) per shard — order-insensitive and
-    multiplicity-sensitive (the lineage-metrics design), so a
-    dropped-or-duplicated row is visible without re-reading data.
-    Returns the manifest dict."""
-    import json as _json
-
-    shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_shards)).cast("int")
-    staged = docs.withColumn("shard", shard).repartition(n_shards, "shard")
-    staged.write.mode("overwrite").partitionBy("shard").parquet(
-        f"{path}/data.parquet"
-    )
-    aggs = [
-        F.count("*").alias("rows"),
-        F.sum(F.pmod(F.xxhash64(F.col(id_col)), F.lit(2**31))).alias(
-            "checksum"
-        ),
-    ]
-    if token_col is not None:
-        aggs.append(F.sum(token_col).alias("tokens"))
-    stats = (
-        staged.groupBy("shard").agg(*aggs).orderBy("shard").collect()
-    )
-    manifest = {
-        "n_shards": n_shards,
-        "total_rows": int(sum(r.rows for r in stats)),
-        "shards": [
-            {
-                "shard": int(r.shard),
-                "rows": int(r.rows),
-                "checksum": int(r.checksum),
-                **(
-                    {"tokens": int(r.tokens)}
-                    if token_col is not None
-                    else {}
-                ),
-            }
-            for r in stats
-        ],
-    }
-    docs.sparkSession.createDataFrame(
-        [(_json.dumps(manifest),)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(f"{path}/manifest.json")
-    return manifest
-
-
-def verify_corpus_shards(spark, path: str, id_col: str = "doc_id") -> bool:
-    """Recompute the manifest from the written shards and compare —
-    the loader-side integrity check (detects lost/duplicated rows
-    without ordering assumptions)."""
-    import json as _json
-
-    manifest = _json.loads(
-        spark.read.text(f"{path}/manifest.json").collect()[0].value
-    )
-    got = {
-        int(r.shard): (int(r.rows), int(r.checksum))
-        for r in spark.read.parquet(f"{path}/data.parquet")
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("rows"),
-            F.sum(F.pmod(F.xxhash64(F.col(id_col)), F.lit(2**31))).alias(
-                "checksum"
-            ),
-        )
-        .collect()
-    }
-    want = {
-        s["shard"]: (s["rows"], s["checksum"]) for s in manifest["shards"]
-    }
-    return got == want

@@ -79,79 +79,6 @@ def sessionize(
     )
 
 
-def stateful_sessionize(
-    events: DataFrame,
-    gap_s: int = 300,
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-user
-    session clustering with explicit state — the hand-rolled
-    equivalent of ``sessionize`` for when session semantics outgrow
-    ``session_window`` (e.g. the reference's changeset clustering with
-    its max-version-wins merge, json_encoding.hpp:51-57).
-
-    State per user: (session_start_us, last_ts_us, n_events). A batch
-    extends the open session or closes it and opens a new one;
-    expired state (watermark passed) flushes the final session.
-    Output: (user_id, session_start, session_end, n_events).
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out_schema = (
-        "user_id long, session_start_us long, session_end_us long, n_events long"
-    )
-    state_schema = "start_us long, last_us long, n long"
-
-    def fn(key, pdfs, state):
-        import pandas as pd
-
-        (user_id,) = key
-        ts_list = []
-        for pdf in pdfs:
-            ts_list.extend(int(t.value) // 1000 for t in pd.to_datetime(pdf["ts"]))
-        closed = []
-        if state.hasTimedOut:
-            if state.exists:
-                s, l, n = state.get
-                closed.append((user_id, s, l, n))
-                state.remove()
-        else:
-            ts_list.sort()
-            if state.exists:
-                s, l, n = state.get
-            else:
-                s = l = None
-                n = 0
-            for t in ts_list:
-                if s is None:
-                    s, l, n = t, t, 1
-                elif t - l <= gap_s * 1_000_000:
-                    l, n = max(l, t), n + 1
-                else:
-                    closed.append((user_id, s, l, n))
-                    s, l, n = t, t, 1
-            if s is not None:
-                state.update((s, l, n))
-                state.setTimeoutTimestamp(l // 1000 + gap_s * 1000)
-        yield pd.DataFrame(
-            closed,
-            columns=["user_id", "session_start_us", "session_end_us", "n_events"],
-        )
-
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 def run_available_now(
     stream_df: DataFrame, table_name: str, timeout_s: int = 120,
     output_mode: str = "complete",

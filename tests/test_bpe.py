@@ -151,23 +151,3 @@ def test_encode_partition_independent(spark):
         .collect()
     )
     assert a == b
-
-
-def test_vocab_roundtrip(spark, tmp_path):
-    from osm_wayback_spark.functions.bpe import read_bpe_vocab, write_bpe_vocab
-
-    train = spark.createDataFrame(
-        [(0, "low low lower newest the the")], "doc_id long, text string"
-    )
-    merges = train_bpe(train, num_merges=6, min_freq=1)
-    assert merges
-    p = str(tmp_path / "bpe_vocab")
-    write_bpe_vocab(spark, merges, p)
-    loaded = read_bpe_vocab(spark, p)
-    assert loaded == merges
-    # the loaded artifact drives encode identically
-    docs = spark.createDataFrame([(1, "lower the newest")],
-                                 "doc_id long, text string")
-    a = docs.select(encode_bpe(F.col("text"), merges).alias("t")).first().t
-    b = docs.select(encode_bpe(F.col("text"), loaded).alias("t")).first().t
-    assert a == b == _ref_encode("lower the newest", merges)

@@ -3,8 +3,6 @@ inherits shuffle-derived width instead of paying its own round-robin
 Exchange, but keeps the repartition for scan-adjacent / limit-capped
 inputs. Output must be identical either way."""
 
-import pytest
-
 from osm_wayback_spark import pipeline
 from osm_wayback_spark.operators.reconstruction import reconstruct
 from osm_wayback_spark.plans.parallel import inherits_wide_partitioning
@@ -14,8 +12,6 @@ SF = 0.001
 
 
 def test_wide_detection_join_and_scan(spark, tmp_path):
-    from pyspark.sql import functions as F
-
     a = spark.range(100).withColumnRenamed("id", "k")
     b = spark.range(100).withColumnRenamed("id", "k")
     assert inherits_wide_partitioning(a.join(b, "k"))

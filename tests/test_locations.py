@@ -62,42 +62,3 @@ def test_nodes_pass_through_without_locations(spark_geom):
     for (etype, _id), row in spark_geom.items():
         if etype == "node":
             assert row.node_locations is None
-
-
-def test_refs_source_path_identical_to_history_derived(spark):
-    """late r7: refs derived from the versions table (one narrow
-    distinct) must reproduce the with_history-derived refs exactly —
-    the change only removes the duplicated history-assembly subtree
-    from the physical plan, never a row or map entry."""
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
-
-    pages = synth_pages(spark, SF)
-    t = pipeline.build_tables(pages)
-    hist = add_history(t["features"], t["versions"])
-    old = add_node_locations(hist, t["node_locations"])
-    new = add_node_locations(
-        hist, t["node_locations"], refs_source=t["versions"]
-    )
-
-    def canon(df):
-        def canon_nl(nl):
-            if nl is None:
-                return None
-            return tuple(sorted(
-                (k, tuple(sorted(
-                    (k2, (tuple(v2.p) if v2.p is not None else None,
-                          v2.i, v2.u, v2.h, v2.t))
-                    for k2, v2 in v.items()
-                )))
-                for k, v in nl.items()
-            ))
-
-        return sorted(
-            (r.element_type, r.id, canon_nl(r.node_locations))
-            for r in df.select(
-                "element_type", "id", "node_locations"
-            ).collect()
-        )
-
-    assert canon(old) == canon(new)

@@ -1,19 +1,14 @@
 import json
 
-from osm_wayback_spark.functions.cells import pack_cell, unpack_cell
-from osm_wayback_spark.operators.raster import (
-    _cell_bounds,
-    _cell_center,
-    rasterize_polygons,
-    vectorize_cells,
-)
+from osm_wayback_spark.functions.cells import cover_bbox, pack_cell
+from osm_wayback_spark.operators.raster import _cell_center, rasterize_polygons
 
 
 def test_cell_center_inside_bounds():
     c = pack_cell(6, 20, 30)
     lon, lat = _cell_center(c)
-    lon0, lat0, lon1, lat1 = _cell_bounds(c)
-    assert lon0 < lon < lon1 and lat0 < lat < lat1
+    # the center's point cover at the cell's res is the cell itself
+    assert cover_bbox(lon, lat, lon, lat, 6) == [c]
 
 
 def test_rasterize_square(spark):
@@ -28,23 +23,6 @@ def test_rasterize_square(spark):
     for c in cells:
         lon, lat = _cell_center(c)
         assert -10 < lon < 10 and -10 < lat < 10
-
-
-def test_roundtrip_raster_vector(spark):
-    rings = [[[-10.0, -10.0], [10.0, -10.0], [10.0, 10.0], [-10.0, 10.0], [-10.0, -10.0]]]
-    df = spark.createDataFrame(
-        [(1, json.dumps(rings))], "polygon_id long, rings_json string"
-    )
-    ras = rasterize_polygons(df, res=5)
-    vec = vectorize_cells(ras)
-    rows = vec.collect()
-    assert len(rows) == ras.count()
-    for r in rows:
-        g = json.loads(r.geometry)
-        assert g["type"] == "Polygon"
-        # cell polygon must overlap the source square
-        (x0, y0), (x1, _), (_, y1) = g["coordinates"][0][0], g["coordinates"][0][1], g["coordinates"][0][2]
-        assert x0 < 10 and x1 > -10 and min(y0, y1) < 10
 
 
 def test_zonal_stats_matches_python(spark):

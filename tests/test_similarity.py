@@ -5,7 +5,7 @@ import random
 
 import pytest
 
-from osm_wayback_spark.operators.similarity import ann_lsh, cosine_topk, lsh_buckets
+from osm_wayback_spark.operators.similarity import ann_lsh, cosine_topk
 
 
 @pytest.fixture(scope="module")
@@ -35,13 +35,6 @@ def test_cosine_topk_matches_python(spark, emb):
         )[:5]
         exp = [i for _s, i in scored]
         assert [v for _r, v in sorted(got[qid])] == exp
-
-
-def test_lsh_buckets_deterministic(spark, emb):
-    _rows, df = emb
-    a = {r.vec_id: r.bucket for r in lsh_buckets(df, 10).collect()}
-    b = {r.vec_id: r.bucket for r in lsh_buckets(df.repartition(5), 10).collect()}
-    assert a == b
 
 
 def test_ann_lsh_reasonable_recall(spark, emb):

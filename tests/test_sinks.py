@@ -1,41 +1,6 @@
 import json
 
-import pytest
-from pyspark.sql import functions as F
-
-from osm_wayback_spark.sources.sinks import (
-    classify_geometry,
-    to_topojson_history,
-    with_observed_counts,
-    write_geojsonseq,
-)
-
-
-def test_classify_geometry(spark):
-    rows = [
-        (1, {"building": "yes"}, True),
-        (2, {"building": "yes"}, False),   # not closed → LineString
-        (3, {"highway": "primary"}, True),  # linear wins even closed
-        (4, {"name": "x"}, True),
-    ]
-    df = spark.createDataFrame(rows, "id long, tags map<string,string>, closed boolean")
-    got = {
-        r.id: r.g
-        for r in df.select(
-            "id", classify_geometry(F.col("tags"), F.col("closed")).alias("g")
-        ).collect()
-    }
-    assert got == {1: "Polygon", 2: "LineString", 3: "LineString", 4: "LineString"}
-
-
-def test_write_geojsonseq_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame(
-        [('{"type":"Feature","properties":{"@id":1}}',)], "feature_json string"
-    )
-    out = str(tmp_path / "seq")
-    write_geojsonseq(df, out)
-    lines = [json.loads(l) for l in spark.read.text(out).toPandas()["value"]]
-    assert lines == [{"type": "Feature", "properties": {"@id": 1}}]
+from osm_wayback_spark.sources.sinks import to_topojson_history
 
 
 def test_topojson_empty_history():
@@ -43,14 +8,6 @@ def test_topojson_empty_history():
 
     t = json.loads(to_topojson_history([]))
     assert t == {"type": "Topology", "objects": {}, "arcs": []}
-
-
-def test_observed_counts(spark):
-    df = with_observed_counts(spark.range(5), "m")
-    df.collect()
-    # observation is attached; value surfaces via listener / query
-    # progress — here we just assert the plan carries it and executes
-    assert df.count() == 5
 
 
 def test_write_mbtiles_container(spark, tmp_path):
@@ -120,43 +77,3 @@ def test_write_mbtiles_container(spark, tmp_path):
     }
     con2.close()
     assert blobs1 == blobs2
-
-
-def test_write_corpus_shards_manifest_and_determinism(spark, tmp_path):
-    from osm_wayback_spark.sources.sinks import (
-        verify_corpus_shards,
-        write_corpus_shards,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}", (i * 3) % 40 + 1) for i in range(500)],
-        "doc_id long, text string, n_tokens long",
-    )
-    p = str(tmp_path / "corpus")
-    man = write_corpus_shards(docs, p, n_shards=8, token_col="n_tokens")
-    assert man["total_rows"] == 500 and len(man["shards"]) == 8
-    assert sum(s["rows"] for s in man["shards"]) == 500
-    assert sum(s["tokens"] for s in man["shards"]) == sum(
-        (i * 3) % 40 + 1 for i in range(500)
-    )
-    # loader-side integrity check passes on the written artifact
-    assert verify_corpus_shards(spark, p)
-    # deterministic shard MEMBERSHIP under repartitioning
-    man2 = write_corpus_shards(
-        docs.repartition(13), str(tmp_path / "corpus2"), n_shards=8,
-        token_col="n_tokens",
-    )
-    assert man2["shards"] == man["shards"]
-    # roundtrip: all rows come back exactly once
-    back = spark.read.parquet(f"{p}/data.parquet")
-    assert back.count() == 500
-    assert back.select("doc_id").distinct().count() == 500
-    # a corrupted artifact (one shard dir dropped) fails verification
-    import shutil
-
-    victim = next(
-        d for d in __import__("os").listdir(f"{p}/data.parquet")
-        if d.startswith("shard=")
-    )
-    shutil.rmtree(f"{p}/data.parquet/{victim}")
-    assert not verify_corpus_shards(spark, p)

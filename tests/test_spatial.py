@@ -101,10 +101,10 @@ def test_pip_huge_polygon_coarsens_not_blows(spark, pts):
 def test_parent_cell_derivation_exact(spark):
     """The single-pass PIP point side derives coarser-res cells from
     the finest-res (x, y) by integer math; must equal computing
-    cell_id_col directly at each res — including clamp edges (±180
+    the cell id directly at each res — including clamp edges (±180
     lon, beyond-Mercator lats)."""
     from osm_wayback_spark.functions.cells import (
-        cell_id_col,
+        pack_cell_cols,
         parent_cell_cols,
         tile_xy_cols,
     )
@@ -125,7 +125,9 @@ def test_parent_cell_derivation_exact(spark):
             parent_cell_cols(
                 F.lit(rmax), F.col("_xf"), F.col("_yf"), F.lit(r)
             ).alias("derived"),
-            cell_id_col(F.col("lon"), F.col("lat"), F.lit(r)).alias("direct"),
+            pack_cell_cols(
+                F.lit(r), *tile_xy_cols(F.col("lon"), F.col("lat"), F.lit(r))
+            ).alias("direct"),
         ).collect()
         for row in out:
             assert row.derived == row.direct, (r, row.point_id)

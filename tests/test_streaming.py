@@ -59,41 +59,6 @@ def test_sessionize_matches_batch(spark, events_path):
     assert sum(got.values()) == spark.read.parquet(events_path).count()
 
 
-def test_stateful_sessionize(spark, events_path):
-    from osm_wayback_spark.streaming.events import stateful_sessionize
-
-    stream = stateful_sessionize(
-        read_event_stream(spark, events_path), gap_s=300
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("stateful_sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    q.stop()
-    got = spark.table("stateful_sessions").collect()
-    # sessions closed by the gap rule (the final open session per user
-    # stays in state — append mode only emits closed ones)
-    batch = (
-        spark.read.parquet(events_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.session_window("ts", "5 minutes").alias("s"), "user_id")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    exp = {
-        (r.user_id, int(r.s.start.timestamp() * 1_000_000)): r.n for r in batch
-    }
-    for r in got:
-        key = (r.user_id, r.session_start_us)
-        assert key in exp, key
-        assert exp[key] == r.n_events
-    assert len(got) > 0
-
-
 def test_streaming_exact_dedup(spark, tmp_path):
     """Duplicate texts in the stream collapse to one surviving row
     per fingerprint; distinct texts all pass."""

@@ -125,7 +125,8 @@ def test_nohistory_edge_cases_pinned(spark):
     pages = synth_pages(spark, 0.001)
     t = pipeline.build_tables(pages)
     geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"]
+        add_history(t["features"], t["versions"]), t["node_locations"],
+        refs_source=t["versions"],
     )
     empty_hist = geom.withColumn(
         "history", F.array().cast(geom.schema["history"].dataType)
@@ -163,7 +164,8 @@ def test_way_empty_node_locations_written_not_skipped(spark):
     pages = synth_pages(spark, 0.001)
     t = pipeline.build_tables(pages)
     geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"]
+        add_history(t["features"], t["versions"]), t["node_locations"],
+        refs_source=t["versions"],
     )
     ways = geom.filter("element_type = 'way'").limit(5)
     nl_type = geom.schema["node_locations"].dataType
@@ -187,7 +189,8 @@ def test_reconstruct_objects_modes(spark):
     pages = synth_pages(spark, 0.001)
     t = pipeline.build_tables(pages)
     geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"]
+        add_history(t["features"], t["versions"]), t["node_locations"],
+        refs_source=t["versions"],
     )
     complete = reconstruct_objects(geom, mode="complete").collect()
     assert complete
@@ -236,7 +239,8 @@ def _geom_df(spark, sf=0.001):
 
     t = pipeline.build_tables(synth_pages(spark, sf))
     return add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"]
+        add_history(t["features"], t["versions"]), t["node_locations"],
+        refs_source=t["versions"],
     )
 
 
