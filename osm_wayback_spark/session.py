@@ -14,8 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the sandbox (local[N], 128 GiB single JVM) but
-# expressed so the same code is correct on a 1000-executor cluster:
+# Defaults chosen for one local JVM (local[N], N = the cores this
+# process may use, heap from _driver_memory) but expressed so the same
+# code is correct on a 1000-executor cluster:
 # AQE re-coalesces the static shuffle number at runtime, so a too-high
 # static value costs little; a too-low one can't be split except by
 # the skew-join rule.
@@ -42,6 +43,10 @@ _DEFAULTS = {
     # Eager reliable checkpoints (ANN candidate materialization) are
     # deleted when their RDD is GC'd instead of accumulating on disk.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # One pipeline pass generates ~95 classes; the default cache of 100
+    # evicts some of them, so every later pass recompiled 27-54 classes.
+    # 1024 keeps a session's classes compiled once.
+    "spark.sql.codegen.cache.maxEntries": "1024",
     # Timestamps in the synthetic data are naive; keep them stable.
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
@@ -76,12 +81,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    on a real cluster pass ``None`` and let spark-submit decide.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, and
+    SPARK_GRAFT_CPUS to the cores this process may use
+    (``os.sched_getaffinity``).
     """
+    ncpu = len(os.sched_getaffinity(0))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', ncpu)}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
@@ -98,8 +104,8 @@ def get_spark(
             "spark.sql.shuffle.partitions", str(shuffle_partitions)
         )
     else:
-        ncores = master.split("[")[-1].rstrip("]") if "[" in master else "32"
-        n = 32 if ncores == "*" else int(ncores) if ncores.isdigit() else 32
+        ncores = master.split("[")[-1].rstrip("]")
+        n = int(ncores) if ncores.isdigit() else ncpu
         builder = builder.config("spark.sql.shuffle.partitions", str(max(n, 8)))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -208,11 +208,6 @@ _ISLAND_SCHEMA = T.StructType(
     ]
 )
 
-# (?s): the Arrow kernel compiles with re.DOTALL; the JVM path needs
-# the inline flag or a pretty-printed (multi-line) island would be
-# silently dropped by the isNotNull filter — parity tested on a
-# multi-line fixture in test_extract.py.
-_ISLAND_RE_SQL = r'(?s)<script type="application/osm\+json">(.*?)</script>'
 _GEOM_RE_SQL = r'"geometry":(\{[^{}]*\})'
 
 
@@ -232,8 +227,20 @@ def extract_versions_native(pages: DataFrame) -> DataFrame:
     The island is pulled with locate + substring_index rather than a
     lazy-dot regex — same first-match semantics (first marker, first
     closing tag), measurably cheaper per page (0.95 s → 0.72 s for
-    131K pages at local[32]); the regex form is kept in
-    ``_ISLAND_RE_SQL`` for reference/fallback."""
+    131K pages at local[32]).
+
+    The ``inline`` Generate is a barrier; do not fold it back into a
+    plain select. Without it Catalyst pushes the ``r``/``element_type``
+    filter below the projection and substitutes the alias, so a
+    ``FilterExec`` (no subexpression elimination) re-runs a full and a
+    pruned ``from_json`` and the whole decode/locate/substr chain, and
+    the geometry ``regexp_extract`` runs in both the condition and the
+    branch of its ``CASE``: ``decode`` ×35, ``from_json`` ×3,
+    ``regexp_extract`` ×2 in the optimized plan. A filter on generated
+    columns cannot move below the Generate, and the Project under it
+    shares one decode through subexpression elimination, so island,
+    ``from_json`` and ``regexp_extract`` each run once per page
+    (pinned by test_extract.py)."""
     doc = F.decode(F.col("html"), "UTF-8")
     start = F.locate(_MARK, doc)
     rest = doc.substr(start + F.lit(len(_MARK)), F.length(doc))
@@ -241,15 +248,19 @@ def extract_versions_native(pages: DataFrame) -> DataFrame:
         (start > 0) & (F.locate(_END, rest) > 0),
         F.substring_index(rest, _END, 1),
     )
-    parsed = F.from_json(island, _ISLAND_SCHEMA)
-    geom = F.regexp_extract(island, _GEOM_RE_SQL, 1)
-    return (
-        pages.select(
-            parsed.alias("r"),
-            F.when(geom != "", geom).alias("geometry_json"),
-            F.col("warc_ts"),
+    parsed = pages.select(island.alias("island"), "warc_ts").select(
+        F.inline(
+            F.array(
+                F.struct(
+                    F.from_json("island", _ISLAND_SCHEMA).alias("r"),
+                    F.regexp_extract("island", _GEOM_RE_SQL, 1).alias("g"),
+                    F.col("warc_ts"),
+                )
+            )
         )
-        .filter(F.col("r").isNotNull() & F.col("r.element_type").isNotNull())
+    )
+    return (
+        parsed.filter(F.col("r").isNotNull() & F.col("r.element_type").isNotNull())
         .select(
             *[
                 F.coalesce(
@@ -259,7 +270,7 @@ def extract_versions_native(pages: DataFrame) -> DataFrame:
                 else F.col(f"r.{f.name}").alias(f.name)
                 for f in VERSIONS.fields
             ],
-            "geometry_json",
+            F.when(F.col("g") != "", F.col("g")).alias("geometry_json"),
             "warc_ts",
         )
         # keep column order identical to the Arrow kernel
@@ -282,8 +293,8 @@ def extract_versions(pages: DataFrame, tolerant: bool = False) -> DataFrame:
         for pdf in batches:
             rows = []
             for html_bytes, wts in zip(pdf["html"], pdf["warc_ts"]):
-                isl = pull(html_bytes)
-                if isl is None:
+                isl = None if html_bytes is None else pull(html_bytes)
+                if isl is None or isl.get("element_type") is None:
                     continue
                 geom = isl.get("geometry")
                 rows.append(

@@ -150,7 +150,8 @@ def _page_row(url, warc_ts, island_json, body="hello world"):
 
 def test_multiline_island_native_matches_arrow(spark):
     """A pretty-printed (multi-line) JSON island must survive BOTH
-    extraction paths — the JVM regex needs (?s) to cross newlines."""
+    extraction paths — the JVM locate/substring_index pull must not
+    stop at a newline."""
     from osm_wayback_spark.schemas import PAGES
     from osm_wayback_spark.sources.extract import extract_versions_native
 
@@ -208,3 +209,69 @@ def test_dedup_versions_last_write_wins(spark):
     assert [r.version for r in out] == [1, 2]
     assert out[0].tags == {"crawl": "late"}  # max warc_ts wins
     assert "warc_ts" not in out[0].asDict()
+
+
+def test_native_extraction_parses_each_island_once(spark):
+    """The optimized plan holds one from_json and one regexp_extract:
+    the validity filter must not be pushed below the parse, where it
+    would re-evaluate the island chain and both parses per page."""
+    import re
+
+    from osm_wayback_spark.sources.extract import extract_versions_native
+
+    df = extract_versions_native(synth_pages(spark, SF))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bfrom_json\(", plan)) == 1
+    assert len(re.findall(r"\bregexp_extract\(", plan)) == 1
+
+
+def test_native_matches_arrow_on_edge_case_pages(spark):
+    """Off-the-happy-path pages: both kernels keep the same rows (only
+    pages with a parseable island that names its element_type) and
+    emit them identically."""
+    import datetime
+    import json as _json
+
+    from osm_wayback_spark.schemas import PAGES
+    from osm_wayback_spark.sources.extract import _MARK, extract_versions_native
+
+    def isl(id_, **drop):
+        rec = {
+            "element_type": "node",
+            "id": id_,
+            "version": 1,
+            "ts": 1000,
+            "changeset": 5,
+            "uid": 7,
+            "user": "a",
+            "visible": True,
+            "deleted": False,
+            "tags": {"k": "v"},
+            "lonlat": [1.5, 2.5],
+            "geometry": {"type": "Point", "coordinates": [1.5, 2.5]},
+        }
+        rec = {k: v for k, v in rec.items() if k not in drop}
+        return _json.dumps(rec, separators=(",", ":"))
+
+    htmls = [
+        f"<p>a</p>{_MARK}{isl(1)}</script>",  # normal
+        "<p>a</p>",  # no island
+        f"<p>a</p>{_MARK}{isl(2)}",  # unterminated island
+        f'{_MARK}{{"element_type":"node","id":3,</script>',  # malformed JSON
+        f"{_MARK}{isl(4, element_type=1)}</script>",  # no element_type
+        f"{_MARK}{isl(5, geometry=1)}</script>",  # no geometry
+        f"{_MARK}{isl(6)}</script><p>b</p>{_MARK}{isl(7)}</script>",  # two
+        None,  # null html
+        f"{_MARK}</script>",  # empty island
+    ]
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        (f"u://{i}", ts, None if h is None else h.encode(), "a", "en")
+        for i, h in enumerate(htmls)
+    ]
+    pages = spark.createDataFrame(rows, schema=PAGES)
+    a = extract_versions(pages).orderBy("id").collect()
+    b = extract_versions_native(pages).orderBy("id").collect()
+    assert [r.id for r in b] == [1, 5, 6]
+    assert b[1].geometry_json is None
+    assert a == b

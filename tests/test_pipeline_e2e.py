@@ -127,3 +127,21 @@ def test_reconstruct_tolerates_all_empty_batches(spark):
         reconstruct(geom, target_partitions=2, with_feature_json=True).count()
         == 0
     )
+
+
+def test_second_identical_run_compiles_nothing(spark):
+    """Every class a pipeline pass generates stays in the session's
+    codegen cache, so an identical second pass compiles none: the
+    default 100-entry cache could not hold a pass's ~95 classes and
+    recompiled dozens of them on every pass."""
+    from osm_wayback_spark.operators.tiles import assign_tiles
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        assign_tiles(pipeline.reconstruction_pipeline(synth_pages(spark, SF))).count()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    run()
+    assert run() == 0

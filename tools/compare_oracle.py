@@ -31,7 +31,7 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
     import __spark_entry__ as entrymod
     from osm_wayback_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

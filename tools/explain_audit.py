@@ -26,7 +26,7 @@ def main() -> None:
     import __spark_entry__ as e
     from osm_wayback_spark.session import get_spark
 
-    spark = get_spark(master="local[8]")
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
 
     sections = []
