@@ -90,16 +90,16 @@ def _with_stream_end(
       sampler.
 
     ``shards=None`` picks automatically: the distributed form engages
-    when the (probe-able, scan-adjacent) input already has more
-    partitions than the session's parallelism — i.e. at real scale;
-    small/bench inputs keep the one-window plan. Pass an explicit
-    ``shards`` to force either form (0/1 = single window)."""
+    when the input already runs wider than the session's parallelism
+    (``plan_width``) — i.e. at real scale; small/bench inputs keep the
+    one-window plan. Pass an explicit ``shards`` to force either form
+    (0/1 = single window)."""
     if shards is None:
-        from ..plans.parallel import probe_scan_partitions
+        from ..plans.parallel import plan_width
 
         par = documents.sparkSession.sparkContext.defaultParallelism
-        n = probe_scan_partitions(documents)
-        shards = n if (n is not None and n > par) else 0
+        n = plan_width(documents)
+        shards = n if n > par else 0
     if shards and shards > 1:
         d = documents.repartitionByRange(
             shards, F.col(stratum_col), F.col(id_col)

@@ -28,9 +28,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
 from pyspark.sql import types as T
 
+from ..plans.parallel import plan_width
 from ..schemas import RECONSTRUCTED
 from ._reconstruct_core import reconstruct_feature
 
@@ -70,7 +70,6 @@ def rows_for_feature(
     geometry: dict | None,
     history: list | None,
     node_locations: dict | None,
-    config: dict | None = None,
     with_feature_json: bool = False,
     with_coords: bool = False,
 ) -> list[dict]:
@@ -81,7 +80,7 @@ def rows_for_feature(
     both map reconstructed features to rows identically.
     """
     feats = reconstruct_feature(
-        element_type, osm_id, geometry, history, node_locations, config
+        element_type, osm_id, geometry, history, node_locations
     )
     rows = []
     for ft in feats:
@@ -123,10 +122,27 @@ def rows_for_feature(
     return rows
 
 
+def _kernel_input(with_locations: DataFrame, cols: list[str]) -> DataFrame:
+    """The Python kernel's input: ``with_locations`` as it is when it
+    already runs at least defaultParallelism wide, else round-robin
+    repartitioned to ``spark.sql.shuffle.partitions``.
+
+    The usual input ends in add_node_locations' join, so its
+    shuffle-derived width is kept and the fat nested rows (history
+    arrays, node-location maps) cross no second Exchange. Anything
+    narrower (a small scan, a ``coalesce(1)``, a broadcast join over a
+    one-file scan, whose width is unknown) would otherwise serialize
+    the most expensive stage onto a few tasks.
+    """
+    spark = with_locations.sparkSession
+    if plan_width(with_locations) >= spark.sparkContext.defaultParallelism:
+        return with_locations.select(*cols)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return with_locations.repartition(n).select(*cols)
+
+
 def reconstruct(
     with_locations: DataFrame,
-    target_partitions: int | None = None,
-    config: dict | None = None,
     with_feature_json: bool = False,
     with_coords: bool = False,
 ) -> DataFrame:
@@ -134,55 +150,17 @@ def reconstruct(
 
     Input needs columns: element_type, id, geometry (GeoJSON string),
     history (array<HISTORY_RECORD>), node_locations (nested map,
-    nullable).
-
-    ``config`` forwards the reference's D3 output-mode switches
-    (map-geom-reconstruction.js:30-45): GEOMETRY_ONLY,
-    INCLUDE_DIFFS_ON_MAJOR_VERSIONS,
-    INCLUDE_FULL_PROPERTIES_ON_{MAJOR,MINOR}_VERSIONS.
+    nullable). The kernel's input width follows ``_kernel_input``.
 
     ``with_feature_json=True`` additionally emits the reference's
     line format (one sorted-key GeoJSON Feature string per row) —
     off by default: serializing every feature twice is pure overhead
     when the consumer is columnar (tiles, parquet sinks).
-
-    Kernel parallelism (late r7): when the input's partitioning is
-    already shuffle-derived (the usual case — add_node_locations ends
-    in a join, so AQE's parallelismFirst leaves it
-    ~defaultParallelism wide), the kernel consumes it DIRECTLY — no
-    round-robin repartition, i.e. one fewer Exchange of the fat
-    nested rows (history arrays + node-location maps; guide §2.4
-    "remove shuffles outright", §8 "don't re-shuffle heavy payloads
-    to decide placement"). Measured at sf0.1/local[32], interleaved
-    A/B ×5: e2e 2.37 → 2.03 s min, every pass faster, kernel width
-    unchanged (32 partitions, 7.0-8.8k rows each via the (et,id)
-    hash). At 100 TB the removed shuffle is a full pass over the
-    payload. Per-row cost outliers (one 80-version way ≈ 40× a
-    1-version node) spread by key-hash about as well as round-robin
-    at real row counts.
-
-    For scan-adjacent inputs (e.g. the staged pipeline reading a
-    small stage table, where the scan may resolve to few partitions)
-    the round-robin repartition to ``defaultParallelism`` is kept —
-    ONE wave (r7; was 3×: measured 6.07 → 4.75 s on the e2e). Pass
-    ``target_partitions`` explicitly to force a width (wave-insurance
-    on clusters with flaky nodes/speculation).
     """
-    sel_cols = ["element_type", "id", "geometry", "history", "node_locations"]
-    if target_partitions is None:
-        from ..plans.parallel import inherits_wide_partitioning
-
-        if inherits_wide_partitioning(with_locations):
-            prepared = with_locations.select(*sel_cols)
-        else:
-            sc = with_locations.sparkSession.sparkContext
-            prepared = with_locations.repartition(
-                max(sc.defaultParallelism, 8)
-            ).select(*sel_cols)
-    else:
-        prepared = with_locations.repartition(target_partitions).select(
-            *sel_cols
-        )
+    prepared = _kernel_input(
+        with_locations,
+        ["element_type", "id", "geometry", "history", "node_locations"],
+    )
 
     extra_fields = []
     if with_feature_json:
@@ -213,7 +191,7 @@ def reconstruct(
             ):
                 geometry = json.loads(gj) if gj else None
                 for row in rows_for_feature(
-                    et, int(oid), geometry, hist, nl, config,
+                    et, int(oid), geometry, hist, nl,
                     with_feature_json, with_coords,
                 ):
                     for c in out_cols:
@@ -278,8 +256,6 @@ def reconstruct_objects(
     with_locations: DataFrame,
     mode: str = "complete",
     config: dict | None = None,
-    quantization: int | None = None,
-    target_partitions: int | None = None,
 ) -> DataFrame:
     """The reference's other two stage-4 output modes (D3), one row
     per FEATURE (not per version):
@@ -304,26 +280,11 @@ def reconstruct_objects(
         c for c in ("version", "changeset", "ts", "uid", "user", "tags")
         if c in with_locations.columns
     ]
-    sel_cols = [
-        "element_type", "id", "geometry", "history", "node_locations",
-        *feat_cols,
-    ]
-    if target_partitions is None:
-        from ..plans.parallel import inherits_wide_partitioning
-
-        # same policy as reconstruct(): inherit shuffle-derived width,
-        # repartition only scan-adjacent inputs
-        if inherits_wide_partitioning(with_locations):
-            prepared = with_locations.select(*sel_cols)
-        else:
-            sc = with_locations.sparkSession.sparkContext
-            prepared = with_locations.repartition(
-                max(sc.defaultParallelism * 2, 8)
-            ).select(*sel_cols)
-    else:
-        prepared = with_locations.repartition(target_partitions).select(
-            *sel_cols
-        )
+    prepared = _kernel_input(
+        with_locations,
+        ["element_type", "id", "geometry", "history", "node_locations",
+         *feat_cols],
+    )
 
     from ..sources.sinks import to_topojson_history
 
@@ -388,7 +349,7 @@ def reconstruct_objects(
                 else:
                     try:
                         obj["properties"]["@history"] = to_topojson_history(
-                            feats, quantization
+                            feats
                         )
                     except Exception:  # noqa: BLE001
                         # js:269-271 status.topoJSONEncodingError —

@@ -23,6 +23,9 @@ from .sources.extract import (
     node_locations_from_versions,
 )
 
+# the checkpoint stages staged_pipeline writes, in order
+STAGES = ("versions", "history_geom", "versions_out")
+
 
 def build_tables(pages: DataFrame) -> dict[str, DataFrame]:
     """Parse the payload JVM-side (``extract_versions_native``) and

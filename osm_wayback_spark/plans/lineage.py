@@ -4,7 +4,7 @@ North rule: "per-partition lineage and metrics checkpointed so any
 stage is resumable mid-run". Each pipeline stage writes
 
     <root>/<stage>/data/        the stage output (parquet)
-    <root>/<stage>/_lineage/    per-partition rows_out/checksum/wall_ms
+    <root>/<stage>/_lineage/    per-partition rows_out/checksum
     <root>/<stage>/_SUCCESS_STAGE   atomic completion marker
 
 `run_stage` is idempotent: a completed stage short-circuits to a read
@@ -83,29 +83,19 @@ def write_stage(df: DataFrame, root: str, stage: str) -> None:
     per row, handles map/array/binary columns deterministically),
     modular-sum-aggregated per spark_partition_id with map-side
     partial aggregation — the shuffle carries one row per partition.
-    ``wall_ms`` records the lineage pass wall (driver-measured,
-    replicated per row — per-partition task walls live in the Spark
-    event log; burning a Python pass to duplicate them is the wrong
-    trade)."""
+    Task walls live in the Spark event log, not in the lineage."""
     data_path, lineage_path, marker = _paths(root, stage)
     spark = df.sparkSession
     df.write.mode("overwrite").parquet(data_path)
 
     # lineage over what was written (stable file-based partitions)
     written = spark.read.parquet(data_path)
-    t0 = time.time()
-    agg = partition_metrics(written)
-    # materialize (one row per partition), then stamp the measured
-    # wall — driver traffic is the lineage summary only, never data
-    rows = agg.collect()
-    wall_ms = (time.time() - t0) * 1000.0
+    # driver traffic is the lineage summary only (one row per
+    # partition), never data
+    rows = partition_metrics(written).collect()
     spark.createDataFrame(
-        [
-            (stage, r.partition_id, r.rows_out, r.checksum, wall_ms)
-            for r in rows
-        ],
-        schema="stage string, partition_id int, rows_out long, "
-        "checksum long, wall_ms double",
+        [(stage, r.partition_id, r.rows_out, r.checksum) for r in rows],
+        schema="stage string, partition_id int, rows_out long, checksum long",
     ).write.mode("overwrite").parquet(lineage_path)
     with open(marker, "w") as fh:
         fh.write(str(time.time()))

@@ -47,6 +47,12 @@ _DEFAULTS = {
     # evicts some of them, so every later pass recompiled 27-54 classes.
     # 1024 keeps a session's classes compiled once.
     "spark.sql.codegen.cache.maxEntries": "1024",
+    # The cache key is the generated source. AQE numbers whole-stage
+    # codegen stages in the order it creates query stages, which
+    # depends on which stages finish first; with the number in the
+    # class name, the same code under another number compiled again
+    # (6 classes on 3 of 85 repeated pipeline passes, local[4]).
+    "spark.sql.codegen.useIdInClassName": "false",
     # Timestamps in the synthetic data are naive; keep them stable.
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",

@@ -260,9 +260,8 @@ def test_packers_distributed_prefix_sum_equals_single_window(spark):
         assert sorted(
             map(tuple, example_windows(docs, 64, shards=shards).collect())
         ) == base_ex, shards
-    # the auto probe on a join-derived (non-probe-able) frame must
-    # fall back to the single-window form rather than executing the
-    # upstream stages during planning
+    # the auto choice on a join-derived frame (planned wider than the
+    # session parallelism, so the distributed form) gives the same rows
     joined = docs.join(docs.select("doc_id"), "doc_id")
     assert sorted(
         map(tuple, pack_tokens(joined, budget=97).collect())

@@ -122,11 +122,8 @@ def test_reconstruct_tolerates_all_empty_batches(spark):
     )
     rows = [("way", 1, '{"type":"LineString","coordinates":[]}', [], None)]
     geom = spark.createDataFrame(rows, schema)
-    assert reconstruct(geom, target_partitions=2).count() == 0
-    assert (
-        reconstruct(geom, target_partitions=2, with_feature_json=True).count()
-        == 0
-    )
+    assert reconstruct(geom).count() == 0
+    assert reconstruct(geom, with_feature_json=True).count() == 0
 
 
 def test_second_identical_run_compiles_nothing(spark):
