@@ -25,6 +25,7 @@ Intentionally preserved reference quirks (SURVEY.md §2.1):
 from __future__ import annotations
 
 import copy
+from bisect import bisect_right
 from typing import Any
 
 # way-history-builder.js:3-7 (node/relation builders declare 5 min but
@@ -167,7 +168,10 @@ def _build_all_possible(
     memo: dict | None = None,
 ):
     """way-history-builder.js:169-337. ``memo`` caches the per-ref
-    time-sorted version lists across the way's major versions."""
+    time-sorted version lists across the way's major versions. Each
+    ref's possible versions are indexed once per call (first version
+    per changeset; versions and times sorted by time), so a minor
+    changeset's lookup is a dict hit or a bisection, not a scan."""
     versions: list[list[dict]] = []
     for ref in node_refs:
         ref = int(ref)
@@ -220,23 +224,25 @@ def _build_all_possible(
         for ckey in delete_me:
             minor_changesets.pop(ckey, None)
 
+        index = []
+        for v in versions:
+            first_by_changeset: dict = {}
+            for u in v:
+                first_by_changeset.setdefault(u["c"], u)
+            nv = sorted(v, key=lambda u: u["t"])
+            index.append((first_by_changeset, nv, [u["t"] for u in nv]))
+
         countable = []
         idx = 1
         for ckey in sorted(minor_changesets):
             obj = minor_changesets[ckey]
-            for v in versions:
-                if len(v) == 1:
-                    obj["nodes"].append(v[0])
-                elif any(u["c"] == ckey for u in v):
-                    obj["nodes"].append(next(u for u in v if u["c"] == ckey))
-                else:
-                    nv = sorted(v, key=lambda u: u["t"])
-                    prev_node = nv[0]
-                    for u in nv[1:]:
-                        if u["t"] > obj["max"]:
-                            break
-                        prev_node = u
-                    obj["nodes"].append(prev_node)
+            for first_by_changeset, nv, ts in index:
+                node = first_by_changeset.get(ckey)
+                if node is None:
+                    # the last time-sorted version at or before max,
+                    # else the earliest (a one-version ref's only one)
+                    node = nv[bisect_right(ts, obj["max"], 1) - 1]
+                obj["nodes"].append(node)
             countable.append(
                 {
                     "minorVersion": idx,

@@ -19,11 +19,20 @@ JSON round-trip. Arrow hands the kernel dicts/ndarrays directly;
 reference's absent JSON member (its hasOwnProperty semantics reduce
 to ``.get() is None`` checks throughout). The one JSON emission left
 is the output GeoJSON geometry string — the actual wire format.
+
+Spark's worker calls ``importlib.invalidate_caches()`` before every
+task. Before 3.13 that re-read ``pyspark.zip``'s directory (always on
+the workers' path) through every zipimporter: ~0.2 CPU-s a task. Each
+kernel first installs ``_stat_checked_zip_invalidation``, so a worker
+pays it once.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import sys
+import zipimport
 from collections.abc import Iterator
 
 import pandas as pd
@@ -122,6 +131,32 @@ def rows_for_feature(
     return rows
 
 
+def _stat_checked_zip_invalidation() -> None:
+    """On Python < 3.13, once: keep an archive's cached directory while
+    its (mtime, size, inode) is as when last read. A replaced or new
+    archive is still re-read, as Spark's ``addPyFile`` setup needs."""
+    zi = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(zi.invalidate_caches, "stamps"):
+        return
+    reread = zi.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+        except OSError:
+            return reread(self)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if files is not None and invalidate_caches.stamps.get(self.archive) == stamp:
+            self._files = files
+        else:
+            reread(self)
+            invalidate_caches.stamps[self.archive] = stamp
+
+    invalidate_caches.stamps = {}
+    zi.invalidate_caches = invalidate_caches
+
+
 def _kernel_input(with_locations: DataFrame, cols: list[str]) -> DataFrame:
     """The Python kernel's input: ``with_locations`` as it is when it
     already runs at least defaultParallelism wide, else round-robin
@@ -178,6 +213,7 @@ def reconstruct(
     out_schema = T.StructType(list(RECONSTRUCTED.fields) + extra_fields)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _stat_checked_zip_invalidation()
         for pdf in batches:
             # column-wise accumulation: building one dict-of-lists is
             # several times cheaper than pandas' list-of-dicts path
@@ -292,6 +328,7 @@ def reconstruct_objects(
              "ts": "@timestamp", "uid": "@uid", "user": "@user"}
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        _stat_checked_zip_invalidation()
         for pdf in batches:
             cols: dict[str, list] = {
                 "element_type": [], "id": [], "line_json": [],

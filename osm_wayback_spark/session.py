@@ -3,7 +3,7 @@
 Replaces the reference's hand-tuned RocksDB knobs (db.hpp:96-111 —
 bulk-load mode, WAL off, bloom filters, write batching) with the
 Spark-side equivalents: AQE (runtime coalesce + skew-join splitting),
-Arrow batch sizing for the two Python kernels, and a shuffle
+Arrow batch sizing for the Python reconstruction kernel, and a shuffle
 partition count sized to the local core count but overridable for a
 real cluster via env / builder args.
 """
@@ -31,9 +31,10 @@ _DEFAULTS = {
     # moderately skewed partitions are split too.
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "3",
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64m",
-    # Arrow ferries for the two Python kernels (extraction,
-    # reconstruction). 4.x enables arrow for pandas UDFs by default;
-    # cap the batch so wide html payloads don't blow executor memory.
+    # Arrow ferries for the reconstruction kernel, the pipeline's only
+    # Python stage (extraction runs in the JVM). 4.x enables arrow for
+    # pandas UDFs by default; cap the batch so fat nested rows (or the
+    # extraction UDF's html) don't blow executor memory.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     # Parquet scans: keep splits small enough that a 100 TB input

@@ -2,9 +2,14 @@
 fixtures exercising every branch of way-history-builder.js semantics
 (SURVEY.md §2.1 + quirks)."""
 
+import hypothesis.strategies as st
+from hypothesis import given, settings
+
 from osm_wayback_spark.operators._reconstruct_core import (
+    MINOR_CHANGESET_VERSION_THRESHOLD,
     _build_all_possible,
     _get_node_versions,
+    _sorted_node_versions,
     fold_tags,
     reconstruct_feature,
 )
@@ -242,3 +247,162 @@ def test_include_diffs_mode():
     )
     assert out[0]["properties"]["aA"] == {"k": "v"}
     assert out[1]["properties"]["aM"] == {"k": ["v", "w"]}
+
+
+# -- the way index against the loop it replaced -------------------------------
+
+
+def _reference_build_all_possible(
+    node_locations: dict,
+    node_refs,
+    valid_since,
+    valid_until,
+    changeset,
+    memo: dict | None = None,
+):
+    """``_build_all_possible`` as it was before the per-ref index,
+    verbatim: one scan and one sort per (minor changeset, ref). The
+    index must reproduce it exactly."""
+    versions: list[list[dict]] = []
+    for ref in node_refs:
+        ref = int(ref)
+        if memo is None:
+            prepared = _sorted_node_versions(node_locations, ref)
+        elif ref in memo:
+            prepared = memo[ref]
+        else:
+            prepared = memo[ref] = _sorted_node_versions(node_locations, ref)
+        possible = _get_node_versions(
+            node_locations, ref, valid_since, valid_until, changeset,
+            prepared=prepared,
+        )
+        if possible:
+            versions.append(list(possible))
+
+    major = [a[0] for a in versions]
+    minor_out = None
+    max_len = max((len(a) for a in versions), default=0)
+    if max_len > 1:
+        minor_changesets: dict[int, dict] = {}
+        for v in versions:
+            for u in v:
+                mc = minor_changesets.get(u["c"])
+                if mc is not None:
+                    mc["max"] = max(mc["max"], u["t"])
+                    mc["min"] = min(mc["min"], u["t"])
+                else:
+                    minor_changesets[u["c"]] = {
+                        "min": u["t"],
+                        "max": u["t"],
+                        "u": u.get("u"),
+                        "h": u.get("h"),
+                        "nodes": [],
+                    }
+        delete_me = [changeset]  # the major version's own changeset
+        prev_time = None
+        for ckey in sorted(minor_changesets):
+            # closed before this major version → can't cause a minor.
+            # (valid_since may be False ≡ 0, matching JS coercion.)
+            if minor_changesets[ckey]["max"] < (valid_since or 0):
+                delete_me.append(ckey)
+            if prev_time is not None:
+                if (
+                    minor_changesets[ckey]["max"] - MINOR_CHANGESET_VERSION_THRESHOLD
+                    < prev_time
+                ):
+                    delete_me.append(ckey)
+            prev_time = minor_changesets[ckey]["max"]
+        for ckey in delete_me:
+            minor_changesets.pop(ckey, None)
+
+        countable = []
+        idx = 1
+        for ckey in sorted(minor_changesets):
+            obj = minor_changesets[ckey]
+            for v in versions:
+                if len(v) == 1:
+                    obj["nodes"].append(v[0])
+                elif any(u["c"] == ckey for u in v):
+                    obj["nodes"].append(next(u for u in v if u["c"] == ckey))
+                else:
+                    nv = sorted(v, key=lambda u: u["t"])
+                    prev_node = nv[0]
+                    for u in nv[1:]:
+                        if u["t"] > obj["max"]:
+                            break
+                        prev_node = u
+                    obj["nodes"].append(prev_node)
+            countable.append(
+                {
+                    "minorVersion": idx,
+                    # obj.c is undefined in the source → minor
+                    # versions never get a changeset.
+                    "validSince": obj["max"],
+                    "user": obj["h"],
+                    "uid": obj["u"],
+                    "coordinates": [p["p"] for p in obj["nodes"]],
+                }
+            )
+            idx += 1
+        minor_out = countable
+
+    return {"majorVersion": [g["p"] for g in major], "minorVersions": minor_out}
+
+
+# Times come from a few per-case values on a coarse grid, so equal
+# timestamps across refs and changesets, the 60 s thresholds and
+# collapsing identical coordinates all occur often.
+_times = st.integers(min_value=0, max_value=10).map(lambda k: k * 30)
+_points = st.sampled_from([[0.0, 0.0], [1.0, 1.0], [2.0, 2.0]])
+
+
+@st.composite
+def _way_cases(draw):
+    times = st.sampled_from(draw(st.lists(_times, min_size=1, max_size=5)))
+    # "07" and "7" both parse to changeset 7: several versions of one
+    # ref in the same changeset, as the reference's JSON keys allow.
+    version = st.tuples(
+        st.integers(min_value=1, max_value=6),
+        st.integers(min_value=0, max_value=1),
+        times,
+        # None ≙ redacted; a ref can have only redacted versions
+        st.one_of(st.none(), _points, _points, _points, _points),
+    )
+    node_locations = {}
+    for ref in range(1, draw(st.integers(min_value=1, max_value=4)) + 1):
+        by_changeset = {}
+        for cs, zeros, t, p in draw(st.lists(version, min_size=1, max_size=7)):
+            by_changeset["0" * zeros + str(cs)] = {
+                "p": p, "t": t, "i": 1, "u": cs, "h": f"u{cs}",
+            }
+        node_locations[str(ref)] = by_changeset
+    # refs repeat (closed ways) and include an unknown id
+    refs = draw(
+        st.lists(
+            st.integers(min_value=1, max_value=len(node_locations) + 1),
+            min_size=2, max_size=8,
+        )
+    )
+    valid_since = draw(st.one_of(st.just(False), times))
+    # a major version's window mostly ends after it starts
+    valid_until = draw(
+        st.one_of(st.just(False), times, _times.map(lambda d: (valid_since or 0) + d))
+    )
+    changeset = draw(st.one_of(st.none(), st.integers(min_value=1, max_value=6)))
+    return node_locations, refs, valid_since, valid_until, changeset
+
+
+@given(_way_cases())
+@settings(max_examples=500, deadline=None)
+def test_build_all_possible_matches_reference_loop(case):
+    node_locations, refs, valid_since, valid_until, changeset = case
+    expected = _reference_build_all_possible(
+        node_locations, refs, valid_since, valid_until, changeset
+    )
+    assert _build_all_possible(
+        node_locations, refs, valid_since, valid_until, changeset
+    ) == expected
+    # the memoized per-ref sort (_build_way's path) agrees too
+    assert _build_all_possible(
+        node_locations, refs, valid_since, valid_until, changeset, memo={}
+    ) == expected
