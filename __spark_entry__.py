@@ -1629,11 +1629,7 @@ def q_pages_reconstruct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_wayback_spark import pipeline
 
     _write_reconstruct_expected(sf_dir)
-    # with_coords=False: this query projects identity columns only —
-    # no reason to make the kernel emit the tile-stage coords array
-    out = pipeline.reconstruction_pipeline(
-        _pages(spark, sf_dir), with_coords=False
-    )
+    out = pipeline.reconstruction_pipeline(_pages(spark, sf_dir))
     return out.select(
         "element_type",
         "id",
@@ -1658,9 +1654,7 @@ def q_pages_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf = sf_from_dir(sf_dir)
     path = f"{_ORACLE_DIR}/recon_tiles_in_sf{sf}_{_code_fp()}.parquet"
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        recon = pipeline.reconstruction_pipeline(
-            _pages(spark, sf_dir), with_coords=False
-        )
+        recon = pipeline.reconstruction_pipeline(_pages(spark, sf_dir))
         (
             recon.filter(F.col("geometry").isNotNull())
             .select(
@@ -1698,20 +1692,10 @@ def q_pages_topojson(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-feature row count (the topology objects are exactly the
     WRITE_EVERY_GEOMETRY features, keyed "0"..n-1)."""
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
     from osm_wayback_spark.operators.reconstruction import reconstruct_objects
-    from osm_wayback_spark.sources.extract import (
-        features_from_versions,
-        node_locations_from_versions,
-    )
 
     _write_reconstruct_expected(sf_dir)
-    t = pipeline.build_tables(_pages(spark, sf_dir))
-    geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"],
-        refs_source=t["versions"],
-    )
+    geom = pipeline.geometry_pipeline(_pages(spark, sf_dir))
     out = reconstruct_objects(geom, mode="topojson")
     return out.select(
         "element_type", "id", F.col("n_versions").cast("long").alias("n_versions")

@@ -5,12 +5,14 @@
     spark-submit --py-files osm_wayback_spark.zip \
         osm_wayback_spark/cli.py \
         --pages /path/to/pages_parquet \
-        --out /path/to/checkpoints \
-        --tiles /path/to/tiles_table [--zoom 15] [--resume]
+        --out /path/to/checkpoints [--zoom 15] [--no-resume]
 
 Runs the staged, resumable pipeline (pages → versions → history_geom
-→ versions_out → tiles) with per-partition lineage at every stage;
-re-running with --resume (default) skips completed stages.
+→ versions_out → tiles) with per-partition lineage at every stage,
+each stage under <out>/<stage>/data; the tile table is
+<out>/tiles/data, partitioned by (z, x). A re-run skips completed
+stages; --no-resume rebuilds all of them. Prints one JSON line with
+the rows of every stage, read from its lineage.
 """
 
 from __future__ import annotations
@@ -34,10 +36,9 @@ def main(argv: list[str] | None = None) -> int:
                    "omit to synthesize --synth-sf pages")
     p.add_argument("--synth-sf", type=float, default=0.01)
     p.add_argument("--out", required=True, help="checkpoint root")
-    p.add_argument("--tiles", default=None, help="tile table output path")
     p.add_argument("--zoom", type=int, default=15)
     p.add_argument("--no-resume", action="store_true",
-                   help="force-recompute all stages")
+                   help="rebuild every stage")
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -55,7 +56,6 @@ def main(argv: list[str] | None = None) -> int:
             spark = get_spark(app_name="osm-wayback-spark")
 
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.tiles import assign_tiles, write_tiles
     from osm_wayback_spark.plans import lineage
 
     if args.pages:
@@ -66,22 +66,8 @@ def main(argv: list[str] | None = None) -> int:
         pages = synth_pages(spark, args.synth_sf)
 
     t0 = time.time()
-    if args.no_resume:
-        for stage in pipeline.STAGES:
-            marker = f"{args.out}/{stage}/_SUCCESS_STAGE"
-            if os.path.exists(marker):
-                os.remove(marker)
-    recon = pipeline.staged_pipeline(spark, pages, args.out)
-    n_out = recon.count()
-    stats = {"versions_out_rows": n_out, "wall_s": round(time.time() - t0, 2)}
-
-    if args.tiles:
-        tiles = assign_tiles(
-            recon.filter(F.col("geometry").isNotNull()), z=args.zoom
-        )
-        write_tiles(tiles, args.tiles)
-        stats["tiles_rows"] = spark.read.parquet(args.tiles).count()
-
+    pipeline.walk(pages, root=args.out, force=args.no_resume, zoom=args.zoom)
+    stats = {"wall_s": round(time.time() - t0, 2)}
     for stage in pipeline.STAGES:
         lin = lineage.read_lineage(spark, args.out, stage)
         rows = lin.groupBy().agg(F.sum("rows_out")).collect()[0][0]

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 from ..functions.tiles import DEFAULT_ZOOM, tile_x, tile_y
 
+TILE_PARTITIONS = ("z", "x")  # the tile table's directory partitioning
+
 
 def _flat_lonlats(geometry_col: str):
     """array<array<double>> of every [lon,lat] pair in a GeoJSON
@@ -124,4 +126,4 @@ def write_tiles(tiles: DataFrame, path: str) -> None:
     """Materialize the tile table partitioned by (z, x) — the Iceberg/
     parquet stand-in for the .mbtiles artifact; partition pruning on
     (z, x) ≙ tile point lookup."""
-    tiles.write.mode("overwrite").partitionBy("z", "x").parquet(path)
+    tiles.write.mode("overwrite").partitionBy(*TILE_PARTITIONS).parquet(path)

@@ -1,58 +1,104 @@
-"""End-to-end composition of the reference's 5-stage pipeline
-(run.sh:18-65) as lazily-composed DataFrame stages:
+"""The reference's 5-stage pipeline (run.sh:18-65) as one ordered stage
+table, each stage built from the previous stage's output:
 
-pages → extract (Arrow kernel) → versions
-      → features (latest per entity) / node_locations (window dedup)
-      → add_history (join + tag diff + nest)      ≙ add_history.cpp
-      → add_node_locations (explode/join/re-nest)  ≙ add_geometry.cpp
-      → reconstruct (Arrow kernel)                 ≙ index.js stage 4
-      → assign_tiles (column math)                 ≙ tippecanoe z15
+versions      pages → extract_versions_native → dedup_versions
+history_geom  → features (latest per entity) / node_locations (window dedup)
+              → add_history (join + tag diff + nest)      ≙ add_history.cpp
+              → add_node_locations (explode/join/re-nest)  ≙ add_geometry.cpp
+versions_out  → reconstruct (Arrow kernel)                 ≙ index.js stage 4
+tiles         → assign_tiles (column math)                 ≙ tippecanoe z15
+
+`walk` is the only function that chains the stages, lazily or staged.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
+from .functions.tiles import DEFAULT_ZOOM
 from .operators.history import add_history
 from .operators.locations import add_node_locations
 from .operators.reconstruction import reconstruct
-from .sources.extract import (
-    dedup_versions,
-    extract_versions_native,
-    features_from_versions,
-    node_locations_from_versions,
-)
-
-# the checkpoint stages staged_pipeline writes, in order
-STAGES = ("versions", "history_geom", "versions_out")
+from .operators.tiles import TILE_PARTITIONS, assign_tiles
+from .plans import lineage
+from .sources.extract import (dedup_versions, extract_versions_native,
+                              features_from_versions, node_locations_from_versions)
 
 
-def build_tables(pages: DataFrame) -> dict[str, DataFrame]:
-    """Parse the payload JVM-side (``extract_versions_native``) and
-    dedup re-crawled versions last-write-wins (dedup_versions) before
-    anything downstream.
-
-    The extracted versions are persisted (MEMORY_AND_DISK): the three
-    branches (versions / features / node_locations) form a diamond
-    DAG that would otherwise re-scan + re-extract the pages input
-    once per branch — free at test scale, 2-3 redundant full scans
-    of the (much larger) pages table at 100 TB. The persisted table
-    is the small side of the diamond (columnar versions, no html),
-    so caching it — not the input — is the right trade; on a cluster
-    the executor block manager spills it if needed. Measured at
-    sf0.1/local[32]: 9.9 s → 5.7 s end-to-end. (For durable,
-    resumable materialization use staged_pipeline instead.)"""
-    from pyspark import StorageLevel
-
-    versions_ext = dedup_versions(extract_versions_native(pages)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+def _branches(versions_ext: DataFrame) -> dict[str, DataFrame]:
+    """The three tables the history join reads off the versions stage."""
     versions = versions_ext.drop("geometry_json")
     return {
         "versions": versions,
         "features": features_from_versions(versions_ext),
         "node_locations": node_locations_from_versions(versions),
     }
+
+
+def _history_geom(versions_ext: DataFrame) -> DataFrame:
+    t = _branches(versions_ext)
+    hist = add_history(t["features"], t["versions"])
+    return add_node_locations(hist, t["node_locations"], refs_source=t["versions"])
+
+
+def _stage_table(with_feature_json: bool = False, zoom: int = DEFAULT_ZOOM):
+    """(name, build from the previous stage's output), in order. The
+    reconstruct step always emits the typed [lon,lat] ``coords``, which
+    the tile stage reads instead of regexp-parsing the GeoJSON."""
+    return (
+        ("versions", lambda p: dedup_versions(extract_versions_native(p))),
+        ("history_geom", _history_geom),
+        ("versions_out", partial(reconstruct, with_feature_json=with_feature_json,
+                                 with_coords=True)),
+        ("tiles", partial(assign_tiles, z=zoom)),
+    )
+
+
+STAGES = tuple(name for name, _ in _stage_table())
+
+
+def walk(pages: DataFrame, last: str = STAGES[-1], root: str | None = None,
+         force: bool = False, with_feature_json: bool = False,
+         zoom: int = DEFAULT_ZOOM) -> DataFrame:
+    """Build the stage table from ``pages`` up to and including ``last``.
+
+    Lazy (``root`` None): one plan; the versions table, read three
+    times by history_geom, is persisted (MEMORY_AND_DISK; drop with
+    ``spark.catalog.clearCache()``), not re-extracted per branch.
+
+    Staged (``root`` set): each stage is a resumable checkpoint under
+    ``<root>/<stage>`` (plans/lineage.py, ≙ run.sh's staged files) that
+    the next stage reads. The first stage to build (the first without
+    a marker, or with ``force`` the first) is stale input to every later
+    stage, ``last`` or not: their markers go before anything is
+    written, so none stays marked complete over a rebuilt input."""
+    stop = STAGES.index(last) + 1
+    if root is not None:
+        stale = force
+        for i, stage in enumerate(STAGES):
+            stale = stale or (i < stop and not lineage.stage_complete(root, stage))
+            if stale:
+                lineage.invalidate(root, stage)
+    df = pages
+    for name, build in _stage_table(with_feature_json, zoom)[:stop]:
+        if root is None:
+            df = build(df)
+            if name == "versions":
+                df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        else:
+            df = lineage.run_stage(
+                pages.sparkSession, root, name, partial(build, df),
+                partition_by=TILE_PARTITIONS if name == "tiles" else (),
+            )
+    return df
+
+
+def build_tables(pages: DataFrame) -> dict[str, DataFrame]:
+    """The lazy, persisted versions stage and the tables read off it."""
+    return _branches(walk(pages, "versions"))
 
 
 def history_pipeline(pages: DataFrame) -> DataFrame:
@@ -63,69 +109,18 @@ def history_pipeline(pages: DataFrame) -> DataFrame:
 
 def geometry_pipeline(pages: DataFrame) -> DataFrame:
     """pages → features with @history + nodeLocations (≙ .history.geometries)."""
-    t = build_tables(pages)
-    hist = add_history(t["features"], t["versions"])
-    return add_node_locations(
-        hist, t["node_locations"], refs_source=t["versions"]
-    )
+    return walk(pages, "history_geom")
 
 
-def reconstruction_pipeline(
-    pages: DataFrame,
-    with_feature_json: bool = False,
-    with_coords: bool = True,
-) -> DataFrame:
-    """pages → per-version features (≙ stage-4 WRITE_EVERY_GEOMETRY).
-
-    ``with_coords`` (default True since r7): additionally emit the
-    typed flat [lon,lat] array. The kernel already holds the geometry
-    as objects, so emitting it costs one list per row — while the
-    downstream tile stage otherwise re-derives every vertex from the
-    GeoJSON STRING with a regexp (measured 2-3x the whole e2e wall at
-    sf0.1; guide §8: move decisions onto typed small columns).
-    ``assign_tiles`` picks the column up automatically."""
-    return reconstruct(
-        geometry_pipeline(pages),
-        with_feature_json=with_feature_json,
-        with_coords=with_coords,
-    )
+def reconstruction_pipeline(pages: DataFrame,
+                            with_feature_json: bool = False) -> DataFrame:
+    """pages → per-version features (≙ stage-4 WRITE_EVERY_GEOMETRY)."""
+    return walk(pages, "versions_out", with_feature_json=with_feature_json)
 
 
-def staged_pipeline(
-    spark,
-    pages: DataFrame,
-    checkpoint_root: str,
-    with_feature_json: bool = False,
-) -> DataFrame:
-    """The production shape: each reference stage materialized as a
-    resumable checkpoint with per-partition lineage
-    (plans/lineage.py), mirroring run.sh's staged files
-    (README.md:52-62).
-
-    Crucially this also fixes the lazy DAG's one structural
-    inefficiency: `build_tables` branches (versions / features /
-    node_locations) each re-scan + re-extract the pages input — free
-    at test scale, 2-3 redundant full scans at 100 TB. Staging
-    `versions` once makes every downstream branch read the (much
-    smaller, columnar, (element_type, id)-sorted) table instead.
-    """
-    from .plans.lineage import run_stage
-
-    versions_ext = run_stage(
-        spark, checkpoint_root, "versions",
-        lambda: dedup_versions(extract_versions_native(pages)),
-    )
-    versions = versions_ext.drop("geometry_json")
-    geom = run_stage(
-        spark, checkpoint_root, "history_geom",
-        lambda: add_node_locations(
-            add_history(features_from_versions(versions_ext), versions),
-            node_locations_from_versions(versions),
-            refs_source=versions,
-        ),
-    )
-    recon = run_stage(
-        spark, checkpoint_root, "versions_out",
-        lambda: reconstruct(geom, with_feature_json=with_feature_json),
-    )
-    return recon
+def staged_pipeline(spark, pages: DataFrame, checkpoint_root: str,
+                    with_feature_json: bool = False) -> DataFrame:
+    """``reconstruction_pipeline`` staged under ``checkpoint_root``, the
+    tile stage left to the caller (``spark`` is ``pages``' session)."""
+    return walk(pages, "versions_out", checkpoint_root,
+                with_feature_json=with_feature_json)

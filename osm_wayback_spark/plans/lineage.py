@@ -39,6 +39,13 @@ def stage_complete(root: str, stage: str) -> bool:
     return os.path.exists(_paths(root, stage)[2])
 
 
+def invalidate(root: str, stage: str) -> None:
+    """Remove the stage's marker, so its next run_stage rebuilds it."""
+    marker = _paths(root, stage)[2]
+    if os.path.exists(marker):
+        os.remove(marker)
+
+
 _CHECKSUM_MOD = 2_305_843_009_213_693_951  # 2^61 - 1 (Mersenne prime)
 
 
@@ -73,8 +80,11 @@ def partition_metrics(written: DataFrame) -> DataFrame:
     )
 
 
-def write_stage(df: DataFrame, root: str, stage: str) -> None:
-    """Write stage output + per-partition lineage, then the marker.
+def write_stage(
+    df: DataFrame, root: str, stage: str, partition_by: tuple[str, ...] = ()
+) -> None:
+    """Write stage output (directory-partitioned by ``partition_by``)
+    + per-partition lineage, then the marker.
 
     The lineage pass is 100% JVM-side (round-3 verdict item: the old
     mapInPandas metrics pass Arrow-round-tripped the ENTIRE stage
@@ -86,7 +96,7 @@ def write_stage(df: DataFrame, root: str, stage: str) -> None:
     Task walls live in the Spark event log, not in the lineage."""
     data_path, lineage_path, marker = _paths(root, stage)
     spark = df.sparkSession
-    df.write.mode("overwrite").parquet(data_path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
 
     # lineage over what was written (stable file-based partitions)
     written = spark.read.parquet(data_path)
@@ -106,18 +116,15 @@ def run_stage(
     root: str,
     stage: str,
     build: Callable[[], DataFrame],
-    force: bool = False,
+    partition_by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Resume-aware stage execution: completed → read back; else
     compute, checkpoint, read back (so downstream stages consume the
     materialized artifact, cutting lineage like the reference's staged
-    files)."""
-    data_path, _lineage, marker = _paths(root, stage)
-    if force and os.path.exists(marker):
-        os.remove(marker)
+    files). ``invalidate`` forces a rebuild."""
     if not stage_complete(root, stage):
-        write_stage(build(), root, stage)
-    return spark.read.parquet(data_path)
+        write_stage(build(), root, stage, partition_by)
+    return spark.read.parquet(_paths(root, stage)[0])
 
 
 def read_lineage(spark: SparkSession, root: str, stage: str) -> DataFrame:

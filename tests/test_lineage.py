@@ -26,8 +26,9 @@ def test_stage_checkpoint_and_resume(spark, tmp_path):
     assert sum(r.rows_out for r in rows) == 100
     assert all(r.stage == "stage_a" for r in rows)
 
-    # force: marker removed → recompute
-    out3 = lineage.run_stage(spark, root, "stage_a", build, force=True)
+    # invalidated: marker removed → recompute
+    lineage.invalidate(root, "stage_a")
+    out3 = lineage.run_stage(spark, root, "stage_a", build)
     assert out3.count() == 100
     assert calls["n"] == 2
 

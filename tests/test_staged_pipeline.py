@@ -1,5 +1,7 @@
 """Staged (resumable) pipeline ≡ lazy pipeline; salted join ≡ plain."""
 
+import os
+
 import pytest
 
 from osm_wayback_spark import pipeline
@@ -7,27 +9,53 @@ from osm_wayback_spark.operators.history import add_history, add_history_salted
 from osm_wayback_spark.synth import synth_pages
 
 SF = 0.001
+STAGED = ("versions", "history_geom", "versions_out")  # what staged_pipeline writes
+
+
+def _markers(root, stages) -> dict[str, str]:
+    markers = {}
+    for stage in stages:
+        with open(os.path.join(root, stage, "_SUCCESS_STAGE")) as fh:
+            markers[stage] = fh.read()
+    return markers
 
 
 def test_staged_equals_lazy(spark, tmp_path):
+    """Whole rows, every column (``coords`` included), keyed by version."""
     pages = synth_pages(spark, SF)
-    lazy = {
-        (r.element_type, r.id, r.version, r.minor_version): r.feature_json
-        for r in pipeline.reconstruction_pipeline(pages, with_feature_json=True).collect()
-    }
-    staged = {
-        (r.element_type, r.id, r.version, r.minor_version): r.feature_json
-        for r in pipeline.staged_pipeline(spark, pages, str(tmp_path / "ck"), with_feature_json=True).collect()
-    }
+
+    def by_key(df):
+        rows = {
+            (r.element_type, r.id, r.version, r.minor_version): r.asDict(recursive=True)
+            for r in df.collect()
+        }
+        return df.columns, rows
+
+    lazy = by_key(pipeline.reconstruction_pipeline(pages, with_feature_json=True))
+    root = str(tmp_path / "ck")
+    staged = by_key(pipeline.staged_pipeline(spark, pages, root, with_feature_json=True))
+    assert "coords" in lazy[0]
     assert staged == lazy
 
     # resume: all three markers exist → a rerun reads checkpoints
-    import os
+    first = _markers(root, STAGED)
+    again = pipeline.staged_pipeline(spark, pages, root)
+    assert again.count() == len(lazy[1])
+    assert _markers(root, STAGED) == first
 
-    for stage in ("versions", "history_geom", "versions_out"):
-        assert os.path.exists(tmp_path / "ck" / stage / "_SUCCESS_STAGE")
-    again = pipeline.staged_pipeline(spark, pages, str(tmp_path / "ck"))
-    assert again.count() == len(lazy)
+
+def test_rebuilt_stage_rebuilds_every_later_stage(spark, tmp_path):
+    """A stage built from a rebuilt input is stale: removing the first
+    stage's marker rebuilds every stage after it, not only the first."""
+    pages = synth_pages(spark, SF)
+    root = str(tmp_path / "ck")
+    pipeline.staged_pipeline(spark, pages, root)
+    first = _markers(root, STAGED)
+    os.remove(os.path.join(root, "versions", "_SUCCESS_STAGE"))
+    pipeline.staged_pipeline(spark, pages, root)
+    rebuilt = _markers(root, STAGED)
+    for stage in STAGED:
+        assert rebuilt[stage] != first[stage], stage
 
 
 def test_salted_history_equals_plain(spark):

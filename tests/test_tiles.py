@@ -93,7 +93,7 @@ def test_assign_tiles_small_polygon_bbox_cover(spark):
 
 
 def test_typed_coords_path_matches_regex_path(spark):
-    """assign_tiles(pts_col='coords') over reconstruct(with_coords)
+    """assign_tiles(pts_col='coords') over the pipeline's ``coords``
     must produce exactly the tile set of the GeoJSON-regexp path."""
     from pyspark.sql import functions as F
 
@@ -102,7 +102,7 @@ def test_typed_coords_path_matches_regex_path(spark):
     from osm_wayback_spark.synth import synth_pages
 
     pages = synth_pages(spark, 0.001)
-    recon = pipeline.reconstruction_pipeline(pages, with_coords=True)
+    recon = pipeline.reconstruction_pipeline(pages)
     feats = recon.filter(F.col("geometry").isNotNull())
     payload = ("element_type", "id", "version", "minor_version")
     a = assign_tiles(feats, z=15, payload_cols=payload)

@@ -117,17 +117,11 @@ def test_nohistory_edge_cases_pinned(spark):
     import pyspark.sql.functions as F
 
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
     from osm_wayback_spark.operators.reconstruction import reconstruct_objects
     from osm_wayback_spark.synth import synth_pages
 
     pages = synth_pages(spark, 0.001)
-    t = pipeline.build_tables(pages)
-    geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"],
-        refs_source=t["versions"],
-    )
+    geom = pipeline.geometry_pipeline(pages)
     empty_hist = geom.withColumn(
         "history", F.array().cast(geom.schema["history"].dataType)
     ).limit(10)
@@ -156,17 +150,11 @@ def test_way_empty_node_locations_written_not_skipped(spark):
     import pyspark.sql.functions as F
 
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
     from osm_wayback_spark.operators.reconstruction import reconstruct_objects
     from osm_wayback_spark.synth import synth_pages
 
     pages = synth_pages(spark, 0.001)
-    t = pipeline.build_tables(pages)
-    geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"],
-        refs_source=t["versions"],
-    )
+    geom = pipeline.geometry_pipeline(pages)
     ways = geom.filter("element_type = 'way'").limit(5)
     nl_type = geom.schema["node_locations"].dataType
     emptied = ways.withColumn(
@@ -181,17 +169,11 @@ def test_way_empty_node_locations_written_not_skipped(spark):
 
 def test_reconstruct_objects_modes(spark):
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
     from osm_wayback_spark.operators.reconstruction import reconstruct_objects
     from osm_wayback_spark.synth import synth_pages
 
     pages = synth_pages(spark, 0.001)
-    t = pipeline.build_tables(pages)
-    geom = add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"],
-        refs_source=t["versions"],
-    )
+    geom = pipeline.geometry_pipeline(pages)
     complete = reconstruct_objects(geom, mode="complete").collect()
     assert complete
     for r in complete[:20]:
@@ -233,15 +215,9 @@ def test_reconstruct_objects_modes(spark):
 
 def _geom_df(spark, sf=0.001):
     from osm_wayback_spark import pipeline
-    from osm_wayback_spark.operators.history import add_history
-    from osm_wayback_spark.operators.locations import add_node_locations
     from osm_wayback_spark.synth import synth_pages
 
-    t = pipeline.build_tables(synth_pages(spark, sf))
-    return add_node_locations(
-        add_history(t["features"], t["versions"]), t["node_locations"],
-        refs_source=t["versions"],
-    )
+    return pipeline.geometry_pipeline(synth_pages(spark, sf))
 
 
 def test_base_object_keeps_original_properties(spark):
