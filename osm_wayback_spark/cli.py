@@ -70,7 +70,8 @@ def main(argv: list[str] | None = None) -> int:
     stats = {"wall_s": round(time.time() - t0, 2)}
     for stage in pipeline.STAGES:
         lin = lineage.read_lineage(spark, args.out, stage)
-        rows = lin.groupBy().agg(F.sum("rows_out")).collect()[0][0]
+        # an empty stage has no lineage rows: its sum is null
+        rows = lin.groupBy().agg(F.sum("rows_out")).collect()[0][0] or 0
         stats[f"stage_{stage}"] = {"rows": rows}
 
     print(json.dumps(stats))

@@ -239,45 +239,30 @@ def contamination_screen(
     n: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
-    hashed: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word n-gram with an evaluation set → (doc_id, n_hits = distinct
     overlapping n-grams, n_eval_docs = distinct eval docs hit).
 
-    Scale shape: the ONLY join is an equi-join on the n-gram. Eval
-    sets are tiny next to a training corpus (thousands of prompts vs
-    billions of documents), so ``broadcast_eval=True`` (default)
-    broadcasts the exploded eval side — the billion-row exploded
-    train side is then probed map-side with NO shuffle at all; the
-    only Exchange left is the final groupBy on doc_id. With
-    ``broadcast_eval=False`` both sides shuffle on the n-gram (the
-    shape for an unusually large eval set). ``hashed=True`` is the
-    production variant: both sides join on ``xxhash64(n-gram)``
-    instead of the string — identical output modulo 64-bit hash
-    collisions (~n_grams²/2⁶⁴), with an 8-byte fixed-width key in
-    the broadcast table / shuffle instead of a ~6-word string. The
-    default stays the string form so the DuckDB oracle can mirror it
-    verbatim. Long n-grams (default 5) keep the collision rate — and
-    the hot-key risk — down; shingles() is distinct-per-doc, so a
-    looping document contributes each n-gram once and both exploded
-    sides are already (id, g)-unique (no dedup shuffle)."""
+    Scale shape: the ONLY join is an equi-join on the n-gram string
+    (the form the DuckDB oracle mirrors verbatim). Eval sets are tiny
+    next to a training corpus (thousands of prompts vs billions of
+    documents), so the exploded eval side is broadcast — the
+    billion-row exploded train side is then probed map-side with NO
+    shuffle at all; the only Exchange left is the final groupBy on
+    doc_id. Long n-grams (default 5) keep the hot-key risk down;
+    shingles() is distinct-per-doc, so a looping document contributes
+    each n-gram once and both exploded sides are already
+    (id, g)-unique (no dedup shuffle)."""
     from ..functions.text import shingles
+    from ..plans.parallel import fanout_small
 
     def side(df: DataFrame, out_id: str) -> DataFrame:
         g = F.explode(shingles(F.col(text_col), n)).alias("g")
-        s = df.select(F.col(id_col).alias(out_id), g)
-        if hashed:
-            s = s.select(out_id, F.xxhash64("g").alias("g"))
-        return s
-
-    from ..plans.parallel import fanout_small
+        return df.select(F.col(id_col).alias(out_id), g)
 
     t = side(fanout_small(train_docs), "doc_id")
-    ev = side(eval_docs, "eval_id")
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(side(eval_docs, "eval_id"))
     return (
         t.join(ev, on="g")
         .groupBy("doc_id")

@@ -382,107 +382,24 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
     return voted.select("doc_id", sig.cast("long").alias("simhash"))
 
 
-def _cc_star(edges: DataFrame, max_rounds: int = 30) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14) → (node, component)
-    for every node appearing in ``edges`` (src/dst columns).
-
-    Converges in O(log n) rounds regardless of component diameter —
-    the planet-scale path; min-label propagation (diameter rounds)
-    stays the default because its per-round plan is simpler and the
-    DuckDB recursive-CTE oracle mirrors it directly.
-
-    Edges are kept canonical (u > v). Per round:
-    - large-star: connect every strictly-larger neighbor of u to
-      m(u) = min(Γ(u) ∪ {u})   (over the bidirected edge set)
-    - small-star: connect u and its smaller neighbors to their min.
-    Terminates when the edge set is a fixpoint (then it IS the star:
-    every node points at its component's minimum)."""
-    # one eager checkpoint of the raw edge list: ``edges`` is usually
-    # a lazy LSH+verify DAG and is consumed twice below (nodes + the
-    # canonical set) — without this the whole pipeline ran twice
-    edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    e = (
-        edges.select(
-            F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_e = e.count()
-    for _ in range(max_rounds):
-        bidir = e.unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m1 = (
-            bidir.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .withColumn("m", F.least("_mn", "u"))
-            .select("u", "m")
-        )
-        large = (
-            bidir.join(m1, on="u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        m2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            large.join(m2, on="u")
-            .filter(F.col("v") != F.col("m"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(m2.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)  # cut per-round lineage
-        )
-        n_small = small.count()
-        if n_small == n_e and small.exceptAll(e).isEmpty():
-            e = small
-            break
-        e, n_e = small, n_small
-    else:
-        raise RuntimeError(
-            f"star contraction did not converge in {max_rounds} rounds"
-        )
-    return (
-        nodes.join(e, nodes.node == e.u, "left")
-        .select("node", F.coalesce(F.col("v"), F.col("node")).alias("component"))
-    )
-
-
 def connected_components(
     pairs: DataFrame,
     a: str = "doc_a",
     b: str = "doc_b",
     max_iters: int = 20,
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Near-duplicate CLUSTERING: undirected candidate pairs →
     (node, component) with component = min node id reachable.
 
-    ``algorithm="minlabel"`` (default): iterative min-label
-    propagation — each round every node takes the min of its own
-    label and its neighbors' labels; converges in (component
-    diameter) rounds — near-dup clusters are shallow, and
+    Iterative min-label propagation: each round every node takes the
+    min of its own label and its neighbors' labels; converges in
+    (component diameter) rounds — near-dup clusters are shallow, and
     ``max_iters`` bounds the pathological chain. Each round is one
     join + one groupBy on the node id, and ONE driver action: the
     convergence probe is an observe() metric collected by the same
     job that checkpoints the round (r7). This simple form keeps the
     DuckDB recursive-CTE oracle exact.
-
-    ``algorithm="star"``: large-star/small-star contraction —
-    O(log n) rounds regardless of diameter, the planet-scale path
-    (equivalence to minlabel pinned by pytest at sf0.01).
     """
-    if algorithm == "star":
-        edges = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        return _cc_star(edges, max_rounds=max_iters + 10)
     # eager-checkpoint the edge list ONCE before iterating: ``pairs``
     # is typically a lazy LSH+verify DAG, and without this every
     # round's two actions re-ran that whole pipeline (profiled 21.6 s
@@ -544,7 +461,7 @@ def connected_components(
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} "
             "rounds (a component's diameter exceeds max_iters); raise "
-            "max_iters or use the large-star/small-star contraction"
+            "max_iters"
         )
     return labels.select("node", F.col("label").alias("component"))
 
@@ -635,7 +552,6 @@ def dedupe_corpus(
     threshold: float = 0.5,
     hash_fn: str = "md5",
     max_bucket: int | None = None,
-    algorithm: str = "minlabel",
     stage_dir: str | None = None,
     stage_reuse: bool = False,
 ) -> DataFrame:
@@ -648,10 +564,9 @@ def dedupe_corpus(
     exact-Jaccard verify at ``threshold`` → connected components →
     min-id canonical per cluster. The row a pipeline KEEPS is
     ``is_canonical`` (exactly one per near-dup cluster; singletons
-    are their own cluster). ``max_bucket``/``algorithm`` are the
-    planet-scale levers: the cap is applied in ``lsh_candidate_pairs``
-    before the bucket self-join (logged, never silent), the star
-    contraction bounds clustering at O(log n) rounds.
+    are their own cluster). ``max_bucket`` is the planet-scale lever:
+    the cap is applied in ``lsh_candidate_pairs`` before the bucket
+    self-join (logged, never silent).
 
     ``stage_dir``: the SINGLE-SCAN lever. The default lazy DAG scans
     ``documents`` and re-runs the tokenize+shingle expression ~4×
@@ -682,9 +597,7 @@ def dedupe_corpus(
             max_bucket=max_bucket,
             shingled=staged.select("doc_id", "_sh"),
         ).select("doc_a", "doc_b")
-        clusters = dedup_clusters_from_pairs(
-            staged.select("doc_id"), verified, algorithm=algorithm
-        )
+        clusters = dedup_clusters(staged.select("doc_id"), verified)
         return exact.join(clusters, on="doc_id")
     # Lazy path (r7): same single-scan shape as the staged path, but
     # materialized with an eager localCheckpoint instead of a durable
@@ -711,28 +624,8 @@ def dedupe_corpus(
         max_bucket=max_bucket,
         shingled=st.select("doc_id", "_sh"),
     ).select("doc_a", "doc_b")
-    clusters = dedup_clusters_from_pairs(
-        st.select("doc_id"), verified, algorithm=algorithm
-    )
+    clusters = dedup_clusters(st.select("doc_id"), verified)
     return exact.join(clusters, on="doc_id")
-
-
-def dedup_clusters_from_pairs(
-    documents: DataFrame,
-    pairs: DataFrame,
-    algorithm: str = "minlabel",
-) -> DataFrame:
-    """dedup_clusters with an explicit CC algorithm choice."""
-    comp = connected_components(pairs, algorithm=algorithm)
-    return (
-        documents.select("doc_id")
-        .join(comp, documents.doc_id == comp.node, "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("component"),
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("component"))
-    )
 
 
 def dedup_clusters(documents: DataFrame, pairs: DataFrame) -> DataFrame:
@@ -762,7 +655,6 @@ def dedupe_increment(
     n: int = 3,
     threshold: float = 0.3,
     max_bucket: int | None = None,
-    corpus_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental corpus update — screen a NEW batch against an
     EXISTING corpus → one row per new doc:
@@ -777,17 +669,12 @@ def dedupe_increment(
     - exact: md5(text) LEFT SEMI join — shuffle on the 32-char
       digest, never the text (same as exact_dedup).
     - near: shuffle-free MinHash signatures on both sides, the ONE
-      shared `band_buckets` definition (so a corpus bucket table
-      precomputed for `streaming_near_dup_flags` is byte-compatible
-      here — pass it via `corpus_sigs`' banding), a (band, bh)
-      equi-join new×corpus (NOT a self-join: candidate growth is
+      shared `band_buckets` definition (the same banding
+      `streaming_near_dup_flags` uses), a (band, bh) equi-join
+      new×corpus (NOT a self-join: candidate growth is
       |new|-bounded), `max_bucket` capping the CORPUS side's hot
       buckets, then exact-Jaccard verification over the candidates
-      only.
-    - In production the corpus signatures are precomputed once
-      (`corpus_sigs=`) and reused across every increment — the
-      corpus is only ever re-read for the Jaccard verify of actual
-      candidates."""
+      only."""
     new_ids = new_docs.select("doc_id")
     corpus_md5 = corpus_docs.select(F.md5("text").alias("_md5")).distinct()
     exact = (
@@ -797,11 +684,7 @@ def dedupe_increment(
         .withColumn("exact_dup", F.lit(True))
     )
     sig_new = minhash_signatures(new_docs, num_hashes, n)
-    sig_c = (
-        corpus_sigs
-        if corpus_sigs is not None
-        else minhash_signatures(corpus_docs, num_hashes, n)
-    )
+    sig_c = minhash_signatures(corpus_docs, num_hashes, n)
     bk_new = band_buckets(sig_new, num_hashes, bands, id_out="doc_a")
     bk_c = band_buckets(sig_c, num_hashes, bands, id_out="doc_b")
     bk_c = _cap_buckets(bk_c, ["band", "bh"], max_bucket, "dedupe_increment")

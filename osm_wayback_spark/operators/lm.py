@@ -147,7 +147,6 @@ def ppl_buckets(
     col: str = "ppl",
     probs: tuple[float, float] = (1.0 / 3, 2.0 / 3),
     labels: tuple[str, str, str] = ("head", "middle", "tail"),
-    exact: bool = True,
 ) -> DataFrame:
     """CCNet-style perplexity terciles (Wenzek et al. 2020 split the
     corpus into head/middle/tail by LM perplexity terciles; head =
@@ -155,18 +154,11 @@ def ppl_buckets(
 
     The cut points are ONE scalar aggregate row broadcast back onto
     the corpus — no global sort, no ntile window over the full
-    table. ``exact=True`` uses the exact interpolated percentile
-    (identical semantics to DuckDB's quantile_cont, so the whole
-    operator is hash-gatable); at 100 TB set ``exact=False`` for
-    approx_percentile with bounded error — the aggregate becomes a
-    fixed-size sketch instead of a value buffer, and CCNet's own
-    protocol (cuts from a reference sample, reused as constants) is
-    `probs`-equivalent anyway."""
-    pct = F.percentile if exact else (
-        lambda c, p: F.percentile_approx(c, p, 10_000)
-    )
+    table. They are the exact interpolated percentile (identical
+    semantics to DuckDB's quantile_cont, so the whole operator is
+    hash-gatable)."""
     cuts = scored.agg(
-        pct(F.col(col), F.lit(list(probs))).alias("_t")
+        F.percentile(F.col(col), F.lit(list(probs))).alias("_t")
     ).select(F.col("_t")[0].alias("_t1"), F.col("_t")[1].alias("_t2"))
     lo, mid, hi = labels
     return (

@@ -202,7 +202,7 @@ def reconstruct(
         extra_fields.append(T.StructField("feature_json", T.StringType()))
     if with_coords:
         # typed flat [lon,lat] pairs: lets assign_tiles skip re-parsing
-        # the GeoJSON string (pts_col="coords")
+        # the GeoJSON string
         extra_fields.append(
             T.StructField(
                 "coords", T.ArrayType(T.ArrayType(T.DoubleType()))

@@ -428,7 +428,6 @@ def train_ivf_centroids(
     n_centroids: int = 16,
     iters: int = 3,
     sample_fraction: float | None = None,
-    spherical: bool = True,
     max_train: int | None = 100_000,
 ) -> np.ndarray:
     """Lloyd's k-means, Spark-native: per iteration one pass assigns
@@ -448,15 +447,14 @@ def train_ivf_centroids(
     ``sample_fraction`` (fraction-based sampling) takes precedence
     when set. Assignment of the full corpus stays exact either way.
 
-    ``spherical`` (default): k-means on the UNIT SPHERE — vectors and
-    centroids normalized, centroid = normalize(mean of unit members).
-    The downstream re-rank metric is cosine, so clustering by
-    direction rather than raw L2 is the matching quantizer. On
+    Spherical k-means: vectors and centroids live on the UNIT
+    SPHERE, centroid = normalize(mean of unit members). The
+    downstream re-rank metric is cosine, so clustering by direction
+    rather than raw L2 is the matching quantizer: on
     magnitude-varying direction-clustered corpora (the shape of real
-    unnormalized embeddings) this is decisive — recall@5 0.52 → 1.0
-    at nprobe=1 in test_ivf_spherical_beats_l2; on the driver's
-    weak-cluster uniform-magnitude synthetic it is parity (~0.7 at
-    nprobe=6/16).
+    unnormalized embeddings) recall@5 at nprobe=1 measured 1.0,
+    where plain L2 k-means measured 0.52 (test_ivf_spherical_beats_l2
+    keeps ≥ 0.9).
     """
     data = embeddings
     persisted = False
@@ -467,21 +465,16 @@ def train_ivf_centroids(
         if data is not embeddings:
             data = data.persist()
             persisted = True
-    centroids = _init_centroids(data, n_centroids)
-    if spherical:
-        centroids = _unit_rows(centroids)
+    centroids = _unit_rows(_init_centroids(data, n_centroids))
     for _ in range(iters):
-        assigned = with_ivf_cell(data, centroids, spherical)
-        if spherical:
-            # centroid = normalize(mean of UNIT members): normalize
-            # natively before the explode
-            emb_d = F.transform("embedding", lambda x: x.cast("double"))
-            nrm = _norm(emb_d)
-            vec = F.transform(
-                emb_d, lambda x: F.when(nrm > 0, x / nrm).otherwise(F.lit(0.0))
-            )
-        else:
-            vec = F.col("embedding")
+        assigned = with_ivf_cell(data, centroids)
+        # centroid = normalize(mean of UNIT members): normalize
+        # natively before the explode
+        emb_d = F.transform("embedding", lambda x: x.cast("double"))
+        nrm = _norm(emb_d)
+        vec = F.transform(
+            emb_d, lambda x: F.when(nrm > 0, x / nrm).otherwise(F.lit(0.0))
+        )
         means = (
             assigned.select("cell", F.posexplode(vec).alias("dim", "v"))
             .groupBy("cell", "dim")
@@ -491,40 +484,50 @@ def train_ivf_centroids(
         new = centroids.copy()
         for r in means:
             new[r.cell, r.dim] = r.m
-        centroids = _unit_rows(new) if spherical else new
+        centroids = _unit_rows(new)
     if persisted:
         data.unpersist()
     return centroids
 
 
-def with_ivf_cell(
-    embeddings: DataFrame, centroids: np.ndarray, spherical: bool = True
-) -> DataFrame:
+def with_ivf_cell(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
     """+ ``cell``: index of the nearest centroid, one Arrow matmul
-    per batch; centroids ship in the task closure (small). Spherical:
-    nearest by cosine — rows AND centroids are unit-normalized here
-    (idempotent for centroids trained spherically; essential for
-    user-supplied raw centroids, which would otherwise be scored
-    unnormalized through the L2 argmin formula — neither L2- nor
-    cosine-nearest; the round-3 advice finding). With unit centroids
-    the L2 argmin formula IS the cosine argmax."""
-    cent = centroids.astype(np.float64)
-    if spherical:
-        cent = _unit_rows(cent)
+    per batch; centroids ship in the task closure (small). Nearest by
+    cosine — rows AND centroids are unit-normalized here (idempotent
+    for trained centroids; essential for user-supplied raw centroids,
+    which would otherwise be scored unnormalized through the L2
+    argmin formula — neither L2- nor cosine-nearest). With unit
+    centroids the L2 argmin formula IS the cosine argmax."""
+    cent = _unit_rows(centroids.astype(np.float64))
     cnorm2 = (cent * cent).sum(axis=1)
 
     @pandas_udf("int")
     def cell_udf(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype="int32")
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        if spherical:
-            mat = _unit_rows(mat)
+        mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
         # argmin ||x-c||² = argmin (||c||² - 2 x·c)
         scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
         return pd.Series(scores.argmin(axis=1).astype("int32"))
 
     return embeddings.withColumn("cell", cell_udf("embedding"))
+
+
+def _probe_udf(cent: np.ndarray, n_probe: int):
+    """pandas UDF: embedding → its ``n_probe`` cosine-nearest cells of
+    the unit-row centroid matrix ``cent`` (nearest first)."""
+    cnorm2 = (cent * cent).sum(axis=1)
+
+    @pandas_udf("array<int>")
+    def probe_udf(emb: pd.Series) -> pd.Series:
+        if emb.empty:
+            return pd.Series([], dtype="object")
+        mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
+        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
+        order = np.argsort(scores, axis=1)[:, :n_probe].astype("int32")
+        return pd.Series(list(order))
+
+    return probe_udf
 
 
 def ann_ivf_candidates(
@@ -536,7 +539,6 @@ def ann_ivf_candidates(
     iters: int = 3,
     centroids: np.ndarray | None = None,
     fallback: bool = True,
-    spherical: bool = True,
     escalate: bool = True,
 ) -> DataFrame:
     """IVF candidate generation → distinct (query_id, vec_id): the
@@ -544,36 +546,19 @@ def ann_ivf_candidates(
     With ``fallback`` the set is augmented so every query has ≥
     min(k, N-1) candidates (see _guarantee_k); ``escalate`` inserts
     one bounded widening round (nprobe doubled) for starved queries
-    before the full-corpus exact fallback. ``spherical`` trains/
-    assigns on the unit sphere — the quantizer that matches the
-    cosine re-rank metric (user-supplied ``centroids`` are
-    unit-normalized on use, see with_ivf_cell)."""
+    before the full-corpus exact fallback. Cells are spherical
+    (cosine), the quantizer that matches the cosine re-rank metric;
+    user-supplied ``centroids`` are unit-normalized on use (see
+    with_ivf_cell)."""
     if centroids is None:
-        centroids = train_ivf_centroids(
-            embeddings, n_centroids, iters, spherical=spherical
-        )
-    cent = centroids.astype(np.float64)
-    if spherical:
-        cent = _unit_rows(cent)
-    cnorm2 = (cent * cent).sum(axis=1)
+        centroids = train_ivf_centroids(embeddings, n_centroids, iters)
+    cent = _unit_rows(centroids.astype(np.float64))
     n_probe = min(nprobe, len(cent))
 
-    c = with_ivf_cell(embeddings, centroids, spherical).select("vec_id", "cell")
-
-    @pandas_udf("array<int>")
-    def probe_udf(emb: pd.Series) -> pd.Series:
-        if emb.empty:
-            return pd.Series([], dtype="object")
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        if spherical:
-            mat = _unit_rows(mat)
-        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
-        order = np.argsort(scores, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
-
+    c = with_ivf_cell(embeddings, centroids).select("vec_id", "cell")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(probe_udf("embedding")).alias("cell"),
+        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
     )
     cands = (
         c.join(q, on="cell")
@@ -589,7 +574,7 @@ def ann_ivf_candidates(
         def esc(starved):
             return ann_ivf_candidates(
                 embeddings, starved, k, n_centroids, nprobe * 2, iters,
-                centroids=cent, fallback=False, spherical=spherical,
+                centroids=cent, fallback=False,
             )
 
     return _guarantee_k(embeddings, queries, cands, k, escalate=esc)
@@ -601,7 +586,6 @@ def write_ivf_index(
     n_centroids: int = 16,
     iters: int = 3,
     sample_fraction: float | None = None,
-    spherical: bool = True,
     max_train: int | None = 100_000,
 ) -> np.ndarray:
     """Train-once IVF index materialization (the production path —
@@ -626,17 +610,15 @@ def write_ivf_index(
     import json as _json
 
     centroids = train_ivf_centroids(
-        embeddings, n_centroids, iters, sample_fraction, spherical,
-        max_train=max_train,
+        embeddings, n_centroids, iters, sample_fraction, max_train
     )
-    assigned = with_ivf_cell(embeddings, centroids, spherical)
+    assigned = with_ivf_cell(embeddings, centroids)
     assigned.select("vec_id", "cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(f"{path}/assignments.parquet")
     meta_json = _json.dumps(
         {
             "centroids": centroids.tolist(),
-            "spherical": spherical,
             "n_centroids": int(n_centroids),
         }
     )
@@ -647,21 +629,16 @@ def write_ivf_index(
     return centroids
 
 
-def read_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame, bool]:
-    """→ (centroids, assignments(vec_id, cell), spherical). Reads
-    through Spark's Hadoop filesystem — same URI schemes as the
-    writer."""
+def read_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
+    """→ (centroids, assignments(vec_id, cell)). Reads through Spark's
+    Hadoop filesystem — same URI schemes as the writer."""
     import json as _json
 
     meta = _json.loads(
         spark.read.text(f"{path}/centroids.json").collect()[0].value
     )
     assignments = spark.read.parquet(f"{path}/assignments.parquet")
-    return (
-        np.array(meta["centroids"], dtype=np.float64),
-        assignments,
-        bool(meta["spherical"]),
-    )
+    return np.array(meta["centroids"], dtype=np.float64), assignments
 
 
 def ann_ivf_indexed_candidates(
@@ -685,26 +662,14 @@ def ann_ivf_indexed_candidates(
     this call eager (Spark jobs at call time), like ann_* with
     fallback=True already was."""
     spark = embeddings.sparkSession
-    centroids, assignments, spherical = read_ivf_index(spark, index_path)
-    cent = _unit_rows(centroids) if spherical else centroids
-    cnorm2 = (cent * cent).sum(axis=1)
+    centroids, assignments = read_ivf_index(spark, index_path)
+    cent = _unit_rows(centroids)
     n_probe = min(nprobe, len(cent))
-
-    @pandas_udf("array<int>")
-    def probe_udf(emb: pd.Series) -> pd.Series:
-        if emb.empty:
-            return pd.Series([], dtype="object")
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        if spherical:
-            mat = _unit_rows(mat)
-        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
-        order = np.argsort(scores, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
 
     _ensure_checkpoint_dir(queries)
     q = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(probe_udf("embedding")).alias("cell"),
+        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
     ).checkpoint(eager=True)
     # EXPLICIT static partition pruning: the distinct probed cell set
     # is bounded by n_centroids (collected from the SMALL query side
@@ -724,7 +689,7 @@ def ann_ivf_indexed_candidates(
         def esc(starved):
             return ann_ivf_candidates(
                 embeddings, starved, k, len(cent), nprobe * 2,
-                centroids=cent, fallback=False, spherical=spherical,
+                centroids=cent, fallback=False,
             )
 
         cands = _guarantee_k(
@@ -760,22 +725,21 @@ def ann_ivf(
     iters: int = 3,
     centroids: np.ndarray | None = None,
     fallback: bool = True,
-    spherical: bool = True,
     escalate: bool = True,
 ) -> DataFrame:
     """IVF approximate top-k: candidates restricted to the query's
     ``nprobe`` nearest centroid cells (equi-join on cell), exact
     cosine re-rank within. → (query_id, vec_id, cosine, rank).
     Pass precomputed ``centroids`` to skip training (production: train
-    once on a sample, reuse; raw centroids are unit-normalized when
-    ``spherical``). ``fallback`` guarantees k results per query — one
+    once on a sample, reuse; raw centroids are unit-normalized).
+    ``fallback`` guarantees k results per query — one
     doubled-nprobe ``escalate`` round, then full-corpus candidates
     for queries still starved. Like ann_lsh, ``fallback=True`` is
     EAGER (reliable checkpoint at call time; non-local masters need a
     configured shared checkpoint dir)."""
     cands = ann_ivf_candidates(
         embeddings, queries, k, n_centroids, nprobe, iters, centroids,
-        fallback, spherical, escalate,
+        fallback, escalate,
     )
     return rerank_topk(embeddings, queries, cands, k)
 
@@ -788,7 +752,6 @@ def train_pq_codebooks(
     ksub: int = 16,
     iters: int = 10,
     max_train: int = 20_000,
-    spherical: bool = True,
     seed: int = 42,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
@@ -805,7 +768,7 @@ def train_pq_codebooks(
     a deterministic vec_id-ordered sample of ``max_train`` rows is
     collected and Lloyd's runs per-subspace in numpy on the driver —
     cost O(max_train·ksub·d·iters), independent of corpus size.
-    ``spherical`` unit-normalizes before splitting, matching the
+    Vectors are unit-normalized before splitting, matching the
     cosine re-rank metric downstream (L2 on unit vectors is
     monotone in cosine)."""
     dim = len(embeddings.select("embedding").first()[0])
@@ -817,9 +780,7 @@ def train_pq_codebooks(
         .limit(max_train)
         .collect()
     )
-    mat = np.array([r.embedding for r in rows], dtype=np.float64)
-    if spherical:
-        mat = _unit_rows(mat)
+    mat = _unit_rows(np.array([r.embedding for r in rows], dtype=np.float64))
     dsub = dim // m
     rng = np.random.default_rng(seed)
     books = np.empty((m, ksub, dsub))
@@ -840,16 +801,15 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode(
-    embeddings: DataFrame, codebooks: np.ndarray, spherical: bool = True
-) -> DataFrame:
+def pq_encode(embeddings: DataFrame, codebooks: np.ndarray) -> DataFrame:
     """+ ``codes`` (array<int>, length m): per-subspace nearest
     codebook entry — one Arrow-batched matmul per subspace per
     batch; the codebooks ship in the task closure. In production the
     codes column is written NEXT TO the IVF cell assignment
     (cell-partitioned), so a probe reads only nprobe cells' codes —
     m bytes per vector — and touches float vectors only for the
-    final re-rank."""
+    final re-rank. Vectors are unit-normalized first, like the
+    codebook training set."""
     books = codebooks.astype(np.float64)
     m, ksub, dsub = books.shape
 
@@ -857,9 +817,7 @@ def pq_encode(
     def code_udf(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype="object")
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        if spherical:
-            mat = _unit_rows(mat)
+        mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
         out = np.empty((len(mat), m), dtype="int32")
         for j in range(m):
             sub = mat[:, j * dsub : (j + 1) * dsub]
@@ -882,7 +840,6 @@ def ann_ivf_pq(
     refine: int = 4,
     centroids: np.ndarray | None = None,
     codebooks: np.ndarray | None = None,
-    spherical: bool = True,
 ) -> DataFrame:
     """IVF-PQ approximate top-k → (query_id, vec_id, cosine, rank).
 
@@ -905,7 +862,7 @@ def ann_ivf_pq(
     the PQ ranking and the cosine re-rank agree on metric."""
     refined = ann_ivf_pq_candidates(
         embeddings, queries, k, n_centroids, nprobe, m, ksub, refine,
-        centroids, codebooks, spherical,
+        centroids, codebooks,
     )
     return rerank_topk(embeddings, queries, refined, k)
 
@@ -921,27 +878,21 @@ def ann_ivf_pq_candidates(
     refine: int = 4,
     centroids: np.ndarray | None = None,
     codebooks: np.ndarray | None = None,
-    spherical: bool = True,
 ) -> DataFrame:
     """The ADC-refined (query_id, vec_id) candidate set of
     `ann_ivf_pq` (stages 1–2 of its docstring) — exposed so the
     driver oracle can materialize it and DuckDB can exact-re-rank
     the SAME candidates (the ann_lsh/ann_ivf oracle pattern)."""
     if codebooks is None:
-        codebooks = train_pq_codebooks(
-            embeddings, m, ksub, spherical=spherical
-        )
+        codebooks = train_pq_codebooks(embeddings, m, ksub)
     books = codebooks.astype(np.float64)
     m, ksub, dsub = books.shape
 
     cands = ann_ivf_candidates(
-        embeddings, queries, k, n_centroids, nprobe,
-        centroids=centroids, spherical=spherical,
+        embeddings, queries, k, n_centroids, nprobe, centroids=centroids
     )
-    codes = pq_encode(embeddings, books, spherical).select("vec_id", "codes")
-    return _adc_refine(
-        cands.join(codes, "vec_id"), queries, books, refine * k, spherical
-    )
+    codes = pq_encode(embeddings, books).select("vec_id", "codes")
+    return _adc_refine(cands.join(codes, "vec_id"), queries, books, refine * k)
 
 
 def _adc_refine(
@@ -949,7 +900,6 @@ def _adc_refine(
     queries: DataFrame,
     books: np.ndarray,
     n_keep: int,
-    spherical: bool,
 ) -> DataFrame:
     """ADC stage shared by the inline and the persisted-index PQ
     paths: (query_id, vec_id, codes) candidates → the n_keep
@@ -964,8 +914,7 @@ def _adc_refine(
 
     def adc(pdf: pd.DataFrame) -> pd.DataFrame:
         qv = np.asarray(pdf["q_emb"].iloc[0], dtype=np.float64)
-        if spherical:
-            qv = qv / (np.linalg.norm(qv) or 1.0)
+        qv = qv / (np.linalg.norm(qv) or 1.0)
         # one distance table per query: table[j, c] = ||q_j - C_jc||^2
         table = np.empty((m, ksub))
         for j in range(m):
@@ -988,7 +937,6 @@ def write_ivfpq_index(
     iters: int = 3,
     m: int = 8,
     ksub: int = 16,
-    spherical: bool = True,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Train-once IVF-PQ index materialization — the full production
     ANN artifact at 10^12 vectors:
@@ -1006,15 +954,9 @@ def write_ivfpq_index(
     Returns (centroids, codebooks)."""
     import json as _json
 
-    centroids = train_ivf_centroids(
-        embeddings, n_centroids, iters, spherical=spherical
-    )
-    codebooks = train_pq_codebooks(
-        embeddings, m, ksub, spherical=spherical
-    )
-    assigned = pq_encode(
-        with_ivf_cell(embeddings, centroids, spherical), codebooks, spherical
-    )
+    centroids = train_ivf_centroids(embeddings, n_centroids, iters)
+    codebooks = train_pq_codebooks(embeddings, m, ksub)
+    assigned = pq_encode(with_ivf_cell(embeddings, centroids), codebooks)
     assigned.select("vec_id", "cell", "codes").write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(f"{path}/assignments.parquet")
@@ -1022,7 +964,6 @@ def write_ivfpq_index(
         {
             "centroids": centroids.tolist(),
             "codebooks": codebooks.tolist(),
-            "spherical": spherical,
             "n_centroids": int(n_centroids),
             "m": int(m),
             "ksub": int(ksub),
@@ -1036,9 +977,9 @@ def write_ivfpq_index(
 
 def read_ivfpq_index(
     spark, path: str
-) -> tuple[np.ndarray, np.ndarray, DataFrame, bool]:
-    """→ (centroids, codebooks, assignments(vec_id, cell, codes),
-    spherical) — same filesystem rules as read_ivf_index."""
+) -> tuple[np.ndarray, np.ndarray, DataFrame]:
+    """→ (centroids, codebooks, assignments(vec_id, cell, codes)) —
+    same filesystem rules as read_ivf_index."""
     import json as _json
 
     meta = _json.loads(
@@ -1049,7 +990,6 @@ def read_ivfpq_index(
         np.array(meta["centroids"], dtype=np.float64),
         np.array(meta["codebooks"], dtype=np.float64),
         assignments,
-        bool(meta["spherical"]),
     )
 
 
@@ -1085,28 +1025,14 @@ def ann_ivfpq_indexed_candidates(
     exposed for the materialized-candidates oracle pattern (DuckDB
     exact-re-ranks the SAME set)."""
     spark = embeddings.sparkSession
-    centroids, books, assignments, spherical = read_ivfpq_index(
-        spark, index_path
-    )
-    cent = _unit_rows(centroids) if spherical else centroids
-    cnorm2 = (cent * cent).sum(axis=1)
+    centroids, books, assignments = read_ivfpq_index(spark, index_path)
+    cent = _unit_rows(centroids)
     n_probe = min(nprobe, len(cent))
-
-    @pandas_udf("array<int>")
-    def probe_udf(emb: pd.Series) -> pd.Series:
-        if emb.empty:
-            return pd.Series([], dtype="object")
-        mat = np.stack(emb.to_numpy()).astype(np.float64)
-        if spherical:
-            mat = _unit_rows(mat)
-        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
-        order = np.argsort(scores, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
 
     _ensure_checkpoint_dir(queries)
     q = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(probe_udf("embedding")).alias("cell"),
+        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
     ).checkpoint(eager=True)
     probed = [r.cell for r in q.select("cell").distinct().collect()]
     pruned = assignments.filter(F.col("cell").isin(probed))
@@ -1116,4 +1042,4 @@ def ann_ivfpq_indexed_candidates(
         .select("query_id", "vec_id", "codes")
         .distinct()
     )
-    return _adc_refine(cands, queries, books, refine * k, spherical)
+    return _adc_refine(cands, queries, books, refine * k)

@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from ..functions.tiles import DEFAULT_ZOOM, tile_x, tile_y
 
 TILE_PARTITIONS = ("z", "x")  # the tile table's directory partitioning
+# largest bbox cover (in tiles) a geometry gets on top of its vertex tiles
+BBOX_COVER_MAX = 256
 
 
 def _flat_lonlats(geometry_col: str):
@@ -41,8 +43,6 @@ def assign_tiles(
     z: int = DEFAULT_ZOOM,
     geometry_col: str = "geometry",
     payload_cols: tuple[str, ...] = ("element_type", "id"),
-    bbox_cover_max: int = 256,
-    pts_col: str | None = None,
 ) -> DataFrame:
     """features with a GeoJSON column → one row per (z, x, y, feature).
 
@@ -50,7 +50,7 @@ def assign_tiles(
     exact for points, bounded by vertex count for lines/areas (a
     geometry at z15 never explodes into the 32768-wide bbox rows a
     naive bbox cover would produce for a continent-spanning feature).
-    Geometries whose bbox cover is small (≤ ``bbox_cover_max`` tiles)
+    Geometries whose bbox cover is small (≤ ``BBOX_COVER_MAX`` tiles)
     additionally get the full bbox cover, so compact areal features
     are present in every tile they touch (tippecanoe semantics);
     beyond the cap only vertex tiles are kept — documented superset/
@@ -58,19 +58,16 @@ def assign_tiles(
 
     Output: z, x, y, *payload_cols, feature_json.
 
-    ``pts_col``: name of a typed ``array<array<double>>`` flat
-    [lon,lat] column (e.g. ``reconstruct(with_coords=True)``'s
-    ``coords``) — skips the GeoJSON regexp re-parse entirely. When
-    None and the input carries a ``coords`` column (the
-    reconstruction pipeline's default output since r7), it is used
-    automatically — same tile set either way (pytest-pinned
+    The vertices come from the typed ``array<array<double>>`` flat
+    [lon,lat] ``coords`` column when the input carries one (the
+    reconstruction pipeline's output does), skipping the GeoJSON
+    regexp re-parse; without it they are regexp-extracted from the
+    GeoJSON string — same tile set either way (pytest-pinned
     equivalence on the full pipeline output).
     """
-    if pts_col is None and "coords" in features.columns:
-        pts_col = "coords"
-    if pts_col is not None:
+    if "coords" in features.columns:
         df = features.withColumn("_pts", F.coalesce(
-            F.col(pts_col), F.array().cast("array<array<double>>")
+            F.col("coords"), F.array().cast("array<array<double>>")
         ))
     else:
         df = features.withColumn("_pts", _flat_lonlats(geometry_col))
@@ -95,7 +92,7 @@ def assign_tiles(
     )
     small = (F.col("_x1") - F.col("_x0") + 1) * (
         F.col("_y1") - F.col("_y0") + 1
-    ) <= bbox_cover_max
+    ) <= BBOX_COVER_MAX
     bbox_tiles = F.flatten(
         F.transform(
             F.sequence(F.col("_x0"), F.col("_x1")),

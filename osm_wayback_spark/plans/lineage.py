@@ -4,8 +4,9 @@ North rule: "per-partition lineage and metrics checkpointed so any
 stage is resumable mid-run". Each pipeline stage writes
 
     <root>/<stage>/data/        the stage output (parquet)
-    <root>/<stage>/_lineage/    per-partition rows_out/checksum
-    <root>/<stage>/_SUCCESS_STAGE   atomic completion marker
+    <root>/<stage>/lineage/     per-partition rows_out/checksum
+    <root>/<stage>/_SUCCESS_STAGE   completion marker: commit time and
+                                the read-back schema (JSON)
 
 `run_stage` is idempotent: a completed stage short-circuits to a read
 of its data (resume = skip), an interrupted one (no marker) is
@@ -18,25 +19,37 @@ ever reaches the driver.
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def _paths(root: str, stage: str) -> tuple[str, str, str]:
     base = os.path.join(root, stage)
     return (
         os.path.join(base, "data"),
-        os.path.join(base, "_lineage"),
+        os.path.join(base, "lineage"),
         os.path.join(base, "_SUCCESS_STAGE"),
     )
 
 
+def _committed_schema(root: str, stage: str) -> StructType | None:
+    """The read-back schema the stage's marker holds; None when the
+    stage has no readable marker (never built, or interrupted)."""
+    try:
+        with open(_paths(root, stage)[2]) as fh:
+            return StructType.fromJson(json.load(fh)["schema"])
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+
+
 def stage_complete(root: str, stage: str) -> bool:
-    return os.path.exists(_paths(root, stage)[2])
+    return _committed_schema(root, stage) is not None
 
 
 def invalidate(root: str, stage: str) -> None:
@@ -93,13 +106,22 @@ def write_stage(
     per row, handles map/array/binary columns deterministically),
     modular-sum-aggregated per spark_partition_id with map-side
     partial aggregation — the shuffle carries one row per partition.
-    Task walls live in the Spark event log, not in the lineage."""
+    Task walls live in the Spark event log, not in the lineage.
+
+    The marker keeps the read-back schema (``df``'s columns, partition
+    columns last, as a directory-partitioned read returns them): a
+    partitioned write of zero rows leaves no data file to infer one
+    from."""
     data_path, lineage_path, marker = _paths(root, stage)
     spark = df.sparkSession
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
+    schema = StructType(
+        [f for f in df.schema if f.name not in partition_by]
+        + [df.schema[c] for c in partition_by]
+    )
 
     # lineage over what was written (stable file-based partitions)
-    written = spark.read.parquet(data_path)
+    written = spark.read.schema(schema).parquet(data_path)
     # driver traffic is the lineage summary only (one row per
     # partition), never data
     rows = partition_metrics(written).collect()
@@ -108,7 +130,7 @@ def write_stage(
         schema="stage string, partition_id int, rows_out long, checksum long",
     ).write.mode("overwrite").parquet(lineage_path)
     with open(marker, "w") as fh:
-        fh.write(str(time.time()))
+        json.dump({"committed": time.time(), "schema": schema.jsonValue()}, fh)
 
 
 def run_stage(
@@ -124,7 +146,8 @@ def run_stage(
     files). ``invalidate`` forces a rebuild."""
     if not stage_complete(root, stage):
         write_stage(build(), root, stage, partition_by)
-    return spark.read.parquet(_paths(root, stage)[0])
+    schema = _committed_schema(root, stage)
+    return spark.read.schema(schema).parquet(_paths(root, stage)[0])
 
 
 def read_lineage(spark: SparkSession, root: str, stage: str) -> DataFrame:

@@ -8,8 +8,7 @@
   (TMS tile addressing, unique tile index, metadata table) whose
   tile payloads are gzip'd Mapbox Vector Tile 2.1 protobufs encoded
   by the pure-Python functions/mvt.py (``format: pbf`` — full format
-  parity); gzip'd GeoJSON lines remain available via
-  ``payload="json"``.
+  parity).
 """
 
 from __future__ import annotations
@@ -23,20 +22,15 @@ def write_mbtiles(
     path: str,
     name: str = "osm_wayback_spark",
     feature_col: str = "feature_json",
-    compress: bool = True,
-    payload: str = "mvt",
     layer_name: str = "features",
 ) -> dict:
     """Export an ``assign_tiles`` output (z, x, y, …, feature_json)
     into a REAL `.mbtiles` sqlite container — the reference's final
     artifact shape (run.sh:65: tippecanoe → osm-wayback.mbtiles).
 
-    ``payload="mvt"`` (default): tile_data is a gzip'd Mapbox Vector
-    Tile 2.1 protobuf (pure-Python encoder, functions/mvt.py;
-    ``metadata.format = "pbf"``) — full format parity with the
-    tippecanoe artifact. ``payload="json"`` keeps the previous
-    newline-delimited-GeoJSON payload (``format: json``) for
-    consumers that want tiles without an MVT reader.
+    tile_data is a gzip'd Mapbox Vector Tile 2.1 protobuf
+    (pure-Python encoder, functions/mvt.py; ``metadata.format =
+    "pbf"``) — full format parity with the tippecanoe artifact.
 
     Spec fidelity (MBTiles 1.3): the ``tiles`` table uses the TMS
     scheme — ``tile_row = 2^z - 1 - y`` (the XYZ y-flip) — with the
@@ -58,8 +52,7 @@ def write_mbtiles(
 
     import pandas as pd
 
-    if payload not in ("mvt", "json"):
-        raise ValueError(f"payload must be 'mvt' or 'json', got {payload!r}")
+    from ..functions.mvt import encode_tile_from_json
 
     per_tile = (
         tiles.groupBy("z", "x", "y")
@@ -67,33 +60,23 @@ def write_mbtiles(
         .select("z", "x", "y", "_feats")
     )
 
-    if payload == "mvt":
-        from ..functions.mvt import encode_tile_from_json
-
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                blobs = [
-                    encode_tile_from_json(
-                        list(feats), int(z), int(x), int(y), layer_name
-                    )
-                    for z, x, y, feats in zip(
-                        pdf["z"], pdf["x"], pdf["y"], pdf["_feats"]
-                    )
-                ]
-                yield pd.DataFrame(
-                    {"z": pdf["z"], "x": pdf["x"], "y": pdf["y"], "_data": blobs}
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            blobs = [
+                encode_tile_from_json(
+                    list(feats), int(z), int(x), int(y), layer_name
                 )
+                for z, x, y, feats in zip(
+                    pdf["z"], pdf["x"], pdf["y"], pdf["_feats"]
+                )
+            ]
+            yield pd.DataFrame(
+                {"z": pdf["z"], "x": pdf["x"], "y": pdf["y"], "_data": blobs}
+            )
 
-        encoded = per_tile.mapInPandas(
-            kernel, schema="z int, x long, y long, _data binary"
-        )
-    else:
-        encoded = per_tile.select(
-            "z",
-            "x",
-            "y",
-            F.encode(F.concat_ws("\n", "_feats"), "UTF-8").alias("_data"),
-        )
+    encoded = per_tile.mapInPandas(
+        kernel, schema="z int, x long, y long, _data binary"
+    )
 
     con = sqlite3.connect(path)
     try:
@@ -108,10 +91,8 @@ def write_mbtiles(
         n_tiles = 0
         zmin = zmax = None
         for row in encoded.toLocalIterator():
-            data = bytes(row._data)
-            if compress:
-                # fixed mtime → byte-deterministic output
-                data = gzip.compress(data, mtime=0)
+            # fixed mtime → byte-deterministic output
+            data = gzip.compress(bytes(row._data), mtime=0)
             tms_row = (1 << row.z) - 1 - row.y
             cur.execute(
                 "INSERT INTO tiles VALUES (?, ?, ?, ?)",
@@ -126,8 +107,8 @@ def write_mbtiles(
         )
         meta = {
             "name": name,
-            "format": "pbf" if payload == "mvt" else "json",
-            "compression": "gzip" if compress else "none",
+            "format": "pbf",
+            "compression": "gzip",
             "minzoom": str(zmin if zmin is not None else 0),
             "maxzoom": str(zmax if zmax is not None else 0),
             "type": "overlay",

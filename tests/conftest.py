@@ -13,3 +13,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """df → the node names of its physical plan, read from the plan
+    tree (under AQE: the current plan, before any query stage runs)."""
+
+    def names(df) -> list[str]:
+        out, todo = [], [df._jdf.queryExecution().executedPlan()]
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "AdaptiveSparkPlan":
+                node = node.executedPlan()
+            out.append(node.nodeName())
+            kids = node.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+        return out
+
+    return names

@@ -77,3 +77,21 @@ def test_cli_report_resume_and_no_resume(spark, tmp_path, capsys):
         assert after[stage] == staged[stage], stage
     for stage in pipeline.STAGES:
         assert final[f"stage_{stage}"] == report[f"stage_{stage}"], stage
+
+
+def test_cli_empty_crawl(spark, tmp_path, capsys):
+    """An empty pages table runs every stage, the directory-partitioned
+    tile stage included, and reports zero rows for each."""
+    pages = str(tmp_path / "pages")
+    synth_pages(spark, 0.001).limit(0).write.parquet(pages)
+    out = str(tmp_path / "ckpt")
+
+    report = _run(capsys, ["--pages", pages, "--out", out])
+    for stage in pipeline.STAGES:
+        assert report[f"stage_{stage}"] == {"rows": 0}, stage
+    # a resume reads every empty stage back from its marker's schema
+    first = _markers(out)
+    resumed = _run(capsys, ["--pages", pages, "--out", out])
+    assert _markers(out) == first
+    for stage in pipeline.STAGES:
+        assert resumed[f"stage_{stage}"] == {"rows": 0}, stage

@@ -194,10 +194,11 @@ def test_key_value_tables_deduplicate():
 
 
 def test_write_mbtiles_mvt_payload(spark, tmp_path):
-    """Default write_mbtiles payload is spec MVT: metadata format =
-    pbf, every tile blob gunzips to a decodable vector tile whose
-    features carry the input geometries, and the export is
-    byte-deterministic across input partitioning."""
+    """write_mbtiles writes a real MBTiles 1.3 container of spec MVT
+    tiles: TMS y-flip, unique tile index, metadata format = pbf, every
+    tile blob gunzips to a decodable vector tile whose features carry
+    the input geometries (co-located points share one tile), and the
+    export is byte-deterministic across input partitioning."""
     from osm_wayback_spark.operators.tiles import assign_tiles
     from osm_wayback_spark.sources.sinks import write_mbtiles
 
@@ -212,20 +213,26 @@ def test_write_mbtiles_mvt_payload(spark, tmp_path):
     tiles = assign_tiles(df, z=7)
     path = str(tmp_path / "out.mbtiles")
     stats = write_mbtiles(tiles, path, name="t")
-    assert stats["tiles"] == 2
+    assert stats["tiles"] == 2 and stats["minzoom"] == stats["maxzoom"] == 7
 
     con = sqlite3.connect(path)
     meta = dict(con.execute("SELECT name, value FROM metadata").fetchall())
-    assert meta["format"] == "pbf"
+    assert meta["format"] == "pbf" and meta["compression"] == "gzip"
+    assert meta["minzoom"] == meta["maxzoom"] == "7"
+    # spec: unique index present
+    idx = [r[1] for r in con.execute("PRAGMA index_list(tiles)").fetchall()]
+    assert "tile_index" in idx
     rows = con.execute(
         "SELECT zoom_level, tile_column, tile_row, tile_data FROM tiles"
     ).fetchall()
     con.close()
     n_feats = 0
+    sizes = []
     for z, col, tms_row, blob in rows:
         y = (1 << z) - 1 - tms_row
         layer = decode_tile(gzip.decompress(blob))["features"]
         assert layer["version"] == 2
+        sizes.append(len(layer["features"]))
         for f in layer["features"]:
             assert f["type"] == "POINT"
             (pt,) = f["parts"][0:1]
@@ -243,6 +250,8 @@ def test_write_mbtiles_mvt_payload(spark, tmp_path):
         exp = sorted(project(lon, lat, z, col, y) for lon, lat in src)
         assert got == exp
     assert n_feats == 3
+    # the two co-located points share one tile
+    assert sorted(sizes) == [1, 2]
 
     path2 = str(tmp_path / "out2.mbtiles")
     write_mbtiles(assign_tiles(df.repartition(3), z=7), path2, name="t")

@@ -256,8 +256,8 @@ def test_guarantee_k_bounded_escalation(spark):
 
 
 def test_ivf_user_centroids_normalized_when_spherical(spark):
-    """Round-3 advice: a caller passing RAW (unnormalized) centroids
-    with spherical=True must get cosine-nearest assignment — the
+    """A caller passing RAW (unnormalized) centroids must get
+    cosine-nearest assignment — the
     centroids are unit-normalized on use, so scaling a centroid must
     not change any cell assignment."""
     import numpy as np
@@ -271,16 +271,17 @@ def test_ivf_user_centroids_normalized_when_spherical(spark):
         [(i, [float(x) for x in rng.normal(size=8)]) for i in range(64)],
         "vec_id long, embedding array<float>",
     )
-    a = {r.vec_id: r.cell for r in with_ivf_cell(df, cent, True).collect()}
-    b = {r.vec_id: r.cell for r in with_ivf_cell(df, scaled, True).collect()}
+    a = {r.vec_id: r.cell for r in with_ivf_cell(df, cent).collect()}
+    b = {r.vec_id: r.cell for r in with_ivf_cell(df, scaled).collect()}
     assert a == b
 
 
 def test_ivf_spherical_beats_l2(spark):
     """Direction-clustered vectors with log-uniform magnitudes (the
-    shape of real unnormalized embeddings): L2 cells split clusters
-    by magnitude, spherical cells follow direction — which is what
-    the cosine re-rank actually scores."""
+    shape of real unnormalized embeddings): L2 cells would split
+    clusters by magnitude (recall 0.52 measured), spherical cells
+    follow direction — which is what the cosine re-rank actually
+    scores."""
     import math
     import random as rnd
 
@@ -305,16 +306,11 @@ def test_ivf_spherical_beats_l2(spark):
     for r in cosine_topk(df, queries, k=k).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
 
-    def recall(sph):
-        approx = {}
-        out = ann_ivf(df, queries, k=k, n_centroids=8, nprobe=1, spherical=sph)
-        for r in out.collect():
-            approx.setdefault(r.query_id, set()).add(r.vec_id)
-        return sum(len(exact[q] & approx[q]) for q in exact) / (len(exact) * k)
-
-    r_l2, r_sph = recall(False), recall(True)
-    assert r_sph >= 0.9
-    assert r_sph > r_l2 + 0.2
+    approx = {}
+    for r in ann_ivf(df, queries, k=k, n_centroids=8, nprobe=1).collect():
+        approx.setdefault(r.query_id, set()).add(r.vec_id)
+    recall = sum(len(exact[q] & approx[q]) for q in exact) / (len(exact) * k)
+    assert recall >= 0.9
 
 
 def test_ivf_indexed_matches_inline(spark, tmp_path):
@@ -340,8 +336,8 @@ def test_ivf_indexed_matches_inline(spark, tmp_path):
         if d.startswith("cell=")
     ]
     assert len(parts) >= 2
-    cent2, assignments, spherical = read_ivf_index(spark, path)
-    assert spherical and assignments.count() == df.count()
+    cent2, assignments = read_ivf_index(spark, path)
+    assert assignments.count() == df.count()
     import numpy as np
 
     assert np.allclose(cent, cent2)  # centroid metadata round-trips
@@ -481,8 +477,8 @@ def test_ivfpq_indexed_roundtrip_and_recall(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     idx = str(tmp_path / "ivfpq")
     cents, books = write_ivfpq_index(df, idx, n_centroids=8, m=4, ksub=16)
-    r_cents, r_books, assigns, sph = read_ivfpq_index(spark, idx)
-    assert sph and r_cents.shape == cents.shape
+    r_cents, r_books, assigns = read_ivfpq_index(spark, idx)
+    assert r_cents.shape == cents.shape
     assert (r_books == books).all()
     assert assigns.count() == 400
     assert set(assigns.columns) >= {"vec_id", "cell", "codes"}

@@ -93,8 +93,9 @@ def test_assign_tiles_small_polygon_bbox_cover(spark):
 
 
 def test_typed_coords_path_matches_regex_path(spark):
-    """assign_tiles(pts_col='coords') over the pipeline's ``coords``
-    must produce exactly the tile set of the GeoJSON-regexp path."""
+    """assign_tiles over the pipeline's typed ``coords`` must produce
+    exactly the tile set of the GeoJSON-regexp path (the same features
+    without ``coords``)."""
     from pyspark.sql import functions as F
 
     from osm_wayback_spark import pipeline
@@ -105,8 +106,8 @@ def test_typed_coords_path_matches_regex_path(spark):
     recon = pipeline.reconstruction_pipeline(pages)
     feats = recon.filter(F.col("geometry").isNotNull())
     payload = ("element_type", "id", "version", "minor_version")
-    a = assign_tiles(feats, z=15, payload_cols=payload)
-    b = assign_tiles(feats, z=15, payload_cols=payload, pts_col="coords")
+    a = assign_tiles(feats.drop("coords"), z=15, payload_cols=payload)
+    b = assign_tiles(feats, z=15, payload_cols=payload)
     key_cols = ["z", "x", "y", *payload]
     ka = sorted(tuple(r) for r in a.select(*key_cols).collect())
     kb = sorted(tuple(r) for r in b.select(*key_cols).collect())

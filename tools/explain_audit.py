@@ -7,10 +7,12 @@ changes: python tools/explain_audit.py"""
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF = "/root/testdata/sf0.01"
 
@@ -280,7 +282,7 @@ def main() -> None:
         [
             "the tercile cut points are ONE scalar aggregate broadcast "
             "back onto the corpus — no global sort, no ntile window over "
-            "the full table; exact=False swaps in an approx sketch",
+            "the full table",
         ],
     )
     add(
@@ -323,8 +325,6 @@ def main() -> None:
             "a training corpus), so the billion-row exploded train side "
             "is probed map-side with NO join shuffle — the only Exchange "
             "is the final groupBy on doc_id",
-            "hashed=True swaps the join key for xxhash64(n-gram): same "
-            "output, 8-byte fixed-width broadcast key",
         ],
     )
     add(
@@ -366,7 +366,7 @@ def main() -> None:
         ],
     )
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write(
             "# Physical-plan audit (generated by tools/explain_audit.py)\n\n"
             "Properties that must hold at 100 TB, with the current "
