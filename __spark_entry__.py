@@ -15,6 +15,7 @@ on the driver tables.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -22,6 +23,12 @@ from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # helpers
+
+# the checkout this module runs from; every memoized input lives under
+# its .cache, so two checkouts never share a cache
+_REPO = os.path.dirname(os.path.abspath(__file__))
+_CACHE = os.path.join(_REPO, ".cache")
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # NOTE: no blanket fanout here — measured (r7): a parallelism
@@ -37,8 +44,6 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached as parquet under the repo so the N pages-domain queries
     synthesize once (generation is pure, so the cache is just a
     memoization — same bytes every time)."""
-    import os
-
     from osm_wayback_spark.synth import sf_from_dir, synth_pages
 
     sf = sf_from_dir(sf_dir)
@@ -52,7 +57,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream extraction stage at 18 of 32 cores): enough scan
     # units that local[32] gets full parallelism with two waves, with
     # the same run-length/encoding benefits.
-    cache = f"/root/repo/.cache/pages_sf{sf}_s64"
+    cache = f"{_CACHE}/pages_sf{sf}_s64"
     if not os.path.exists(os.path.join(cache, "_SUCCESS")):
         (
             synth_pages(spark, sf)
@@ -343,8 +348,6 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the approximate part, pytest-recall-gated) is materialized to
     parquet; the exact-cosine re-rank, k-guarantee and tie-breaks are
     then fully oracle-checked — DuckDB re-ranks the SAME candidates."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         ann_lsh_candidates,
         rerank_topk,
@@ -365,8 +368,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (k-means + nprobe) approximate nearest neighbors — same
     materialized-candidates oracle pattern as ann_lsh (candidate
     generation recall-gated in pytest, re-rank oracle-checked)."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         ann_ivf_candidates,
         rerank_topk,
@@ -391,8 +392,6 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     same materialized-candidates oracle pattern as ann_lsh/ann_ivf:
     the pruned candidate set is written to parquet and DuckDB
     re-ranks the SAME candidates."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         ann_ivf_indexed_candidates,
         rerank_topk,
@@ -421,8 +420,6 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern: the ADC-refined set is written to parquet and DuckDB
     exact-re-ranks the SAME candidates; PQ ranking quality itself is
     the pytest recall gate (test_ann_ivf_pq_recall)."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         ann_ivf_pq_candidates,
         rerank_topk,
@@ -447,8 +444,6 @@ def q_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     m-byte codes, never float vectors) — materialized-candidates
     oracle pattern: DuckDB exact-re-ranks the SAME ADC-refined
     set."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         ann_ivfpq_indexed_candidates,
         rerank_topk,
@@ -517,11 +512,10 @@ def _stream_dir(sf_dir: str, table: str = "events") -> str:
     tables are single files. Memoize a copy of the table into a
     cache directory once (same memoization contract as _pages: the
     input is immutable, the copy is just staging)."""
-    import os
     import shutil
 
     sf = sf_dir.rstrip("/").split("/")[-1]
-    d = f"/root/repo/.cache/stream_{table}_{sf}"
+    d = f"{_CACHE}/stream_{table}_{sf}"
     dst = os.path.join(d, f"{table}.parquet")
     if not os.path.exists(dst):
         os.makedirs(d, exist_ok=True)
@@ -1343,8 +1337,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set is materialized so the DuckDB oracle verifies the
     exact-cosine threshold step over the SAME pairs; candidate recall
     vs the exact all-pairs is pytest-gated (test_similarity)."""
-    import os
-
     from osm_wayback_spark.operators.similarity import (
         near_dup_candidates,
         near_dup_pairs,
@@ -1404,7 +1396,7 @@ def q_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (feature selection, history join, tag diff, locations resolution,
 # tile cover) are then re-expressed in plain SQL over that table.
 
-_ORACLE_DIR = "/root/repo/.cache/oracle"
+_ORACLE_DIR = f"{_CACHE}/oracle"
 
 _FP_CACHE: str | None = None
 
@@ -1421,13 +1413,13 @@ def _code_fp() -> str:
 
         h = hashlib.md5()
         files = sorted(
-            glob.glob("/root/repo/osm_wayback_spark/**/*.py", recursive=True)
+            glob.glob(f"{_REPO}/osm_wayback_spark/**/*.py", recursive=True)
         ) + [
-            "/root/repo/tests/oracle.py",
-            "/root/repo/tests/oracle_reconstruct.py",
+            f"{_REPO}/tests/oracle.py",
+            f"{_REPO}/tests/oracle_reconstruct.py",
             # the materialization projections themselves live here —
             # an entry edit must invalidate the cache too
-            "/root/repo/__spark_entry__.py",
+            f"{_REPO}/__spark_entry__.py",
         ]
         for f in files:
             with open(f, "rb") as fh:
@@ -1440,7 +1432,6 @@ def _point(link: str, target: str) -> None:
     """Point the fixed oracle path (what the DuckDB SQL reads) at the
     memoized table for the sf/rev that just ran. A symlink flip instead
     of a rewrite: the bytes are written once per (sf, code-fp)."""
-    import os
     import shutil
 
     if os.path.islink(link):
@@ -1463,8 +1454,6 @@ def _oracle_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Memoized per (sf, code fingerprint) like ``_pages``: extraction is
     pure, so the cache is pure memoization — the benched pages_* walls
     time the engine query, not oracle re-materialization."""
-    import os
-
     from osm_wayback_spark.sources.extract import (
         dedup_versions,
         extract_versions_native,
@@ -1560,8 +1549,6 @@ def _write_reconstruct_expected(sf_dir: str) -> None:
     transliterated from the reference JS builders, importing nothing
     from osm_wayback_spark.operators.{_reconstruct_core,reconstruction}
     — so a kernel semantics bug FAILS the pages_reconstruct hash."""
-    import os
-
     from osm_wayback_spark.synth import sf_from_dir
 
     sf = sf_from_dir(sf_dir)
@@ -1645,8 +1632,6 @@ def q_pages_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9/W4 at pipeline scale — the reconstruction output is
     materialized, then the z15 vertex+bbox tile cover is computed by
     the engine AND re-derived in SQL from the same parquet."""
-    import os
-
     from osm_wayback_spark import pipeline
     from osm_wayback_spark.operators.tiles import assign_tiles
     from osm_wayback_spark.synth import sf_from_dir

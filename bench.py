@@ -28,11 +28,11 @@ per-query section, ``core_job`` runs the same number of passes at
 local[n]. Then the session stops, the JVM and its Python workers are
 pinned to the first allowed core (``perfbench.run.bind``; local[1]
 caps JVM task threads but not the Python workers, which would borrow
-idle cores), and a local[1] session in the same JVM is warmed on a
-slice and timed over the same input. Each side is min-combined;
-``efficiency`` = (pages_per_sec_4n / pages_per_sec_n) /
-(cores_4n / cores_n). The JVM stays bound, so this is the run's last
-step.
+idle cores), and a local[1] session in the same JVM is warmed by one
+untimed full ``core_job`` pass and timed over the same input. Each
+side is min-combined; ``efficiency`` = (pages_per_sec_4n /
+pages_per_sec_n) / (cores_4n / cores_n). The JVM stays bound, so this
+is the run's last step.
 """
 
 from __future__ import annotations
@@ -121,7 +121,7 @@ def scaling(spark) -> dict:
     spark.stop()
     bind(pid, {min(os.sched_getaffinity(0))})
     spark = _spark(cores_n)
-    _warm(spark)
+    core_job(spark)
     lo = best_core_job(spark)
     spark.stop()
     return {
@@ -144,8 +144,8 @@ def scaling(spark) -> dict:
 def _skew_inputs(spark, hot_versions: int = 150_000, cold_ids: int = 30_000):
     """Pathological hot-key history-join input: ONE id carrying
     ``hot_versions`` versions (the 3000-version hot-url pytest at
-    bench scale) plus a uniform cold tail — the shape where an
-    unsalted collect_list sends every hot row to one reducer."""
+    bench scale) plus a uniform cold tail — the shape where the
+    history join's collect_list sends every hot row to one reducer."""
     from pyspark.sql import functions as F
 
     from osm_wayback_spark.schemas import FEATURES
@@ -192,20 +192,25 @@ def _skew_inputs(spark, hot_versions: int = 150_000, cold_ids: int = 30_000):
     return features, versions
 
 
-def skew_job(spark, salted: bool) -> float:
-    """Timed hot-key history join (AQE skew-join on): returns wall.
-    ``salted`` uses the two-phase salted collect; plain relies on the
-    single-reducer collect_list."""
+def skew_job(spark) -> float:
+    """Timed hot-key history join: returns wall. Broadcast joins are
+    off for the call (restored after), so it times the shuffled plan
+    that inputs past the broadcast threshold run: the hot id's whole
+    collect_list on one reducer."""
     from pyspark.sql import functions as F
 
-    from osm_wayback_spark.operators.history import add_history, add_history_salted
+    from osm_wayback_spark.operators.history import add_history
 
-    features, versions = _skew_inputs(spark)
-    fn = add_history_salted if salted else add_history
-    t0 = time.time()
-    out = fn(features, versions)
-    out.select(F.sum(F.size("history"))).collect()
-    return time.time() - t0
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        features, versions = _skew_inputs(spark)
+        t0 = time.time()
+        add_history(features, versions).select(F.sum(F.size("history"))).collect()
+        return time.time() - t0
+    finally:
+        spark.conf.set(key, before)
 
 
 def main() -> None:
@@ -293,12 +298,8 @@ def main() -> None:
     # byte-marker island pull
     pages = _pages_cache(spark)
     best_of("extract_tolerant", lambda: extract_versions(pages, tolerant=True).count())
-    # hot-key history join, plain collect vs the salted two-phase one
-    for name, salted in (
-        ("skew_history_plain", False),
-        ("skew_history_salted", True),
-    ):
-        record(name, [round(skew_job(spark, salted=salted), 3) for _ in range(PASSES)])
+    # hot-key history join on the shuffled plan
+    record("skew_history", [round(skew_job(spark), 3) for _ in range(PASSES)])
     # one-call corpus dedup, lazy vs staged: the staged side is split
     # into its stage-table write and its downstream read
     best_of(

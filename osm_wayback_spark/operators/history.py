@@ -3,19 +3,26 @@
 The reference's add_history (add_history.cpp:94-213) does, per input
 feature, a loop of RocksDB point-gets ``v = 1..@version`` assembling an
 ``@history`` array. At Spark scale that per-row lookup becomes ONE
-equi-join with a range predicate (north rule: "replaces RocksDB state
-with a salted … history join"):
+equi-join with a range predicate:
 
     features ⋈ versions ON (element_type, id)
              WHERE versions.version <= features.version
     → groupBy(feature) → sort_array(collect_list(record))
 
-Physical plan notes (the things that must hold at 100 TB):
-- both sides shuffle ONCE on (element_type, id); the tag-diff window,
-  the join, and the collect groupBy all share that partitioning, so
-  Catalyst plans a single Exchange per side;
-- AQE skew-join splits hot ids (skew-heavy urls are ~2% of the
-  synthetic corpus by design);
+What the executed plan shows once the join is shuffled (inputs past
+the broadcast threshold; tools/explain_audit.py checks it with
+``spark.sql.autoBroadcastJoinThreshold=-1``):
+- one hash-partitioning Exchange per side, on (element_type, id),
+  above the persisted versions table; the tag-diff window, the
+  SortMergeJoin and the collect groupBy all reuse that partitioning;
+- no skew split of a hot id: the join is a LEFT OUTER join with the
+  hot key on its right (versions) side, and AQE's skew-join rule
+  splits only the left side of a left outer join (every
+  ``AQEShuffleRead`` is ``coalesced``, none ``skew=true``);
+- so the per-key ``collect_list`` of a hot id runs on one reducer. A
+  two-phase salted collect (partial lists per (key, version % 16),
+  then flatten + re-sort) was no faster at 150K and 500K versions of
+  one id, and ran out of heap at 1.5M where this join finished;
 - features with NO matching versions keep an empty @history array
   (left join) — add_history.cpp:216 attaches @history even on total
   lookup failure;
@@ -68,50 +75,6 @@ def _version_sort(col):
         .when(l["i"] > r["i"], F.lit(1))
         .otherwise(F.lit(0)),
     )
-
-
-def add_history_salted(
-    features: DataFrame, versions: DataFrame, salt_buckets: int = 16
-) -> DataFrame:
-    """Skew-hardened variant of add_history for pathological keys
-    (one id with millions of versions — the "hot url" case).
-
-    The JOIN side is already covered by AQE skew-join splitting; what
-    AQE cannot split is the final per-key ``collect_list`` (all rows
-    of a hot key land in one reducer). This two-phase aggregation
-    salts the collect on ``version % salt_buckets``: partial arrays
-    per (key, salt), then flatten + re-sort per key — the classic
-    partial/final combine, expressed relationally.
-    """
-    recs = history_records(versions)
-    f = features.alias("f")
-    v = recs.alias("v")
-    joined = f.join(
-        v,
-        on=[
-            F.col("f.element_type") == F.col("v.element_type"),
-            F.col("f.id") == F.col("v.id"),
-            F.col("v.version") <= F.col("f.version"),
-        ],
-        how="left",
-    )
-    feature_cols = list(features.columns)
-    passthrough = [c for c in feature_cols if c not in ("element_type", "id")]
-    phase1 = (
-        joined.withColumn(
-            "_salt", F.coalesce(F.col("v.version") % salt_buckets, F.lit(0))
-        )
-        .groupBy(F.col("f.element_type"), F.col("f.id"), F.col("_salt"))
-        .agg(
-            *[F.first(F.col(f"f.{c}")).alias(c) for c in passthrough],
-            F.collect_list(F.col("v.rec")).alias("_partial"),
-        )
-    )
-    phase2 = phase1.groupBy("element_type", "id").agg(
-        *[F.first(c).alias(c) for c in passthrough],
-        _version_sort(F.flatten(F.collect_list("_partial"))).alias("history"),
-    )
-    return phase2.select(*feature_cols, "history")
 
 
 def add_history(features: DataFrame, versions: DataFrame) -> DataFrame:

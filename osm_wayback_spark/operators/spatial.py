@@ -7,7 +7,7 @@ Design for 100 TB:
   its bbox cover and exploded, the point side gets one cell per row.
   Only candidates cross the Arrow boundary, where a numpy-vectorized
   ray-cast kernel refines per polygon group. Hot cells are split by
-  AQE skew-join; hot polygons can be salted via `salt` param.
+  AQE skew-join.
 - kNN: two paths. `knn_brute` broadcasts the (small) query set and
   computes exact top-k — correct at any point-side scale since the
   points side only maps + local-top-k before one shuffle on query_id.

@@ -101,12 +101,6 @@ def build_tables(pages: DataFrame) -> dict[str, DataFrame]:
     return _branches(walk(pages, "versions"))
 
 
-def history_pipeline(pages: DataFrame) -> DataFrame:
-    """pages → features with @history (≙ .history geojsonseq)."""
-    t = build_tables(pages)
-    return add_history(t["features"], t["versions"])
-
-
 def geometry_pipeline(pages: DataFrame) -> DataFrame:
     """pages → features with @history + nodeLocations (≙ .history.geometries)."""
     return walk(pages, "history_geom")

@@ -5,7 +5,7 @@ bulk-load mode, WAL off, bloom filters, write batching) with the
 Spark-side equivalents: AQE (runtime coalesce + skew-join splitting),
 Arrow batch sizing for the Python reconstruction kernel, and a shuffle
 partition count sized to the local core count but overridable for a
-real cluster via env / builder args.
+real cluster via ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -83,7 +83,6 @@ def _driver_memory() -> str:
 def get_spark(
     app_name: str = "osm_wayback_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
@@ -95,25 +94,13 @@ def get_spark(
     ncpu = len(os.sched_getaffinity(0))
     if master is None:
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', ncpu)}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "0")
-        ) or None
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.driver.memory", _driver_memory())
-    java_opts = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-    if shuffle_partitions is not None:
-        builder = builder.config(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-    else:
-        ncores = master.split("[")[-1].rstrip("]")
-        n = int(ncores) if ncores.isdigit() else ncpu
-        builder = builder.config("spark.sql.shuffle.partitions", str(max(n, 8)))
+    ncores = master.split("[")[-1].rstrip("]")
+    n = int(ncores) if ncores.isdigit() else ncpu
+    builder = builder.config("spark.sql.shuffle.partitions", str(max(n, 8)))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

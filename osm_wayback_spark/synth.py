@@ -18,8 +18,9 @@ Branch coverage engineered in (FIXTURES.md §5): first-version all-aA,
 aM/aD mixed, equal-maps no-op, version gaps (redactions), deleted
 (location-less) node versions, shared changesets (max-version-wins and
 changeset-match override), identical consecutive coordinates, closed
-ways → Polygon, relations, and ~2% skew-heavy urls (≥48 versions) to
-exercise salting / AQE skew-join.
+ways → Polygon, relations, and ~2% skew-heavy urls (≥48 versions):
+ids whose whole history lands on one reducer of the history join's
+per-key collect.
 """
 
 from __future__ import annotations

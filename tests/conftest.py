@@ -5,11 +5,7 @@ import pytest
 def spark():
     from osm_wayback_spark.session import get_spark
 
-    s = get_spark(
-        app_name="osm-wayback-spark-tests",
-        master="local[4]",
-        shuffle_partitions=8,
-    )
+    s = get_spark(app_name="osm-wayback-spark-tests", master="local[4]")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

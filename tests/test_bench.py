@@ -24,7 +24,8 @@ def test_bench_smoke_fits_host():
     for key in ("metric", "value", "unit", "queries", "queries_passes", "sf",
                 "pages_per_sec", "tiles_per_sec", "host", "scaling"):
         assert key in result, key
-    assert "pipeline_e2e" in result["queries"]
+    for leaf in ("pipeline_e2e", "skew_history"):
+        assert leaf in result["queries"], leaf
     assert all(wall > 0 for wall in result["queries"].values()), result["queries"]
     assert result["sf"] == 0.001
     assert result["host"]["nproc"] == len(os.sched_getaffinity(0))

@@ -3,6 +3,7 @@
 import pytest
 
 from osm_wayback_spark import pipeline
+from osm_wayback_spark.operators.history import add_history
 from osm_wayback_spark.synth import synth_pages
 
 from .oracle import add_history_oracle, build_index, extract_all
@@ -13,7 +14,8 @@ SF = 0.001
 @pytest.fixture(scope="module")
 def spark_histories(spark):
     pages = synth_pages(spark, SF)
-    rows = pipeline.history_pipeline(pages).collect()
+    t = pipeline.build_tables(pages)
+    rows = add_history(t["features"], t["versions"]).collect()
     return {(r.element_type, r.id): r for r in rows}
 
 

@@ -13,6 +13,7 @@ stage-4 oracle (VERDICT r2 item #1):
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -26,6 +27,8 @@ from tests.oracle import (
     node_locations_oracle,
 )
 from tests.oracle_reconstruct import reconstruct_rows
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SF = 0.001
 KEYS = (
@@ -71,7 +74,7 @@ def test_no_engine_imports():
 
     import ast
 
-    tree = ast.parse(open("tests/oracle_reconstruct.py").read())
+    tree = ast.parse(open(os.path.join(REPO, "tests", "oracle_reconstruct.py")).read())
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             assert all("osm_wayback" not in a.name for a in node.names)
@@ -83,7 +86,7 @@ def test_no_engine_imports():
          "import tests.oracle_reconstruct; "
          "bad = [m for m in sys.modules if 'osm_wayback_spark' in m]; "
          "print(','.join(bad))"],
-        capture_output=True, text=True, cwd="/root/repo", check=True,
+        capture_output=True, text=True, cwd=REPO, check=True,
     )
     assert proc.stdout.strip() == "", proc.stdout
     importlib  # quiet linters

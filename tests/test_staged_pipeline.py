@@ -1,11 +1,10 @@
-"""Staged (resumable) pipeline ≡ lazy pipeline; salted join ≡ plain."""
+"""Staged (resumable) pipeline ≡ lazy pipeline; the history join on a
+hot key completes on the shuffled plan."""
 
 import os
 
-import pytest
-
 from osm_wayback_spark import pipeline
-from osm_wayback_spark.operators.history import add_history, add_history_salted
+from osm_wayback_spark.operators.history import add_history
 from osm_wayback_spark.synth import synth_pages
 
 SF = 0.001
@@ -58,23 +57,10 @@ def test_rebuilt_stage_rebuilds_every_later_stage(spark, tmp_path):
         assert rebuilt[stage] != first[stage], stage
 
 
-def test_salted_history_equals_plain(spark):
-    pages = synth_pages(spark, SF)
-    t = pipeline.build_tables(pages)
-    plain = {
-        (r.element_type, r.id): [rec.asDict(recursive=True) for rec in r.history]
-        for r in add_history(t["features"], t["versions"]).collect()
-    }
-    salted = {
-        (r.element_type, r.id): [rec.asDict(recursive=True) for rec in r.history]
-        for r in add_history_salted(t["features"], t["versions"], salt_buckets=7).collect()
-    }
-    assert salted == plain
-
-
-def test_hot_key_stress_salted(spark):
-    # one entity with 3000 versions (pathological url) — both join
-    # variants must agree and complete
+def test_hot_key_stress(spark, plan_nodes):
+    """One entity with 3000 versions (pathological url), with broadcast
+    joins off: the shuffled plan that inputs past the broadcast
+    threshold run, one Exchange per side, completes in version order."""
     from pyspark.sql import functions as F
 
     from osm_wayback_spark.schemas import FEATURES
@@ -83,7 +69,10 @@ def test_hot_key_stress_salted(spark):
         spark.range(1, 3001)
         .select(
             F.lit("node").alias("element_type"),
-            F.lit(77).cast("long").alias("id"),
+            # 77 computed from the row, not a constant: a constant key
+            # folds out of the join condition, which then plans as a
+            # nested-loop join
+            ((F.col("id") / 10_000).cast("long") + 77).alias("id"),
             F.col("id").cast("int").alias("version"),
             (F.lit(1500000000) + F.col("id") * 100).alias("ts"),
             (F.col("id") % 50).cast("long").alias("changeset"),
@@ -103,12 +92,16 @@ def test_hot_key_stress_salted(spark):
         [("node", 77, 3000, 1, 1500300000, 1, "u", "{}", {"v": "3000"})],
         schema=FEATURES,
     )
-    from osm_wayback_spark.operators.history import add_history, add_history_salted
-
-    plain = add_history(features, versions).collect()[0]
-    salted = add_history_salted(features, versions, salt_buckets=16).collect()[0]
-    assert len(plain.history) == 3000
-    assert [r.i for r in plain.history] == list(range(1, 3001))
-    assert [r.asDict(recursive=True) for r in salted.history] == [
-        r.asDict(recursive=True) for r in plain.history
-    ]
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        out = add_history(features, versions)
+        nodes = plan_nodes(out)
+        row = out.collect()[0]
+    finally:
+        spark.conf.set(key, before)
+    assert "SortMergeJoin" in nodes
+    assert nodes.count("Exchange") == 2
+    assert len(row.history) == 3000
+    assert [r.i for r in row.history] == list(range(1, 3001))

@@ -5,10 +5,13 @@ column names, and an order-insensitive value hash."""
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pandas as pd
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -27,7 +30,7 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main(sf_dir: str, only: list[str] | None = None) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
     from osm_wayback_spark.session import get_spark
 

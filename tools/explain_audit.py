@@ -1,10 +1,11 @@
 """Dump `explain("formatted")` physical plans for the headline
-operators into PLANS.md. Each section checks one property of its
-plan: no Python row UDF (`BatchEvalPython`). The other properties a
-section lists (one Exchange per side, broadcast joins, pushed
-filters, WindowGroupLimit, ...) are hand-written notes, printed as
-"NOTE (not checked)" and not verified against the plan. Re-run after
-plan-affecting changes: python tools/explain_audit.py"""
+operators into PLANS.md. Every section checks that its plan has no
+Python row UDF (`BatchEvalPython`); the history join also checks, on
+the plan tree, its one hash Exchange per side. The other properties a
+section lists (broadcast joins, pushed filters, WindowGroupLimit, ...)
+are hand-written notes, printed as "NOTE (not checked)" and not
+verified against the plan. Re-run after plan-affecting changes:
+python tools/explain_audit.py"""
 
 from __future__ import annotations
 
@@ -26,6 +27,43 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
+def _nodes(node) -> list:
+    """Every node of a JVM physical-plan subtree (under AQE: the
+    current plan, before any query stage runs)."""
+    out, todo = [], [node]
+    while todo:
+        n = todo.pop()
+        if n.nodeName() == "AdaptiveSparkPlan":
+            n = n.executedPlan()
+        out.append(n)
+        kids = n.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+    return out
+
+
+def one_hash_exchange_per_side(df, keys: tuple[str, ...]) -> bool:
+    """The plan of a two-sided join shuffles exactly twice, each
+    Exchange hash-partitioning on ``keys`` above a cached-table scan."""
+
+    def on_keys(ex) -> bool:
+        part = ex.outputPartitioning()
+        if part.getClass().getSimpleName() != "HashPartitioning":
+            return False
+        exprs = part.expressions()
+        return tuple(exprs.apply(i).name() for i in range(exprs.size())) == keys
+
+    def over_cache(ex) -> bool:
+        return any(n.nodeName() == "InMemoryTableScan" for n in _nodes(ex))
+
+    exchanges = [
+        n for n in _nodes(df._jdf.queryExecution().executedPlan())
+        if n.nodeName() == "Exchange"
+    ]
+    return len(exchanges) == 2 and all(
+        on_keys(ex) and over_cache(ex) for ex in exchanges
+    )
+
+
 def main() -> None:
     import __spark_entry__ as e
     from osm_wayback_spark.session import get_spark
@@ -35,12 +73,12 @@ def main() -> None:
 
     sections = []
 
-    def add(title: str, df, notes: list[str]):
+    def add(title: str, df, notes: list[str], checks=()):
         p = plan_of(df)
-        checks = []
-        checks.append(
-            ("no Python row UDF (BatchEvalPython)", "BatchEvalPython" not in p)
-        )
+        checks = [
+            ("no Python row UDF (BatchEvalPython)", "BatchEvalPython" not in p),
+            *checks,
+        ]
         sections.append((title, notes, checks, p))
 
     from osm_wayback_spark import pipeline
@@ -48,15 +86,31 @@ def main() -> None:
 
     pages = e._pages(spark, SF)
     t = pipeline.build_tables(pages)
-    add(
-        "history join (J1/W1/A1): features ⋈ versions → tag diff → collect",
-        add_history(t["features"], t["versions"]),
-        [
-            "ONE Exchange per side on (element_type, id); the dedup window, "
-            "tag-diff window, join and collect groupBy all reuse it",
-            "AQE skew-join splits hot ids at runtime",
-        ],
-    )
+    # broadcast joins off for this section only: the shuffled plan that
+    # inputs past the broadcast threshold run
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        hist = add_history(t["features"], t["versions"])
+        add(
+            "history join (J1/W1/A1): features ⋈ versions → tag diff → "
+            "collect, shuffled (autoBroadcastJoinThreshold=-1)",
+            hist,
+            [
+                "a hot id is not skew-split: the join is a left outer join "
+                "with the hot key on its right (versions) side, so its "
+                "collect_list runs on one reducer",
+            ],
+            [(
+                "ONE hash Exchange per side on (element_type, id), above "
+                "the InMemoryTableScan: the latest-per-entity window, "
+                "tag-diff window, join and collect groupBy all reuse it",
+                one_hash_exchange_per_side(hist, ("element_type", "id")),
+            )],
+        )
+    finally:
+        spark.conf.set(threshold, before)
     add(
         "knn_cells (J5 scale path): native ring expansion + cell equi-join",
         e.q_knn_cells(spark, SF),
