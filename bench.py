@@ -17,7 +17,7 @@ n = $SPARK_GRAFT_CPUS (default: the cores this process may use).
 Per-query section: ``pipeline_e2e`` is ``core_job`` (pages → history
 join + tag diff → node locations → reconstruction → z15 tiles), and
 ``pages_per_sec``/``tiles_per_sec`` are its throughput. Every other key
-of ``queries`` is one oracle query or one operator variant, counted.
+of ``queries`` except ``skew_history`` is one oracle query, counted.
 Each wall is the best of $SPARK_GRAFT_BENCH_QUERY_PASSES (default 2)
 timed passes, so one pass that collides with a host-load burst does
 not define the number; every raw pass is kept in ``queries_passes``.
@@ -39,9 +39,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -215,13 +213,6 @@ def skew_job(spark) -> float:
 
 def main() -> None:
     import __spark_entry__ as entrymod
-    from osm_wayback_spark.operators.dedup import (
-        dedupe_corpus,
-        minhash_signatures,
-        stage_corpus,
-        winnow_pairs,
-    )
-    from osm_wayback_spark.sources.extract import extract_versions
     from osm_wayback_spark.synth import sf_from_dir
     from perfbench.run import host_block
 
@@ -260,9 +251,11 @@ def main() -> None:
         "dedup_exact",
         "minhash_signatures",
         # the dedup family's sub-stages: banded LSH candidate pairs,
-        # then verified pairs → connected components
+        # then verified pairs → connected components; then the one-call
+        # composition (exact + near-dup labels)
         "lsh_pairs",
         "dedup_clusters",
+        "dedupe_corpus",
         "text_stats",
         "zonal_stats",
         "asof_join",
@@ -283,49 +276,8 @@ def main() -> None:
     qs = entrymod.queries()
     for name in bench_queries:
         best_of(name, lambda: qs[name](spark, SF_DIR).count())
-    # xxhash64 variants: md5 exists only for DuckDB oracle parity, so
-    # these are the production configuration's walls
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    best_of(
-        "minhash_signatures_xxh",
-        lambda: minhash_signatures(docs, num_hashes=4, hash_fn="xxhash64").count(),
-    )
-    best_of(
-        "winnow_pairs_xxh",
-        lambda: winnow_pairs(docs, k=24, w=12, hash_fn="xxhash64").count(),
-    )
-    # the real-crawl configuration: an HTML parse instead of the exact
-    # byte-marker island pull
-    pages = _pages_cache(spark)
-    best_of("extract_tolerant", lambda: extract_versions(pages, tolerant=True).count())
     # hot-key history join on the shuffled plan
     record("skew_history", [round(skew_job(spark), 3) for _ in range(PASSES)])
-    # one-call corpus dedup, lazy vs staged: the staged side is split
-    # into its stage-table write and its downstream read
-    best_of(
-        "dedupe_corpus_lazy",
-        lambda: dedupe_corpus(docs, num_hashes=8, threshold=0.3).count(),
-    )
-    writes, reads = [], []
-    for _ in range(PASSES):
-        stage = tempfile.mkdtemp(prefix="bench_dedup_stage_")
-        try:
-            t1 = time.time()
-            stage_corpus(docs, stage)
-            writes.append(round(time.time() - t1, 3))
-            t1 = time.time()
-            dedupe_corpus(
-                docs, num_hashes=8, threshold=0.3,
-                stage_dir=stage, stage_reuse=True,
-            ).count()
-            reads.append(round(time.time() - t1, 3))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-    record("dedupe_corpus_stage_write", writes)
-    record("dedupe_corpus_staged_read", reads)
-    # min over same-pass (write + read) sums, not min(write) + min(read):
-    # a pass is one coherent noise window
-    record("dedupe_corpus_staged", [round(a + b, 3) for a, b in zip(writes, reads)])
     total = round(time.time() - t0, 3)
     scale = scaling(spark)
 

@@ -8,9 +8,14 @@ Four families, each a ``queries()`` entry with a DuckDB oracle:
 - SimHash:     per-token 48-bit hash, weighted bit votes
 - n-gram Jaccard: shingle explode + self-join
 
-Hash function choice: md5 (lexicographic min over hex strings ≡ min
-over the 128-bit integer) because Spark and DuckDB produce identical
-md5 hex — the whole dedup stack is thus oracle-checkable bit-for-bit.
+Hash function: md5 everywhere (MinHash signatures, band hashes,
+winnowing grams; lexicographic min over hex strings ≡ min over the
+128-bit integer) because Spark and DuckDB produce identical md5 hex —
+the whole dedup stack is thus oracle-checkable bit-for-bit.
+
+``dedupe_corpus`` and ``winnow_pairs`` materialize their compact
+intermediate tables with an eager ``localCheckpoint`` on every call;
+nothing is kept on disk between calls.
 
 Scale notes: signatures are per-row column math (no shuffle at
 all); pair generation is explode → shuffle-on-short-key →
@@ -71,7 +76,7 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 def _exact_from_keyed(keyed: DataFrame) -> DataFrame:
-    """exact_dedup over a pre-hashed (doc_id, h) frame (staged path)."""
+    """exact_dedup over a pre-hashed (doc_id, h) frame (dedupe_corpus)."""
     keep = keyed.groupBy("h").agg(F.min("doc_id").alias("keep_id"))
     return (
         keyed.join(keep, on="h")
@@ -93,10 +98,9 @@ def minhash_signatures(
     documents: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """→ (doc_id, sig_0..sig_{H-1}); sig_i = min over shingles of
-    hash(i-salted shingle).
+    md5(i-salted shingle).
 
     SHUFFLE-FREE (round 4): a MinHash signature depends only on its
     own row's shingles, so it is pure column math — array_min over a
@@ -106,44 +110,27 @@ def minhash_signatures(
     the hashing itself (measured at sf0.1: 3.8 s → 0.6 s). The DuckDB
     oracle keeps its unnest+GROUP BY formulation — same result, so
     the rewrite is hash-checked, and distinctness of the shingle set
-    is irrelevant (min is idempotent to duplicates).
-
-    ``hash_fn="md5"`` (default): hex-string min — the oracle-parity
-    configuration (Spark and DuckDB md5 agree bit-for-bit, and the
-    lexicographic min over hex ≡ min over the 128-bit integer).
-    ``hash_fn="xxhash64"``: native 64-bit integer hash (no hex
-    string materialization) — the planet-scale configuration where
-    DuckDB parity is not needed. Downstream banding
-    (lsh_candidate_pairs) works on either: the band hash
-    md5(concat_ws) stringifies longs deterministically."""
+    is irrelevant (min is idempotent to duplicates). The hex-string
+    min is the oracle-parity form: Spark and DuckDB md5 agree
+    bit-for-bit."""
     shingled = documents.select(
         "doc_id", shingles(F.col("text"), n).alias("_sh")
     )
-    return minhash_signatures_from_shingles(shingled, num_hashes, hash_fn)
+    return minhash_signatures_from_shingles(shingled, num_hashes)
 
 
 def minhash_signatures_from_shingles(
-    shingled: DataFrame,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    hash_fn: str = "md5",
+    shingled: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
 ) -> DataFrame:
     """minhash_signatures over a PRE-SHINGLED (doc_id, _sh) frame —
-    the staged-corpus path (dedupe_corpus(stage_dir=...)): the
-    tokenize+shingle pass is paid once and reused."""
-    if hash_fn == "xxhash64":
-        def sig(i):
-            return F.array_min(
-                F.transform("_sh", lambda s: F.xxhash64(F.lit(i), s))
-            )
-    elif hash_fn == "md5":
-        def sig(i):
-            return F.array_min(
-                F.transform(
-                    "_sh", lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
-                )
-            )
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
+    the dedupe_corpus path: the tokenize+shingle pass is paid once
+    and reused."""
+
+    def sig(i):
+        return F.array_min(
+            F.transform("_sh", lambda s: F.md5(F.concat(F.lit(f"{i}:"), s)))
+        )
+
     return (
         shingled.filter(F.size("_sh") > 0)  # ≙ the docs the groupBy form kept
         .select(
@@ -161,9 +148,8 @@ def band_buckets(
 ) -> DataFrame:
     """Banded LSH bucket rows → (``id_out``, band, bh).
 
-    Band hash = md5(concat_ws('|') of the band's signature slots) —
-    works on both the md5-hex and xxhash64-integer signature paths
-    (concat_ws stringifies longs deterministically). THE one banding
+    Band hash = md5(concat_ws('|') of the band's signature slots).
+    THE one banding
     definition: ``lsh_candidate_pairs`` (batch self-join) and
     ``streaming_near_dup_flags`` (stream-static join) both call this,
     so corpus bucket tables precomputed by one path are always
@@ -221,24 +207,14 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = 1000,
-    shingled: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs sharing ≥1 shingle.
 
     → (doc_a, doc_b, jaccard) with jaccard ≥ threshold. ``max_df``
     drops shingles appearing in more than that many docs before the
     self-join (quadratic-blowup guard at planet scale); pass None to
-    disable (the oracle-parity configuration). ``shingled`` (a
-    (doc_id, _sh) frame, e.g. the dedupe_corpus stage table)
-    overrides re-deriving shingles from the raw text — this operator
-    otherwise evaluates the tokenize+shingle expression ~4× (df
-    filter, sizes, both self-join sides)."""
-    if shingled is not None:
-        sh = fanout_small(shingled).select(
-            "doc_id", F.explode("_sh").alias("shingle")
-        )
-    else:
-        sh = doc_shingles(documents, n)
+    disable (the oracle-parity configuration)."""
+    sh = doc_shingles(documents, n)
     if max_df is not None:
         df_counts = sh.groupBy("shingle").agg(F.countDistinct("doc_id").alias("df"))
         sh = sh.join(
@@ -280,26 +256,24 @@ def minhash_dedup(
     bands: int = DEFAULT_BANDS,
     n: int = 3,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
     max_bucket: int | None = None,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """MinHash-LSH candidates verified by exact Jaccard.
-    → (doc_a, doc_b, jaccard). ``hash_fn="xxhash64"`` selects the
-    native-integer signature path (see minhash_signatures);
-    ``max_bucket`` is the hot-bucket cap applied before the LSH
-    self-join (logged, see _cap_buckets; None = exact). ``shingled``
-    (a (doc_id, _sh) frame) overrides re-deriving shingles from
-    ``documents`` — the staged-corpus path, see dedupe_corpus."""
+    → (doc_a, doc_b, jaccard). ``max_bucket`` is the hot-bucket cap
+    applied before the LSH self-join (logged, see _cap_buckets;
+    None = exact). ``shingled`` (a (doc_id, _sh) frame) overrides
+    re-deriving shingles from ``documents`` — dedupe_corpus passes
+    its checkpointed table."""
     if shingled is None:
         shingled = fanout_small(documents).select(
             "doc_id", shingles(F.col("text"), n).alias("_sh")
         )
     else:
-        # staged-table path: the compact (doc_id, _sh) parquet is a
-        # scan-adjacent frame — same tiny-file single-task hazard
+        # a checkpointed (doc_id, _sh) table is scan-adjacent — same
+        # tiny-input single-task hazard
         shingled = fanout_small(shingled)
-    sigs = minhash_signatures_from_shingles(shingled, num_hashes, hash_fn)
+    sigs = minhash_signatures_from_shingles(shingled, num_hashes)
     cands = lsh_candidate_pairs(sigs, num_hashes, bands, max_bucket=max_bucket)
     return _verify_jaccard_arrays(cands, shingled, threshold)
 
@@ -521,39 +495,13 @@ def line_dedup(
     )
 
 
-def _stage_exists(path: str) -> bool:
-    import os
-
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def stage_corpus(documents: DataFrame, stage_dir: str, n: int = 3) -> str:
-    """The single full-text scan behind ``dedupe_corpus(stage_dir=)``:
-    write the compact (doc_id, md5(text), shingle-array) table —
-    raw text dropped — that every downstream dedup stage reads.
-    Factored out so the stage write and the downstream read can be
-    run (and timed) independently; returns the table path."""
-    # path keyed on the shingle size (r6 advice): a stage table
-    # written with a different n must never be silently reused
-    path = f"{stage_dir}/dedup_stage_n{n}.parquet"
-    fanout_small(documents).select(
-        "doc_id",
-        F.md5("text").alias("_h"),
-        shingles(F.col("text"), n).alias("_sh"),
-    ).write.mode("overwrite").parquet(path)
-    return path
-
-
 def dedupe_corpus(
     documents: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     n: int = 3,
     threshold: float = 0.5,
-    hash_fn: str = "md5",
     max_bucket: int | None = None,
-    stage_dir: str | None = None,
-    stage_reuse: bool = False,
 ) -> DataFrame:
     """One-call training-corpus dedup: exact + near-dup in a single
     labeled table → (doc_id, keep_id, is_exact_dup, component,
@@ -568,45 +516,13 @@ def dedupe_corpus(
     the cap is applied in ``lsh_candidate_pairs`` before the bucket
     self-join (logged, never silent).
 
-    ``stage_dir``: the SINGLE-SCAN lever. The default lazy DAG scans
-    ``documents`` and re-runs the tokenize+shingle expression ~4×
-    (exact keying, signatures, both sides of the Jaccard verify) —
-    free at test scale, 3 redundant full-text passes at 100 TB. With
-    ``stage_dir`` set, one pass writes the compact
-    (doc_id, md5(text), shingle-array) table to
-    ``<stage_dir>/dedup_stage_n{n}.parquet`` (the raw text column
-    DROPPED) and every downstream stage reads that columnar table
-    instead. Results are identical (pytest-pinned).
-
-    ``stage_reuse``: resumability — when the stage table already
-    exists (``_SUCCESS`` present), read it instead of rewriting. A
-    restarted 100 TB dedup job skips its most expensive pass; it is
-    also how the bench times the stage write and the downstream read
-    as separate walls."""
-    if stage_dir is not None:
-        spark = documents.sparkSession
-        path = f"{stage_dir}/dedup_stage_n{n}.parquet"
-        if not (stage_reuse and _stage_exists(path)):
-            stage_corpus(documents, stage_dir, n=n)
-        staged = spark.read.parquet(path)
-        exact = _exact_from_keyed(
-            staged.select("doc_id", F.col("_h").alias("h"))
-        ).select("doc_id", "keep_id", F.col("is_dup").alias("is_exact_dup"))
-        verified = minhash_dedup(
-            documents, num_hashes, bands, n, threshold, hash_fn,
-            max_bucket=max_bucket,
-            shingled=staged.select("doc_id", "_sh"),
-        ).select("doc_a", "doc_b")
-        clusters = dedup_clusters(staged.select("doc_id"), verified)
-        return exact.join(clusters, on="doc_id")
-    # Lazy path (r7): same single-scan shape as the staged path, but
-    # materialized with an eager localCheckpoint instead of a durable
-    # parquet table. The old form re-ran the tokenize+shingle
-    # expression ~4x (exact keying, signatures, both Jaccard-verify
-    # sides) — measured 4.8 -> 3.1 s at sf0.1 (interleaved A/B); the
-    # checkpoint is paid on EVERY invocation (nothing survives the
-    # call), and `stage_dir` remains the durable/resumable variant
-    # for clusters where executor-local blocks are not enough.
+    Single scan: one pass computes the compact
+    (doc_id, md5(text), shingle-array) table — the raw text dropped —
+    and materializes it with an eager ``localCheckpoint``; exact
+    keying, signatures and both sides of the Jaccard verify read it.
+    Re-deriving it per consumer re-ran the tokenize+shingle
+    expression ~4× (measured 4.8 → 3.1 s at sf0.1, interleaved A/B).
+    The checkpoint is paid on every call; nothing survives it."""
     st = (
         fanout_small(documents)
         .select(
@@ -620,7 +536,7 @@ def dedupe_corpus(
         st.select("doc_id", F.col("_h").alias("h"))
     ).select("doc_id", "keep_id", F.col("is_dup").alias("is_exact_dup"))
     verified = minhash_dedup(
-        documents, num_hashes, bands, n, threshold, hash_fn,
+        documents, num_hashes, bands, n, threshold,
         max_bucket=max_bucket,
         shingled=st.select("doc_id", "_sh"),
     ).select("doc_a", "doc_b")
@@ -744,7 +660,6 @@ def winnow_fingerprints(
     w: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "md5",
     chunk_chars: int | None = 4096,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
@@ -808,17 +723,9 @@ def winnow_fingerprints(
         ).select(
             "doc_id", F.substring(t, F.col("_s"), chunk_chars).alias("_t")
         )
-    if hash_fn == "md5":
-        gram_hash = lambda i: F.md5(F.substring(t, i, k))  # noqa: E731
-    elif hash_fn == "xxhash64":
-        # production path (minhash precedent): native int64 hashes,
-        # integer window minima — no 32-char hex strings to allocate
-        # and compare; DuckDB parity not needed/possible here
-        gram_hash = lambda i: F.xxhash64(F.substring(t, i, k))  # noqa: E731
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn!r}")
     hashes = F.transform(
-        F.sequence(F.lit(1), F.length(t) - k + 1), gram_hash
+        F.sequence(F.lit(1), F.length(t) - k + 1),
+        lambda i: F.md5(F.substring(t, i, k)),
     )
     base = norm.select("doc_id", hashes.alias("_hs"))
     # Sliding-window minima via a sparse table (doubling): build
@@ -864,9 +771,7 @@ def winnow_pairs(
     k: int = 16,
     w: int = 8,
     max_bucket: int | None = None,
-    hash_fn: str = "md5",
     chunk_chars: int | None = 4096,
-    stage_dir: str | None = None,
 ) -> DataFrame:
     """Distinct (doc_a, doc_b) document pairs sharing ≥1 winnowing
     fingerprint — i.e. guaranteed to surface every pair sharing a
@@ -875,24 +780,13 @@ def winnow_pairs(
     fingerprints shared by half the corpus (logged, see
     _cap_buckets) — None is the exact/oracle configuration.
 
-    ``stage_dir``: the self-join's two sides otherwise each evaluate
-    the full text-hashing pipeline (Catalyst cannot reuse the
-    exchange once one side broadcasts). At 100 TB stage the compact
-    (doc_id, fp) table to parquet once — MOSS's own fingerprint
-    index — and both sides read it; identical results."""
-    fps = winnow_fingerprints(
-        documents, k, w, hash_fn=hash_fn, chunk_chars=chunk_chars
-    )
-    if stage_dir is not None:
-        path = f"{stage_dir}/winnow_fps.parquet"
-        fps.write.mode("overwrite").parquet(path)
-        fps = documents.sparkSession.read.parquet(path)
-    else:
-        # materialize the compact (doc_id, fp) table once per
-        # invocation (eager — nothing survives the call): both join
-        # sides otherwise re-run the whole text-hashing pipeline
-        # (r7; the durable variant stays ``stage_dir``)
-        fps = fps.localCheckpoint(eager=True)
+    The compact (doc_id, fp) table — MOSS's fingerprint index — is
+    materialized once per call with an eager ``localCheckpoint``
+    (nothing survives the call): the self-join's two sides otherwise
+    each re-run the whole text-hashing pipeline (Catalyst cannot
+    reuse the exchange once one side broadcasts)."""
+    fps = winnow_fingerprints(documents, k, w, chunk_chars=chunk_chars)
+    fps = fps.localCheckpoint(eager=True)
     fps = _cap_buckets(fps, ["fp"], max_bucket, "winnow_pairs")
     a = fps.alias("a")
     b = fps.alias("b")

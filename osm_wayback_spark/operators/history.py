@@ -10,11 +10,19 @@ equi-join with a range predicate:
     → groupBy(feature) → sort_array(collect_list(record))
 
 What the executed plan shows once the join is shuffled (inputs past
-the broadcast threshold; tools/explain_audit.py checks it with
-``spark.sql.autoBroadcastJoinThreshold=-1``):
-- one hash-partitioning Exchange per side, on (element_type, id),
-  above the persisted versions table; the tag-diff window, the
-  SortMergeJoin and the collect groupBy all reuse that partitioning;
+the broadcast threshold; tools/explain_audit.py checks the final
+adaptive plan with ``spark.sql.autoBroadcastJoinThreshold=-1``):
+- over the pipeline's persisted versions table, no Exchange at all:
+  the cache is hash-partitioned on (element_type, id) by
+  ``dedup_versions``' window, and once it is materialized (before the
+  call, or as AQE's first query stage when this join is its first
+  action) the SortMergeJoin, the tag-diff window and the collect
+  groupBy read that partitioning in place. One hash Exchange per side
+  on (element_type, id) appears only in the plan made before a cold
+  cache runs, and AQE drops both;
+- over inputs without that partitioning (uncached or partitioned
+  otherwise), one hash Exchange per side on (element_type, id), which
+  the window, the join and the groupBy all reuse;
 - no skew split of a hot id: the join is a LEFT OUTER join with the
   hot key on its right (versions) side, and AQE's skew-join rule
   splits only the left side of a left outer join (every

@@ -1,17 +1,20 @@
-"""Stage-0 extraction kernel: pages → versions / features / text.
+"""Stage-0 extraction: pages → versions / features / text.
 
 Plays the role of the reference's libosmium parse + osmium export
 (build_lookup_index.cpp:101-103, run.sh:18-20): the one genuinely new
-operator of the graft. A vectorized pandas UDF over ``mapInPandas``
-(Arrow-batched — no per-row Python dispatch from the JVM) that
+operator of the graft. The pipeline's stage 0 is
+``extract_versions_native``, which pulls the page-embedded geometry
+payload (the ``application/osm+json`` island) and parses it into a
+typed ``versions`` row entirely JVM-side (locate/substr +
+``from_json``).
 
-1. extracts canonical visible text from ``html`` — the per-row
-   invariant is that ``extract_text(html) == text`` **byte-identically
-   per url** (BASELINE.json input_hint), and
-2. parses the page-embedded geometry payload (the
-   ``application/osm+json`` island) into a typed ``versions`` row.
+``extract_versions`` is the Arrow-batched ``mapInPandas`` kernel over
+the per-page Python pulls ``extract_island`` and ``extract_text``; it
+is the reference the native kernel is tested against. The text
+invariant is that ``extract_text(html) == text`` **byte-identically
+per url** (BASELINE.json input_hint; ``verify_text_invariant``).
 
-Everything downstream of this kernel is relational (DataFrame ops).
+Everything downstream of extraction is relational (DataFrame ops).
 """
 
 from __future__ import annotations
@@ -39,134 +42,6 @@ def extract_text(html_bytes: bytes) -> str:
     by newline. Must be byte-identical to the ``text`` column."""
     doc = html_bytes.decode("utf-8", errors="replace")
     return "\n".join(_html.unescape(m) for m in _P_RE.findall(doc))
-
-
-def _probe_lxml():
-    """Optional-dependency probe: import the real-HTML parser at call
-    time, never at module import."""
-    try:
-        import lxml.html as lh  # noqa: PLC0415
-
-        return lh
-    except ImportError:
-        return None
-
-
-from html.parser import HTMLParser as _HTMLParser
-
-
-class _PParser(_HTMLParser):
-    """Event half of _PTextParser — module-level so instantiating a
-    parser per page does not also CREATE A CLASS per page (the old
-    closure-class form paid type creation on every document; guide
-    §4.5: construct heavyweight state as rarely as possible)."""
-
-    def __init__(self, outer: "_PTextParser") -> None:
-        super().__init__(convert_charrefs=True)
-        self._outer = outer
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "p":
-            self._outer._flush()
-            self._outer.open = True
-
-    def handle_endtag(self, tag):
-        if tag == "p":
-            self._outer._flush()
-
-    def handle_data(self, data):
-        if self._outer.open:
-            self._outer.cur.append(data)
-
-
-class _PTextParser:
-    """Tolerant <p>-text extraction on the stdlib HTMLParser: handles
-    unclosed tags, attributes, case-insensitive tag names, and the
-    browser rule that a new <p> implicitly closes an open one. Used
-    when lxml is absent (it is stdlib, so the tolerant path always
-    exists)."""
-
-    def __init__(self) -> None:
-        self.open = False
-        self.cur: list[str] = []
-        self.parts: list[str] = []
-        self._parser = _PParser(self)
-
-    def _flush(self) -> None:
-        if self.open:
-            self.parts.append("".join(self.cur))
-        self.open = False
-        self.cur = []
-
-    def run(self, doc: str) -> str:
-        self._parser.feed(doc)
-        self._parser.close()
-        self._flush()  # unclosed trailing <p>
-        return "\n".join(self.parts)
-
-
-def extract_text_tolerant(html_bytes: bytes) -> str:
-    """Real-crawl text extraction: a TOLERANT HTML parse (lxml when
-    installed, else the stdlib html.parser) instead of the regex fast
-    path — survives unclosed/malformed markup, attributes, and case
-    variation that `_P_RE` would mis-slice. On the well-formed
-    synthetic microformat it agrees with ``extract_text`` (pytest-
-    pinned); the regex/locate path stays the default because the
-    synthetic corpus is format-guaranteed and the reference's own
-    extraction (osmium export, run.sh:20) is equally
-    input-format-bound."""
-    doc = html_bytes.decode("utf-8", errors="replace")
-    lh = _probe_lxml()
-    if lh is not None:
-        tree = lh.document_fromstring(doc)
-        return "\n".join(p.text_content() for p in tree.iter("p"))
-    return _PTextParser().run(doc)
-
-
-class _SIslandParser(_HTMLParser):
-    """Tolerant island-script scanner — module-level for the same
-    no-class-per-page reason as _PParser."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=False)
-        self.in_island = False
-        self.body: list[str] = []
-        self.done = False
-
-    def handle_starttag(self, tag, attrs):
-        if self.done or tag != "script":
-            return
-        if dict(attrs).get("type", "").strip() == "application/osm+json":
-            self.in_island = True
-
-    def handle_endtag(self, tag):
-        if tag == "script" and self.in_island:
-            self.in_island = False
-            self.done = True
-
-    def handle_data(self, data):
-        if self.in_island:
-            self.body.append(data)
-
-
-def extract_island_tolerant(html_bytes: bytes) -> dict | None:
-    """Real-crawl island extraction: pull the first
-    ``application/osm+json`` script body with a tolerant HTML parse
-    instead of the exact-marker locate — survives attribute
-    reordering, single quotes, extra attributes and case variation
-    (`<SCRIPT id=x type='application/osm+json'>`), which the
-    `_MARK` fast path requires verbatim. Same fallback-probe pattern
-    as extract_text_tolerant."""
-    doc = html_bytes.decode("utf-8", errors="replace")
-    p = _SIslandParser()
-    p.feed(doc)
-    p.close()
-    if not p.body:
-        return None
-    try:
-        return json.loads("".join(p.body))
-    except json.JSONDecodeError:
-        return None
 
 
 def extract_island(html_bytes: bytes) -> dict | None:
@@ -278,22 +153,17 @@ def extract_versions_native(pages: DataFrame) -> DataFrame:
     )
 
 
-def extract_versions(pages: DataFrame, tolerant: bool = False) -> DataFrame:
+def extract_versions(pages: DataFrame) -> DataFrame:
     """pages → versions (+ geometry_json carried on the row that
     embeds the current geometry). One Arrow pass; narrow (no shuffle).
-
-    ``tolerant=True`` swaps the exact-marker island pull for the
-    tolerant HTML parse (extract_island_tolerant) — the real-crawl
-    configuration where markup isn't format-guaranteed; ~3× slower
-    per page, identical output on well-formed input (pytest-pinned).
+    The reference that ``extract_versions_native`` is tested against.
     """
-    pull = extract_island_tolerant if tolerant else extract_island
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for html_bytes, wts in zip(pdf["html"], pdf["warc_ts"]):
-                isl = None if html_bytes is None else pull(html_bytes)
+                isl = None if html_bytes is None else extract_island(html_bytes)
                 if isl is None or isl.get("element_type") is None:
                     continue
                 geom = isl.get("geometry")

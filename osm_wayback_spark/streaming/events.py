@@ -103,7 +103,6 @@ def streaming_near_dup_flags(
     num_hashes: int = 8,
     bands: int = 4,
     n: int = 3,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Streaming near-dup screening of a document stream against a
     STATIC reference corpus — the shape a continuously-fed training
@@ -131,7 +130,7 @@ def streaming_near_dup_flags(
     """
     from ..operators.dedup import band_buckets, minhash_signatures
 
-    stream_sigs = minhash_signatures(documents, num_hashes, n, hash_fn)
+    stream_sigs = minhash_signatures(documents, num_hashes, n)
     stream_buckets = band_buckets(stream_sigs, num_hashes, bands)
     corpus_buckets = band_buckets(
         corpus_signatures, num_hashes, bands, id_out="corpus_doc_id"

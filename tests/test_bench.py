@@ -8,6 +8,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import __spark_entry__ as entry
+
 REPO = Path(__file__).resolve().parent.parent
 
 
@@ -24,8 +26,12 @@ def test_bench_smoke_fits_host():
     for key in ("metric", "value", "unit", "queries", "queries_passes", "sf",
                 "pages_per_sec", "tiles_per_sec", "host", "scaling"):
         assert key in result, key
-    for leaf in ("pipeline_e2e", "skew_history"):
+    for leaf in ("pipeline_e2e", "skew_history", "dedupe_corpus"):
         assert leaf in result["queries"], leaf
+    # every other leaf times one oracle query, not an operator variant
+    oracle = set(entry.queries())
+    extra = set(result["queries"]) - {"pipeline_e2e", "skew_history"} - oracle
+    assert not extra, sorted(extra)
     assert all(wall > 0 for wall in result["queries"].values()), result["queries"]
     assert result["sf"] == 0.001
     assert result["host"]["nproc"] == len(os.sched_getaffinity(0))

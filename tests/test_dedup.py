@@ -59,30 +59,6 @@ def test_lsh_finds_exact_and_near_dups(docs):
     assert (4, 5) not in pairs  # unrelated docs shouldn't
 
 
-def test_minhash_xxhash64_fast_path(docs):
-    """The native-hash production path: long signatures, identical
-    texts get identical signatures, and the downstream LSH banding
-    behaves the same (identical docs collide in every band, unrelated
-    docs don't)."""
-    sigs = minhash_signatures(docs, num_hashes=12, hash_fn="xxhash64")
-    rows = {r.doc_id: r for r in sigs.collect()}
-    assert all(
-        isinstance(getattr(rows[1], f"sig_{i}"), int) for i in range(12)
-    )
-    for i in range(12):
-        assert getattr(rows[1], f"sig_{i}") == getattr(rows[2], f"sig_{i}")
-    # signatures of unrelated docs differ somewhere
-    assert any(
-        getattr(rows[4], f"sig_{i}") != getattr(rows[5], f"sig_{i}")
-        for i in range(12)
-    )
-    pairs = {(r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sigs, 12, 4).collect()}
-    assert (1, 2) in pairs
-    assert (4, 5) not in pairs
-    with pytest.raises(ValueError):
-        minhash_signatures(docs, hash_fn="sha1")
-
-
 def test_minhash_dedup_verified_jaccard(docs):
     got = {(r.doc_a, r.doc_b): r.jaccard for r in minhash_dedup(docs, threshold=0.3).collect()}
     assert got[(1, 2)] == 1.0
@@ -248,76 +224,6 @@ def test_dedupe_corpus_max_bucket_engages(spark, caplog):
     assert by_id[1].is_exact_dup and by_id[1].keep_id == 0
     # healthy buckets still pair
     assert by_id[1001].component == 1000
-
-
-def test_dedupe_corpus_staged_equals_lazy(spark, tmp_path):
-    """stage_dir is the single-scan lever: one pass writes the compact
-    (doc_id, md5, shingles) table (raw text DROPPED) and every stage
-    reads it — results must be IDENTICAL to the lazy DAG, on the real
-    sf0.001 documents."""
-    from osm_wayback_spark.operators.dedup import dedupe_corpus
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    key = lambda r: r.doc_id  # noqa: E731
-    lazy = sorted(
-        dedupe_corpus(docs, num_hashes=8, threshold=0.3).collect(), key=key
-    )
-    staged = sorted(
-        dedupe_corpus(
-            docs, num_hashes=8, threshold=0.3, stage_dir=str(tmp_path)
-        ).collect(),
-        key=key,
-    )
-    assert lazy == staged
-    # the staged table exists and carries no raw text
-    st = spark.read.parquet(str(tmp_path / "dedup_stage_n3.parquet"))
-    assert set(st.columns) == {"doc_id", "_h", "_sh"}
-    assert st.count() == docs.count()
-
-
-def test_dedupe_corpus_stage_reuse(spark, tmp_path):
-    """stage_reuse resumes from an existing stage table instead of
-    rewriting it (restart lever; also the bench's split-timing path):
-    identical output, and the staged parquet is NOT rewritten."""
-    import os
-
-    from osm_wayback_spark.operators.dedup import dedupe_corpus, stage_corpus
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = stage_corpus(docs, str(tmp_path))
-    mtime = os.path.getmtime(os.path.join(path, "_SUCCESS"))
-    key = lambda r: r.doc_id  # noqa: E731
-    reused = sorted(
-        dedupe_corpus(
-            docs, num_hashes=8, threshold=0.3,
-            stage_dir=str(tmp_path), stage_reuse=True,
-        ).collect(),
-        key=key,
-    )
-    lazy = sorted(
-        dedupe_corpus(docs, num_hashes=8, threshold=0.3).collect(), key=key
-    )
-    assert reused == lazy
-    assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime
-
-
-def test_jaccard_pairs_staged_shingles_parity(spark, docs):
-    """jaccard_pairs(shingled=...) over a pre-shingled frame must
-    equal the raw-text path (the dedupe_corpus stage table shape)."""
-    from osm_wayback_spark.functions.text import shingles as sh_fn
-
-    shingled = docs.select("doc_id", sh_fn(F.col("text"), 3).alias("_sh"))
-    raw = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(docs, threshold=0.2, max_df=None).collect()
-    }
-    staged = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in jaccard_pairs(
-            docs, threshold=0.2, max_df=None, shingled=shingled
-        ).collect()
-    }
-    assert raw == staged and raw
 
 
 def test_band_buckets_shared_by_batch_and_streaming(docs):
@@ -494,20 +400,17 @@ def test_winnow_chunked_equals_unchunked(spark):
         "doc_id long, text string",
     )
     docs = real.select("doc_id", "text").unionByName(synth)
-    for hash_fn in ("md5", "xxhash64"):
-        unchunked = {
-            (r.doc_id, r.fp)
-            for r in winnow_fingerprints(
-                docs, k, w, hash_fn=hash_fn, chunk_chars=None
-            ).collect()
-        }
-        chunked = {
-            (r.doc_id, r.fp)
-            for r in winnow_fingerprints(
-                docs, k, w, hash_fn=hash_fn, chunk_chars=2 * (k + w - 1)
-            ).collect()
-        }
-        assert chunked == unchunked, hash_fn
+    unchunked = {
+        (r.doc_id, r.fp)
+        for r in winnow_fingerprints(docs, k, w, chunk_chars=None).collect()
+    }
+    chunked = {
+        (r.doc_id, r.fp)
+        for r in winnow_fingerprints(
+            docs, k, w, chunk_chars=2 * (k + w - 1)
+        ).collect()
+    }
+    assert chunked == unchunked
     p_un = {
         (r.doc_a, r.doc_b)
         for r in winnow_pairs(docs, k, w, chunk_chars=None).collect()
@@ -525,23 +428,9 @@ def test_winnow_chunked_equals_unchunked(spark):
         winnow_fingerprints(docs, k, w, chunk_chars=k + w).collect()
 
 
-def test_winnow_staged_fps_equal_lazy(spark, tmp_path):
-    """stage_dir writes the (doc_id, fp) table once and self-joins
-    the parquet — pair set identical to the lazy double-evaluation."""
-    from osm_wayback_spark.operators.dedup import winnow_pairs
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    lazy = {(r.doc_a, r.doc_b) for r in winnow_pairs(docs, 8, 4).collect()}
-    staged = {
-        (r.doc_a, r.doc_b)
-        for r in winnow_pairs(docs, 8, 4, stage_dir=str(tmp_path)).collect()
-    }
-    assert staged == lazy
-    st = spark.read.parquet(str(tmp_path / "winnow_fps.parquet"))
-    assert set(st.columns) == {"doc_id", "fp"}
-
-
-def test_winnow_xxhash_path_keeps_guarantee(spark):
+def test_winnow_pairs_keeps_guarantee(spark):
+    """Two documents quoting one verbatim run of >= w+k-1 chars pair;
+    an unrelated document pairs with neither."""
     from osm_wayback_spark.operators.dedup import winnow_pairs
 
     shared = "a long verbatim boilerplate run that both documents quote "
@@ -553,11 +442,9 @@ def test_winnow_xxhash_path_keeps_guarantee(spark):
         ],
         "doc_id long, text string",
     )
-    for fn in ("md5", "xxhash64"):
-        pairs = {(r.doc_a, r.doc_b)
-                 for r in winnow_pairs(docs, k=8, w=4, hash_fn=fn).collect()}
-        assert (1, 2) in pairs, fn
-        assert not any(3 in p for p in pairs), fn
+    pairs = {(r.doc_a, r.doc_b) for r in winnow_pairs(docs, k=8, w=4).collect()}
+    assert (1, 2) in pairs
+    assert not any(3 in p for p in pairs)
 
 
 def test_winnow_sparse_table_window_minima_match_reference(spark):

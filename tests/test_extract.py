@@ -17,83 +17,6 @@ def test_text_extraction_byte_identical_local():
         assert extract_text(html) == text  # byte-identical per url
 
 
-def test_tolerant_parser_agrees_on_synthetic():
-    """extract_text_tolerant must agree with the regex fast path on
-    the format-guaranteed synthetic corpus (modulo the parser's
-    whitespace-exactness — the synthetic corpus has none to lose)."""
-    from osm_wayback_spark.sources.extract import extract_text_tolerant
-
-    pdf = synth_pages_local(SF)
-    for html, text in zip(pdf["html"][:200], pdf["text"][:200]):
-        assert extract_text_tolerant(html) == text
-
-
-def test_tolerant_parser_handles_malformed_html():
-    """Malformed-but-parseable real-crawl markup: unclosed <p>,
-    attributes, uppercase tags, implicit close by a following <p>.
-    The regex fast path mis-slices all of these; the tolerant path
-    must recover the paragraph text."""
-    from osm_wayback_spark.sources.extract import extract_text_tolerant
-
-    doc = (
-        b"<html><body>"
-        b'<P CLASS="lead">first &amp; foremost'  # unclosed + attrs + entity
-        b"<p>second one</p>"
-        b"<div>ignored</div>"
-        b"<p>third trailing"  # unclosed at EOF
-        b"</body></html>"
-    )
-    got = extract_text_tolerant(doc)
-    assert got.splitlines() == ["first & foremost", "second one", "third trailing"]
-
-
-def test_tolerant_parser_lxml_path():
-    """When lxml is installed the tolerant path uses it; skip
-    otherwise (the stdlib fallback is covered above)."""
-    import pytest
-
-    from osm_wayback_spark.sources.extract import _probe_lxml, extract_text_tolerant
-
-    if _probe_lxml() is None:
-        pytest.skip("lxml not installed")
-    doc = b"<p>alpha<p>beta</p>"
-    assert extract_text_tolerant(doc).splitlines() == ["alpha", "beta"]
-
-
-def test_tolerant_island_extraction():
-    """Tolerant island pull: agrees with the exact-marker path on the
-    synthetic corpus AND survives attribute reordering / single
-    quotes / extra attributes / uppercase tags that the verbatim
-    `_MARK` locate cannot."""
-    from osm_wayback_spark.sources.extract import extract_island_tolerant
-
-    pdf = synth_pages_local(SF)
-    for html in pdf["html"][:100]:
-        assert extract_island_tolerant(html) == extract_island(html)
-
-    messy = (
-        b"<html><body><p>x</p>"
-        b"<SCRIPT id=geo type='application/osm+json' async>"
-        b'{"element_type":"node","id":7,"version":1,"ts":5}'
-        b"</SCRIPT></body></html>"
-    )
-    assert extract_island(messy) is None  # fast path: marker mismatch
-    isl = extract_island_tolerant(messy)
-    assert isl == {"element_type": "node", "id": 7, "version": 1, "ts": 5}
-    assert extract_island_tolerant(b"<p>no island</p>") is None
-
-
-def test_extract_versions_tolerant_matches_fast(spark):
-    """The distributed tolerant kernel produces the same versions
-    table as the fast path on the format-guaranteed corpus."""
-    pages = synth_pages(spark, SF)
-    fast = extract_versions(pages).orderBy("element_type", "id", "version")
-    tol = extract_versions(pages, tolerant=True).orderBy(
-        "element_type", "id", "version"
-    )
-    assert fast.collect() == tol.collect()
-
-
 def test_island_parses_every_page():
     pdf = synth_pages_local(SF)
     for html in pdf["html"]:
@@ -214,15 +137,26 @@ def test_dedup_versions_last_write_wins(spark):
 def test_native_extraction_parses_each_island_once(spark):
     """The optimized plan holds one from_json and one regexp_extract:
     the validity filter must not be pushed below the parse, where it
-    would re-evaluate the island chain and both parses per page."""
-    import re
+    would re-evaluate the island chain and both parses per page.
+    Counted over the expression trees of every plan node."""
+    from collections import Counter
 
     from osm_wayback_spark.sources.extract import extract_versions_native
 
     df = extract_versions_native(synth_pages(spark, SF))
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert len(re.findall(r"\bfrom_json\(", plan)) == 1
-    assert len(re.findall(r"\bregexp_extract\(", plan)) == 1
+    nodes = [df._jdf.queryExecution().optimizedPlan()]
+    exprs, names = [], Counter()
+    while nodes:
+        node = nodes.pop()
+        for seq, todo in ((node.expressions(), exprs), (node.children(), nodes)):
+            todo += [seq.apply(i) for i in range(seq.size())]
+    while exprs:
+        expr = exprs.pop()
+        names[expr.getClass().getSimpleName()] += 1
+        kids = expr.children()
+        exprs += [kids.apply(i) for i in range(kids.size())]
+    assert names["JsonToStructs"] == 1, names
+    assert names["RegExpExtract"] == 1, names
 
 
 def test_native_matches_arrow_on_edge_case_pages(spark):
@@ -263,6 +197,8 @@ def test_native_matches_arrow_on_edge_case_pages(spark):
         f"{_MARK}{isl(6)}</script><p>b</p>{_MARK}{isl(7)}</script>",  # two
         None,  # null html
         f"{_MARK}</script>",  # empty island
+        # a non-verbatim marker: both kernels need the exact bytes
+        f"<p>x</p><SCRIPT id=geo type='application/osm+json' async>{isl(8)}</SCRIPT>",
     ]
     ts = datetime.datetime(2024, 1, 1)
     rows = [

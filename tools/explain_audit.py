@@ -1,7 +1,8 @@
 """Dump `explain("formatted")` physical plans for the headline
 operators into PLANS.md. Every section checks that its plan has no
-Python row UDF (`BatchEvalPython`); the history join also checks, on
-the plan tree, its one hash Exchange per side. The other properties a
+Python row UDF (`BatchEvalPython`). The history join section first
+runs its frame, prints the final adaptive plan, and checks on that
+plan tree the join and the shuffles that ran. The other properties a
 section lists (broadcast joins, pushed filters, WindowGroupLimit, ...)
 are hand-written notes, printed as "NOTE (not checked)" and not
 verified against the plan. Re-run after plan-affecting changes:
@@ -28,39 +29,43 @@ def plan_of(df) -> str:
 
 
 def _nodes(node) -> list:
-    """Every node of a JVM physical-plan subtree (under AQE: the
-    current plan, before any query stage runs)."""
+    """Every node of a JVM physical-plan subtree, read through AQE: the
+    current adaptive plan and the plan inside each query stage. After
+    an action on the frame, that is the plan that ran."""
     out, todo = [], [node]
     while todo:
         n = todo.pop()
         if n.nodeName() == "AdaptiveSparkPlan":
             n = n.executedPlan()
         out.append(n)
+        if n.nodeName().endswith("QueryStage"):
+            todo.append(n.plan())
+            continue
         kids = n.children()
         todo += [kids.apply(i) for i in range(kids.size())]
     return out
 
 
-def one_hash_exchange_per_side(df, keys: tuple[str, ...]) -> bool:
-    """The plan of a two-sided join shuffles exactly twice, each
-    Exchange hash-partitioning on ``keys`` above a cached-table scan."""
+def sort_merge_join_on_cached_partitioning(df, keys: tuple[str, ...]) -> bool:
+    """Call after ``df`` ran. Its final plan has one join, a
+    SortMergeJoin, and no shuffle: every cached-table scan under it is
+    already hash-partitioned on ``keys``."""
 
-    def on_keys(ex) -> bool:
-        part = ex.outputPartitioning()
+    def on_keys(scan) -> bool:
+        part = scan.outputPartitioning()
         if part.getClass().getSimpleName() != "HashPartitioning":
             return False
         exprs = part.expressions()
         return tuple(exprs.apply(i).name() for i in range(exprs.size())) == keys
 
-    def over_cache(ex) -> bool:
-        return any(n.nodeName() == "InMemoryTableScan" for n in _nodes(ex))
-
-    exchanges = [
-        n for n in _nodes(df._jdf.queryExecution().executedPlan())
-        if n.nodeName() == "Exchange"
-    ]
-    return len(exchanges) == 2 and all(
-        on_keys(ex) and over_cache(ex) for ex in exchanges
+    nodes = _nodes(df._jdf.queryExecution().executedPlan())
+    names = [n.nodeName() for n in nodes]
+    scans = [n for n in nodes if n.nodeName() == "InMemoryTableScan"]
+    return (
+        [x for x in names if x.endswith("Join")] == ["SortMergeJoin"]
+        and not any(x in ("Exchange", "ReusedExchange") for x in names)
+        and bool(scans)
+        and all(on_keys(scan) for scan in scans)
     )
 
 
@@ -93,20 +98,31 @@ def main() -> None:
     spark.conf.set(threshold, "-1")
     try:
         hist = add_history(t["features"], t["versions"])
+        # run it (the first action over the versions cache), so the
+        # printed plan and the CHECK are the final adaptive plan
+        hist.collect()
         add(
             "history join (J1/W1/A1): features ⋈ versions → tag diff → "
-            "collect, shuffled (autoBroadcastJoinThreshold=-1)",
+            "collect, shuffled (autoBroadcastJoinThreshold=-1), final plan",
             hist,
             [
                 "a hot id is not skew-split: the join is a left outer join "
                 "with the hot key on its right (versions) side, so its "
                 "collect_list runs on one reducer",
+                "the plan made before the versions cache is materialized "
+                "has one hash Exchange per side on (element_type, id); "
+                "AQE drops both once the cache stage reports its "
+                "partitioning",
             ],
             [(
-                "ONE hash Exchange per side on (element_type, id), above "
-                "the InMemoryTableScan: the latest-per-entity window, "
-                "tag-diff window, join and collect groupBy all reuse it",
-                one_hash_exchange_per_side(hist, ("element_type", "id")),
+                "ran as a SortMergeJoin with no Exchange above the cached "
+                "versions table: the cache is hash-partitioned on "
+                "(element_type, id) by its own dedup window, and the "
+                "latest-per-entity window, tag-diff window, join and "
+                "collect groupBy all read it in place",
+                sort_merge_join_on_cached_partitioning(
+                    hist, ("element_type", "id")
+                ),
             )],
         )
     finally:
