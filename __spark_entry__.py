@@ -370,6 +370,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation recall-gated in pytest, re-rank oracle-checked)."""
     from osm_wayback_spark.operators.similarity import (
         ann_ivf_candidates,
+        build_ivf_index,
         rerank_topk,
     )
 
@@ -377,9 +378,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20)
     os.makedirs(_ORACLE_DIR, exist_ok=True)
     path = f"{_ORACLE_DIR}/ann_ivf_cands.parquet"
-    ann_ivf_candidates(
-        emb, queries, k=5, n_centroids=16, nprobe=6
-    ).write.mode("overwrite").parquet(path)
+    index = build_ivf_index(emb, n_centroids=16)
+    ann_ivf_candidates(queries, index, k=5, nprobe=6).write.mode(
+        "overwrite"
+    ).parquet(path)
     out = rerank_topk(emb, queries, spark.read.parquet(path), k=5)
     return out.select(
         "query_id", "vec_id", "cosine", F.col("rank").cast("bigint").alias("rank")
@@ -393,7 +395,9 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pruned candidate set is written to parquet and DuckDB
     re-ranks the SAME candidates."""
     from osm_wayback_spark.operators.similarity import (
-        ann_ivf_indexed_candidates,
+        ann_ivf_candidates,
+        build_ivf_index,
+        read_ivf_index,
         rerank_topk,
         write_ivf_index,
     )
@@ -402,10 +406,10 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20)
     os.makedirs(_ORACLE_DIR, exist_ok=True)
     idx = f"{_ORACLE_DIR}/ivf_index"
-    write_ivf_index(emb, idx, n_centroids=16, iters=3)
+    write_ivf_index(build_ivf_index(emb, n_centroids=16, iters=3), idx)
     path = f"{_ORACLE_DIR}/ann_ivf_indexed_cands.parquet"
-    ann_ivf_indexed_candidates(
-        emb, queries, idx, k=5, nprobe=6
+    ann_ivf_candidates(
+        queries, read_ivf_index(spark, idx), k=5, nprobe=6
     ).write.mode("overwrite").parquet(path)
     out = rerank_topk(emb, queries, spark.read.parquet(path), k=5)
     return out.select(
@@ -414,14 +418,15 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN (operators/similarity.ann_ivf_pq): coarse nprobe
-    cells → asymmetric-distance ranking from m-byte PQ codes → exact
-    re-rank of the ADC-best. Same materialized-candidates oracle
+    """IVF-PQ ANN (operators/similarity.ann_ivf_pq_candidates): coarse
+    nprobe cells → asymmetric-distance ranking from m-byte PQ codes →
+    exact re-rank of the ADC-best. Same materialized-candidates oracle
     pattern: the ADC-refined set is written to parquet and DuckDB
     exact-re-ranks the SAME candidates; PQ ranking quality itself is
     the pytest recall gate (test_ann_ivf_pq_recall)."""
     from osm_wayback_spark.operators.similarity import (
         ann_ivf_pq_candidates,
+        build_ivf_index,
         rerank_topk,
     )
 
@@ -429,9 +434,10 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 20)
     os.makedirs(_ORACLE_DIR, exist_ok=True)
     path = f"{_ORACLE_DIR}/ann_ivf_pq_cands.parquet"
-    ann_ivf_pq_candidates(
-        emb, queries, k=5, n_centroids=16, nprobe=6, m=8, ksub=16, refine=4
-    ).write.mode("overwrite").parquet(path)
+    index = build_ivf_index(emb, n_centroids=16, m=8, ksub=16)
+    ann_ivf_pq_candidates(queries, index, k=5, nprobe=6, refine=4).write.mode(
+        "overwrite"
+    ).parquet(path)
     out = rerank_topk(emb, queries, spark.read.parquet(path), k=5)
     return out.select(
         "query_id", "vec_id", "cosine", F.col("rank").cast("bigint").alias("rank")
@@ -445,19 +451,21 @@ def q_ann_ivfpq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pattern: DuckDB exact-re-ranks the SAME ADC-refined
     set."""
     from osm_wayback_spark.operators.similarity import (
-        ann_ivfpq_indexed_candidates,
+        ann_ivf_pq_candidates,
+        build_ivf_index,
+        read_ivf_index,
         rerank_topk,
-        write_ivfpq_index,
+        write_ivf_index,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
     os.makedirs(_ORACLE_DIR, exist_ok=True)
     idx = f"{_ORACLE_DIR}/ivfpq_index"
-    write_ivfpq_index(emb, idx, n_centroids=16, m=8, ksub=16)
+    write_ivf_index(build_ivf_index(emb, n_centroids=16, m=8, ksub=16), idx)
     path = f"{_ORACLE_DIR}/ann_ivfpq_indexed_cands.parquet"
-    ann_ivfpq_indexed_candidates(
-        emb, queries, idx, k=5, nprobe=6, refine=4
+    ann_ivf_pq_candidates(
+        queries, read_ivf_index(spark, idx), k=5, nprobe=6, refine=4
     ).write.mode("overwrite").parquet(path)
     out = rerank_topk(emb, queries, spark.read.parquet(path), k=5)
     return out.select(

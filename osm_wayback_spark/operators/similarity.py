@@ -3,21 +3,35 @@
 - ``cosine_topk``: exact brute-force top-k for a broadcast query set —
   the correctness baseline. Dot products via native higher-order
   functions (zip_with + aggregate): stays JVM-side.
-- ``ann_lsh``: random-hyperplane LSH (multi-table + multiprobe) — the
-  high-recall scale path. Hyperplanes are derived deterministically
-  from md5 so every executor (and a re-run) builds identical planes
-  without shipping state.
-- ``ann_ivf``: inverted-file ANN (Spark-native Lloyd k-means coarse
-  quantizer + nprobe cell search) — the second scale path; candidate
-  volume is bounded by nprobe/n_centroids of the corpus.
 
-Both approximate paths guarantee k results per query (exact fallback
-for starved queries) and carry pytest recall gates vs cosine_topk.
+Three approximate paths generate (query_id, vec_id) candidates, and
+``rerank_topk(embeddings, queries, candidates, k)`` turns any of them
+into the exact-cosine top-k:
+
+- ``ann_lsh_candidates``: random-hyperplane LSH (multi-table +
+  multiprobe) — the high-recall scale path. Hyperplanes are derived
+  deterministically from md5 so every executor (and a re-run) builds
+  identical planes without shipping state.
+- ``ann_ivf_candidates``: inverted-file ANN — each query probes its
+  nprobe nearest cells of an ``IvfIndex`` (Spark-native spherical
+  k-means cells), so candidate volume is bounded by nprobe/n_centroids
+  of the corpus. The index is built in memory (``build_ivf_index``) or
+  written and read back (``write_ivf_index`` / ``read_ivf_index``);
+  the probe is the same code either way.
+- ``ann_ivf_pq_candidates``: IVF-PQ — the IVF candidates of an index
+  built with product-quantization codes, ranked by asymmetric distance
+  from their m-byte codes; only the refine·k best reach the re-rank.
+
+All three guarantee k results per query (one bounded widening round,
+then an exact full-corpus fallback for starved queries, see
+``_guarantee_k``) and carry pytest recall gates vs cosine_topk.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -145,14 +159,14 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
 
 
 def _guarantee_k(
-    embeddings: DataFrame,
+    corpus: DataFrame,
     queries: DataFrame,
     cands: DataFrame,
     k: int,
     escalate=None,
 ) -> DataFrame:
     """Guaranteed-k augmentation for queries with fewer than k
-    candidates (empty/sparse buckets):
+    candidates (empty/sparse buckets or cells):
 
     1. ``escalate`` (when given): ONE bounded widening round — a
        callable (starved queries DF, same (vec_id, embedding) shape)
@@ -160,7 +174,10 @@ def _guarantee_k(
        doubled nprobe). Starved queries sated by the wider set use it.
     2. Remaining starved queries get the FULL corpus as candidates —
        the exact broadcast path, expressed as candidate rows so the
-       re-rank stays one shape.
+       re-rank stays one shape. ``corpus`` is the frame the
+       candidates came from (vec_id plus every other column the
+       candidates carry), so each part of the union has the
+       candidates' columns.
 
     ``cands`` is persisted while the counts + joins run (no recompute
     of the bucket-join DAG — the round-2 advice finding), the final
@@ -195,10 +212,9 @@ def _guarantee_k(
             )
         starved_ids = starved.select(F.col("vec_id").alias("query_id"))
         full = (
-            embeddings.select("vec_id")
-            .crossJoin(F.broadcast(starved_ids))
+            corpus.crossJoin(F.broadcast(starved_ids))
             .filter(F.col("vec_id") != F.col("query_id"))
-            .select("query_id", "vec_id")
+            .select(*cands.columns)
         )
         parts.append(full)
         out = parts[0]
@@ -235,17 +251,25 @@ def ann_lsh_candidates(
     tables: int = 8,
     probes: int = 1,
     fallback: bool = True,
-    escalate: bool = True,
 ) -> DataFrame:
     """LSH candidate generation → distinct (query_id, vec_id): the
     query's bucket neighborhood across ``tables`` independent hash
     tables (OR-amplification), plus radius-``probes`` multiprobe
-    buckets (all ≤ probes-bit flips). With ``fallback`` the set is
-    augmented so every query has ≥ min(k, N-1) candidates
-    (see _guarantee_k); ``escalate`` inserts one bounded widening
-    round (probe radius doubled) for starved queries before the
-    full-corpus exact fallback — at planet scale the doubled-radius
-    bucket probe is orders cheaper than a corpus sweep."""
+    buckets (all ≤ probes-bit flips).
+
+    Recall levers (defaults tuned so recall@5 ≥ 0.8 on the driver
+    embeddings, pytest-enforced): ``tables`` (one matmul computes all
+    tables' bits) and ``probes`` (native bitwiseXOR explode). With
+    ``fallback`` the set is augmented so every query has ≥ min(k, N-1)
+    candidates (see _guarantee_k): one bounded widening round (probe
+    radius doubled) for starved queries, then the full-corpus exact
+    fallback — at planet scale the doubled-radius bucket probe is
+    orders cheaper than a corpus sweep.
+
+    ``fallback=True`` is EAGER — the candidate set is materialized via
+    a reliable checkpoint at call time (Spark jobs run before this
+    returns). On a non-local master a shared checkpoint dir must be
+    configured (session.ensure_checkpoint_dir)."""
     c = lsh_bucket_rows(embeddings, n_planes, tables).select("vec_id", "bucket")
     q = lsh_bucket_rows(queries, n_planes, tables).select(
         F.col("vec_id").alias("query_id"), "bucket"
@@ -271,48 +295,15 @@ def ann_lsh_candidates(
     if not fallback:
         return cands
 
-    esc = None
-    if escalate:
-        def esc(starved):
-            return ann_lsh_candidates(
-                embeddings, starved, k, n_planes, tables,
-                probes=max(probes, 1) * 2, fallback=False,
-            )
+    def esc(starved):
+        return ann_lsh_candidates(
+            embeddings, starved, k, n_planes, tables,
+            probes=max(probes, 1) * 2, fallback=False,
+        )
 
-    return _guarantee_k(embeddings, queries, cands, k, escalate=esc)
-
-
-def ann_lsh(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_planes: int = 6,
-    tables: int = 8,
-    probes: int = 1,
-    fallback: bool = True,
-    escalate: bool = True,
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH
-    bucket neighborhood, exact cosine re-rank within. → (query_id,
-    vec_id, cosine, rank). The scale path when the query side is too
-    big to broadcast (bucket equi-join instead of cross join).
-
-    Recall levers (defaults tuned so recall@5 ≥ 0.8 on the driver
-    embeddings, pytest-enforced): ``tables`` (OR-amplification, one
-    matmul computes all tables' bits), ``probes`` (multiprobe radius,
-    native bitwiseXOR explode), ``fallback`` (guaranteed k results
-    per query — one doubled-radius ``escalate`` round, then
-    full-corpus candidates for queries still starved).
-
-    Note: ``fallback=True`` is EAGER — the candidate set is
-    materialized via a reliable checkpoint at call time (Spark jobs
-    run before this returns; see _guarantee_k). On a non-local
-    master a shared checkpoint dir must be configured
-    (session.ensure_checkpoint_dir)."""
-    cands = ann_lsh_candidates(
-        embeddings, queries, k, n_planes, tables, probes, fallback, escalate
+    return _guarantee_k(
+        embeddings.select("vec_id"), queries, cands, k, escalate=esc
     )
-    return rerank_topk(embeddings, queries, cands, k)
 
 
 def near_dup_candidates(
@@ -427,7 +418,6 @@ def train_ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
     iters: int = 3,
-    sample_fraction: float | None = None,
     max_train: int | None = 100_000,
 ) -> np.ndarray:
     """Lloyd's k-means, Spark-native: per iteration one pass assigns
@@ -444,8 +434,7 @@ def train_ivf_centroids(
     (bit-identical centroids); the capped training set is persisted
     across iterations (≤ max_train rows, never the corpus).
     Full-corpus training is the explicit opt-in ``max_train=None``.
-    ``sample_fraction`` (fraction-based sampling) takes precedence
-    when set. Assignment of the full corpus stays exact either way.
+    Assignment of the full corpus stays exact either way.
 
     Spherical k-means: vectors and centroids live on the UNIT
     SPHERE, centroid = normalize(mean of unit members). The
@@ -456,15 +445,10 @@ def train_ivf_centroids(
     where plain L2 k-means measured 0.52 (test_ivf_spherical_beats_l2
     keeps ≥ 0.9).
     """
-    data = embeddings
-    persisted = False
-    if sample_fraction:
-        data = data.sample(fraction=sample_fraction, seed=42)
-    else:
-        data = _ivf_train_data(data, max_train)
-        if data is not embeddings:
-            data = data.persist()
-            persisted = True
+    data = _ivf_train_data(embeddings, max_train)
+    persisted = data is not embeddings
+    if persisted:
+        data = data.persist()
     centroids = _unit_rows(_init_centroids(data, n_centroids))
     for _ in range(iters):
         assigned = with_ivf_cell(data, centroids)
@@ -490,258 +474,182 @@ def train_ivf_centroids(
     return centroids
 
 
+def _cell_scores(cent: np.ndarray, emb: pd.Series) -> np.ndarray:
+    """(rows × cells) distance scores of an Arrow batch of embeddings
+    against the unit-row centroid matrix ``cent``, lower = nearer.
+    Rows are unit-normalized, so with unit centroids the L2 argmin
+    formula IS the cosine argmax."""
+    mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
+    # argmin ||x-c||² = argmin (||c||² - 2 x·c)
+    return (cent * cent).sum(axis=1)[None, :] - 2.0 * (mat @ cent.T)
+
+
 def with_ivf_cell(embeddings: DataFrame, centroids: np.ndarray) -> DataFrame:
-    """+ ``cell``: index of the nearest centroid, one Arrow matmul
-    per batch; centroids ship in the task closure (small). Nearest by
-    cosine — rows AND centroids are unit-normalized here (idempotent
-    for trained centroids; essential for user-supplied raw centroids,
-    which would otherwise be scored unnormalized through the L2
-    argmin formula — neither L2- nor cosine-nearest). With unit
-    centroids the L2 argmin formula IS the cosine argmax."""
+    """+ ``cell``: index of the nearest centroid by cosine, one Arrow
+    matmul per batch; centroids ship in the task closure (small).
+    Centroids are unit-normalized here (idempotent for trained
+    centroids; essential for user-supplied raw centroids, which would
+    otherwise be scored unnormalized through the L2 argmin formula —
+    neither L2- nor cosine-nearest)."""
     cent = _unit_rows(centroids.astype(np.float64))
-    cnorm2 = (cent * cent).sum(axis=1)
 
     @pandas_udf("int")
     def cell_udf(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype="int32")
-        mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
-        # argmin ||x-c||² = argmin (||c||² - 2 x·c)
-        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
-        return pd.Series(scores.argmin(axis=1).astype("int32"))
+        return pd.Series(_cell_scores(cent, emb).argmin(axis=1).astype("int32"))
 
     return embeddings.withColumn("cell", cell_udf("embedding"))
 
 
-def _probe_udf(cent: np.ndarray, n_probe: int):
-    """pandas UDF: embedding → its ``n_probe`` cosine-nearest cells of
-    the unit-row centroid matrix ``cent`` (nearest first)."""
-    cnorm2 = (cent * cent).sum(axis=1)
+class IvfIndex(NamedTuple):
+    """An IVF (inverted-file) index: unit ``centroids`` (n_centroids ×
+    dim), PQ ``codebooks`` (m × ksub × dim/m; None for plain IVF) and
+    ``assignments(vec_id, cell[, codes])``, one row per corpus vector.
+    build_ivf_index makes it in memory (lazy assignments);
+    read_ivf_index reads a written one back (a cell-partitioned
+    parquet scan). ann_ivf_candidates probes either the same way."""
+
+    centroids: np.ndarray
+    codebooks: np.ndarray | None
+    assignments: DataFrame
+
+
+def build_ivf_index(
+    embeddings: DataFrame,
+    n_centroids: int = 16,
+    iters: int = 3,
+    m: int | None = None,
+    ksub: int = 16,
+) -> IvfIndex:
+    """Train the coarse quantizer (train_ivf_centroids) and, when ``m``
+    is given, ``m`` PQ codebooks of ``ksub`` entries
+    (train_pq_codebooks); both train eagerly on a bounded sample. The
+    assignments stay lazy — every consumer re-assigns the corpus — so
+    an index probed more than once is written (write_ivf_index) and
+    read back."""
+    centroids = train_ivf_centroids(embeddings, n_centroids, iters)
+    assigned = with_ivf_cell(embeddings, centroids)
+    cols = ["vec_id", "cell"]
+    codebooks = None
+    if m is not None:
+        codebooks = train_pq_codebooks(embeddings, m, ksub)
+        assigned = pq_encode(assigned, codebooks)
+        cols.append("codes")
+    return IvfIndex(centroids, codebooks, assigned.select(*cols))
+
+
+def write_ivf_index(index: IvfIndex, path: str) -> None:
+    """Persist ``index`` — training and corpus assignment are paid per
+    index BUILD, not per query batch:
+
+        <path>/centroids.json        centroids (+ PQ codebooks), one
+                                     text row
+        <path>/assignments.parquet   (vec_id[, codes]), written
+                                     partitionBy(cell)
+
+    The assignment table is cell-partitioned, so a probe reads ONLY
+    its nprobe cells' files (partition pruning — the parquet stand-in
+    for an Iceberg bucket transform, same as the tile sink), and a PQ
+    index's files carry m-byte codes, never float vectors.
+
+    Both halves go through Spark's Hadoop filesystem, so ``path`` may
+    be any warehouse URI (hdfs://, s3a://, file:/) and the whole index
+    lands on ONE filesystem (a builtin ``open()`` would write the
+    metadata driver-local while the parquet goes to the warehouse)."""
+    meta = {"centroids": index.centroids.tolist()}
+    if index.codebooks is not None:
+        meta["codebooks"] = index.codebooks.tolist()
+    index.assignments.write.mode("overwrite").partitionBy("cell").parquet(
+        f"{path}/assignments.parquet"
+    )
+    index.assignments.sparkSession.createDataFrame(
+        [(json.dumps(meta),)], "value string"
+    ).coalesce(1).write.mode("overwrite").text(f"{path}/centroids.json")
+
+
+def read_ivf_index(spark, path: str) -> IvfIndex:
+    """The index write_ivf_index persisted at ``path``, read through
+    Spark's Hadoop filesystem (same URI schemes as the writer)."""
+    meta = json.loads(
+        spark.read.text(f"{path}/centroids.json").collect()[0].value
+    )
+    books = meta.get("codebooks")
+    return IvfIndex(
+        np.array(meta["centroids"], dtype=np.float64),
+        None if books is None else np.array(books, dtype=np.float64),
+        spark.read.parquet(f"{path}/assignments.parquet"),
+    )
+
+
+def _probe(queries: DataFrame, index: IvfIndex, nprobe: int) -> DataFrame:
+    """→ distinct (query_id, vec_id[, codes]): the assignment rows of
+    each query's ``nprobe`` cosine-nearest cells, every assignment
+    column except ``cell``.
+
+    The probe pass (a pandas-UDF matmul over the SMALL query side)
+    runs exactly ONCE: its output is eagerly reliable-checkpointed,
+    and both consumers — the probed-cell collect and the assignment
+    join — read the checkpoint files. That makes this call eager
+    (Spark jobs at call time)."""
+    cent = _unit_rows(index.centroids.astype(np.float64))
 
     @pandas_udf("array<int>")
     def probe_udf(emb: pd.Series) -> pd.Series:
         if emb.empty:
             return pd.Series([], dtype="object")
-        mat = _unit_rows(np.stack(emb.to_numpy()).astype(np.float64))
-        scores = cnorm2[None, :] - 2.0 * (mat @ cent.T)
-        order = np.argsort(scores, axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
-
-    return probe_udf
-
-
-def ann_ivf_candidates(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 3,
-    centroids: np.ndarray | None = None,
-    fallback: bool = True,
-    escalate: bool = True,
-) -> DataFrame:
-    """IVF candidate generation → distinct (query_id, vec_id): the
-    query's ``nprobe`` nearest centroid cells, equi-joined on cell.
-    With ``fallback`` the set is augmented so every query has ≥
-    min(k, N-1) candidates (see _guarantee_k); ``escalate`` inserts
-    one bounded widening round (nprobe doubled) for starved queries
-    before the full-corpus exact fallback. Cells are spherical
-    (cosine), the quantizer that matches the cosine re-rank metric;
-    user-supplied ``centroids`` are unit-normalized on use (see
-    with_ivf_cell)."""
-    if centroids is None:
-        centroids = train_ivf_centroids(embeddings, n_centroids, iters)
-    cent = _unit_rows(centroids.astype(np.float64))
-    n_probe = min(nprobe, len(cent))
-
-    c = with_ivf_cell(embeddings, centroids).select("vec_id", "cell")
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
-    )
-    cands = (
-        c.join(q, on="cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    if not fallback:
-        return cands
-
-    esc = None
-    if escalate and n_probe < len(cent):
-        def esc(starved):
-            return ann_ivf_candidates(
-                embeddings, starved, k, n_centroids, nprobe * 2, iters,
-                centroids=cent, fallback=False,
-            )
-
-    return _guarantee_k(embeddings, queries, cands, k, escalate=esc)
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    iters: int = 3,
-    sample_fraction: float | None = None,
-    max_train: int | None = 100_000,
-) -> np.ndarray:
-    """Train-once IVF index materialization (the production path —
-    training and corpus assignment are paid per index BUILD, not per
-    query batch):
-
-        <path>/centroids.json        (n_centroids × dim, + config)
-        <path>/assignments.parquet   (vec_id, cell), written
-                                     partitionBy(cell)
-
-    The assignment table is cell-partitioned, so a later probe reads
-    ONLY its nprobe cells' files (partition pruning — the parquet
-    stand-in for an Iceberg bucket transform, same as the tile
-    sink). Returns the centroids.
-
-    Both halves of the index go through Spark's Hadoop filesystem
-    (the centroid metadata as a one-row text file), so ``path`` may
-    be any warehouse URI (hdfs://, s3a://, file:/) and the whole
-    index lands on ONE filesystem — round-4 advice: the old builtin
-    ``open()`` wrote centroids.json driver-local while the parquet
-    went to the warehouse, splitting the index across machines."""
-    import json as _json
-
-    centroids = train_ivf_centroids(
-        embeddings, n_centroids, iters, sample_fraction, max_train
-    )
-    assigned = with_ivf_cell(embeddings, centroids)
-    assigned.select("vec_id", "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(f"{path}/assignments.parquet")
-    meta_json = _json.dumps(
-        {
-            "centroids": centroids.tolist(),
-            "n_centroids": int(n_centroids),
-        }
-    )
-    spark = embeddings.sparkSession
-    spark.createDataFrame([(meta_json,)], "value string").coalesce(
-        1
-    ).write.mode("overwrite").text(f"{path}/centroids.json")
-    return centroids
-
-
-def read_ivf_index(spark, path: str) -> tuple[np.ndarray, DataFrame]:
-    """→ (centroids, assignments(vec_id, cell)). Reads through Spark's
-    Hadoop filesystem — same URI schemes as the writer."""
-    import json as _json
-
-    meta = _json.loads(
-        spark.read.text(f"{path}/centroids.json").collect()[0].value
-    )
-    assignments = spark.read.parquet(f"{path}/assignments.parquet")
-    return np.array(meta["centroids"], dtype=np.float64), assignments
-
-
-def ann_ivf_indexed_candidates(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    index_path: str,
-    k: int,
-    nprobe: int = 4,
-    fallback: bool = True,
-) -> DataFrame:
-    """Candidate (query_id, vec_id) pairs from a PREBUILT IVF index
-    (write_ivf_index): no training pass, no corpus assignment pass —
-    the query side probes its nprobe cells and the (cell-partitioned)
-    assignment table prunes to exactly those partitions.
-
-    The probe pass (a pandas-UDF matmul over the SMALL query side)
-    runs exactly ONCE: its output is eagerly reliable-checkpointed,
-    and both consumers — the probed-cell collect and the
-    assignment join — read the checkpoint files (round-4 verdict
-    item: the probe DAG used to be computed twice). That also makes
-    this call eager (Spark jobs at call time), like ann_* with
-    fallback=True already was."""
-    spark = embeddings.sparkSession
-    centroids, assignments = read_ivf_index(spark, index_path)
-    cent = _unit_rows(centroids)
-    n_probe = min(nprobe, len(cent))
+        order = np.argsort(_cell_scores(cent, emb), axis=1)[:, :nprobe]
+        return pd.Series(list(order.astype("int32")))
 
     _ensure_checkpoint_dir(queries)
     q = queries.select(
         F.col("vec_id").alias("query_id"),
-        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
+        F.explode(probe_udf("embedding")).alias("cell"),
     ).checkpoint(eager=True)
     # EXPLICIT static partition pruning: the distinct probed cell set
     # is bounded by n_centroids (collected from the SMALL query side
     # only — never the corpus), and an IN-filter on the partition
-    # column reaches the scan as a PartitionFilter, so only those
-    # cells' files are read. A bare join on the partition column does
-    # NOT prune (verified: no DPP is planned for this shape).
+    # column of a written index reaches the scan as a PartitionFilter,
+    # so only those cells' files are read. A bare join on the
+    # partition column does NOT prune (no DPP is planned for this
+    # shape).
     probed = [r.cell for r in q.select("cell").distinct().collect()]
-    pruned = assignments.filter(F.col("cell").isin(probed))
-    cands = (
-        pruned.join(q, on="cell")
+    cols = [c for c in index.assignments.columns if c != "cell"]
+    return (
+        index.assignments.filter(F.col("cell").isin(probed))
+        .join(q, on="cell")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
+        .select("query_id", *cols)
         .distinct()
     )
-    if fallback:
+
+
+def ann_ivf_candidates(
+    queries: DataFrame,
+    index: IvfIndex,
+    k: int,
+    nprobe: int = 4,
+    fallback: bool = True,
+) -> DataFrame:
+    """IVF candidate generation → distinct (query_id, vec_id[, codes]):
+    the corpus vectors in the query's ``nprobe`` nearest cells of
+    ``index`` (see _probe), whether the index was just built or read
+    back. With ``fallback`` the set is augmented so every query has ≥
+    min(k, N-1) candidates (see _guarantee_k): starved queries rerun
+    the probe at 2·nprobe over the same assignments, then any still
+    starved take the full corpus. Cells are spherical (cosine), the
+    quantizer that matches the cosine re-rank metric. Eager, like
+    every probe; ``fallback=True`` also checkpoints its result (a
+    shared checkpoint dir on non-local masters)."""
+    cands = _probe(queries, index, nprobe)
+    if not fallback:
+        return cands
+    esc = None
+    if nprobe < len(index.centroids):
         def esc(starved):
-            return ann_ivf_candidates(
-                embeddings, starved, k, len(cent), nprobe * 2,
-                centroids=cent, fallback=False,
-            )
+            return _probe(starved, index, nprobe * 2)
 
-        cands = _guarantee_k(
-            embeddings, queries, cands, k,
-            escalate=esc if n_probe < len(cent) else None,
-        )
-    return cands
-
-
-def ann_ivf_indexed(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    index_path: str,
-    k: int,
-    nprobe: int = 4,
-    fallback: bool = True,
-) -> DataFrame:
-    """IVF top-k over a PREBUILT index — see
-    ann_ivf_indexed_candidates. ``embeddings`` supplies vectors for
-    the exact re-rank only (two id equi-joins)."""
-    cands = ann_ivf_indexed_candidates(
-        embeddings, queries, index_path, k, nprobe, fallback
-    )
-    return rerank_topk(embeddings, queries, cands, k)
-
-
-def ann_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 3,
-    centroids: np.ndarray | None = None,
-    fallback: bool = True,
-    escalate: bool = True,
-) -> DataFrame:
-    """IVF approximate top-k: candidates restricted to the query's
-    ``nprobe`` nearest centroid cells (equi-join on cell), exact
-    cosine re-rank within. → (query_id, vec_id, cosine, rank).
-    Pass precomputed ``centroids`` to skip training (production: train
-    once on a sample, reuse; raw centroids are unit-normalized).
-    ``fallback`` guarantees k results per query — one
-    doubled-nprobe ``escalate`` round, then full-corpus candidates
-    for queries still starved. Like ann_lsh, ``fallback=True`` is
-    EAGER (reliable checkpoint at call time; non-local masters need a
-    configured shared checkpoint dir)."""
-    cands = ann_ivf_candidates(
-        embeddings, queries, k, n_centroids, nprobe, iters, centroids,
-        fallback, escalate,
-    )
-    return rerank_topk(embeddings, queries, cands, k)
+    return _guarantee_k(index.assignments, queries, cands, k, escalate=esc)
 
 
 # ---------------------------------------------------------------- PQ
@@ -829,70 +737,37 @@ def pq_encode(embeddings: DataFrame, codebooks: np.ndarray) -> DataFrame:
     return embeddings.withColumn("codes", code_udf("embedding"))
 
 
-def ann_ivf_pq(
-    embeddings: DataFrame,
+def ann_ivf_pq_candidates(
     queries: DataFrame,
+    index: IvfIndex,
     k: int,
-    n_centroids: int = 16,
     nprobe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
     refine: int = 4,
-    centroids: np.ndarray | None = None,
-    codebooks: np.ndarray | None = None,
 ) -> DataFrame:
-    """IVF-PQ approximate top-k → (query_id, vec_id, cosine, rank).
+    """IVF-PQ candidates → the ``refine``·k ADC-best (query_id, vec_id)
+    per query, for an index built with PQ codebooks
+    (``build_ivf_index(m=...)``, in memory or read back).
 
     The production ANN shape at 10^12 vectors: IVF coarse cells
     bound WHERE to look, PQ asymmetric-distance (ADC) ranks the
     probed candidates from m-byte codes WITHOUT touching the float
-    vectors, and only the ``refine``·k ADC-best per query are
-    re-ranked exactly. Stages:
+    vectors, and only the refine·k ADC-best per query go on to the
+    exact re-rank (``rerank_topk``, the SQL-expressible stage the
+    oracle checks). Stages:
 
-    1. coarse candidates — `ann_ivf_candidates` (nprobe cells,
-       guaranteed-k fallback), exactly the audited IVF path;
-    2. ADC — candidates join the m-byte codes (shuffle carries
-       codes, not vectors) and group per query: ONE (m × ksub)
-       distance table per query, then a table-lookup sum per
-       candidate (`applyInPandas`, Arrow-batched numpy);
-    3. exact re-rank of the ADC top refine·k (`rerank_topk`, the
-       SQL-expressible stage the oracle checks).
+    1. coarse candidates — ``ann_ivf_candidates`` (nprobe cells,
+       guaranteed-k fallback); they carry the assignment table's
+       codes, so the shuffle carries codes, not vectors;
+    2. ADC — ONE (m × ksub) distance table per query, then a
+       table-lookup sum per candidate (``applyInPandas``,
+       Arrow-batched numpy).
 
     ADC approximates L2 on unit vectors = monotone in cosine, so
     the PQ ranking and the cosine re-rank agree on metric."""
-    refined = ann_ivf_pq_candidates(
-        embeddings, queries, k, n_centroids, nprobe, m, ksub, refine,
-        centroids, codebooks,
-    )
-    return rerank_topk(embeddings, queries, refined, k)
-
-
-def ann_ivf_pq_candidates(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    m: int = 8,
-    ksub: int = 16,
-    refine: int = 4,
-    centroids: np.ndarray | None = None,
-    codebooks: np.ndarray | None = None,
-) -> DataFrame:
-    """The ADC-refined (query_id, vec_id) candidate set of
-    `ann_ivf_pq` (stages 1–2 of its docstring) — exposed so the
-    driver oracle can materialize it and DuckDB can exact-re-rank
-    the SAME candidates (the ann_lsh/ann_ivf oracle pattern)."""
-    if codebooks is None:
-        codebooks = train_pq_codebooks(embeddings, m, ksub)
-    books = codebooks.astype(np.float64)
-    m, ksub, dsub = books.shape
-
-    cands = ann_ivf_candidates(
-        embeddings, queries, k, n_centroids, nprobe, centroids=centroids
-    )
-    codes = pq_encode(embeddings, books).select("vec_id", "codes")
-    return _adc_refine(cands.join(codes, "vec_id"), queries, books, refine * k)
+    if index.codebooks is None:
+        raise ValueError("index has no PQ codebooks: build it with m=")
+    cands = ann_ivf_candidates(queries, index, k, nprobe)
+    return _adc_refine(cands, queries, index.codebooks, refine * k)
 
 
 def _adc_refine(
@@ -901,11 +776,11 @@ def _adc_refine(
     books: np.ndarray,
     n_keep: int,
 ) -> DataFrame:
-    """ADC stage shared by the inline and the persisted-index PQ
-    paths: (query_id, vec_id, codes) candidates → the n_keep
-    ADC-best (query_id, vec_id) per query. One (m × ksub) distance
-    table per query, then a table-lookup sum per candidate —
-    Arrow-batched `applyInPandas` grouped on query_id."""
+    """ADC stage of ann_ivf_pq_candidates: (query_id, vec_id, codes)
+    candidates → the n_keep ADC-best (query_id, vec_id) per query.
+    One (m × ksub) distance table per query, then a table-lookup sum
+    per candidate — Arrow-batched `applyInPandas` grouped on
+    query_id."""
     m, ksub, dsub = books.shape
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
@@ -928,118 +803,3 @@ def _adc_refine(
     return joined.groupBy("query_id").applyInPandas(
         adc, "query_id long, vec_id long"
     )
-
-
-def write_ivfpq_index(
-    embeddings: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    iters: int = 3,
-    m: int = 8,
-    ksub: int = 16,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Train-once IVF-PQ index materialization — the full production
-    ANN artifact at 10^12 vectors:
-
-        <path>/centroids.json        (coarse centroids + PQ codebooks
-                                      + config, one filesystem)
-        <path>/assignments.parquet   (vec_id, codes), written
-                                     partitionBy(cell)
-
-    The m-byte PQ codes live IN the cell-partitioned assignment
-    table, so a probe reads ONLY its nprobe cells' files and those
-    files carry codes, not 256-byte float vectors — the scan that
-    feeds ADC is (m + 8) bytes per corpus vector. Float embeddings
-    are read only by the final exact re-rank, via vec_id point-joins.
-    Returns (centroids, codebooks)."""
-    import json as _json
-
-    centroids = train_ivf_centroids(embeddings, n_centroids, iters)
-    codebooks = train_pq_codebooks(embeddings, m, ksub)
-    assigned = pq_encode(with_ivf_cell(embeddings, centroids), codebooks)
-    assigned.select("vec_id", "cell", "codes").write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(f"{path}/assignments.parquet")
-    meta_json = _json.dumps(
-        {
-            "centroids": centroids.tolist(),
-            "codebooks": codebooks.tolist(),
-            "n_centroids": int(n_centroids),
-            "m": int(m),
-            "ksub": int(ksub),
-        }
-    )
-    embeddings.sparkSession.createDataFrame(
-        [(meta_json,)], "value string"
-    ).coalesce(1).write.mode("overwrite").text(f"{path}/centroids.json")
-    return centroids, codebooks
-
-
-def read_ivfpq_index(
-    spark, path: str
-) -> tuple[np.ndarray, np.ndarray, DataFrame]:
-    """→ (centroids, codebooks, assignments(vec_id, cell, codes)) —
-    same filesystem rules as read_ivf_index."""
-    import json as _json
-
-    meta = _json.loads(
-        spark.read.text(f"{path}/centroids.json").collect()[0].value
-    )
-    assignments = spark.read.parquet(f"{path}/assignments.parquet")
-    return (
-        np.array(meta["centroids"], dtype=np.float64),
-        np.array(meta["codebooks"], dtype=np.float64),
-        assignments,
-    )
-
-
-def ann_ivfpq_indexed(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    index_path: str,
-    k: int,
-    nprobe: int = 4,
-    refine: int = 4,
-) -> DataFrame:
-    """ANN over a PREBUILT IVF-PQ index → (query_id, vec_id, cosine,
-    rank): probe nprobe cells (explicit static partition pruning,
-    same single-checkpointed probe pass as ann_ivf_indexed), rank
-    the pruned cells' m-byte codes by ADC, exact-re-rank the
-    refine·k best. The corpus-sized scan reads codes only."""
-    refined = ann_ivfpq_indexed_candidates(
-        embeddings, queries, index_path, k, nprobe, refine
-    )
-    return rerank_topk(embeddings, queries, refined, k)
-
-
-def ann_ivfpq_indexed_candidates(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    index_path: str,
-    k: int,
-    nprobe: int = 4,
-    refine: int = 4,
-) -> DataFrame:
-    """The ADC-refined (query_id, vec_id) candidate set of
-    `ann_ivfpq_indexed` (probe → prune → ADC, no exact re-rank) —
-    exposed for the materialized-candidates oracle pattern (DuckDB
-    exact-re-ranks the SAME set)."""
-    spark = embeddings.sparkSession
-    centroids, books, assignments = read_ivfpq_index(spark, index_path)
-    cent = _unit_rows(centroids)
-    n_probe = min(nprobe, len(cent))
-
-    _ensure_checkpoint_dir(queries)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(_probe_udf(cent, n_probe)("embedding")).alias("cell"),
-    ).checkpoint(eager=True)
-    probed = [r.cell for r in q.select("cell").distinct().collect()]
-    pruned = assignments.filter(F.col("cell").isin(probed))
-    cands = (
-        pruned.join(q, on="cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", "codes")
-        .distinct()
-    )
-    return _adc_refine(cands, queries, books, refine * k)

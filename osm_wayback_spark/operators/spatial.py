@@ -315,7 +315,8 @@ def knn_exact(
     is RELEASED before returning, so nothing cached outlives the
     call (round-4 verdict item; pytest-asserted via
     getPersistentRDDs). Note: that makes this call eager (it runs
-    Spark jobs at call time, like ann_* with fallback=True)."""
+    Spark jobs at call time, like ann_lsh_candidates and
+    ann_ivf_candidates)."""
     from ..session import ensure_checkpoint_dir
 
     ensure_checkpoint_dir(points.sparkSession)

@@ -136,5 +136,6 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
         "path visible to all executors — call "
         "spark.sparkContext.setCheckpointDir('hdfs://... or s3://...') "
         "before using operators that materialize candidates "
-        "(ann_* with fallback=True, knn_exact)"
+        "(ann_lsh_candidates, ann_ivf_candidates, "
+        "ann_ivf_pq_candidates, knn_exact)"
     )

@@ -1,11 +1,20 @@
-"""Similarity search: exact cosine top-k + LSH ANN."""
+"""Similarity search: exact cosine top-k, LSH, IVF and IVF-PQ ANN."""
 
 import math
 import random
 
 import pytest
 
-from osm_wayback_spark.operators.similarity import ann_lsh, cosine_topk
+from osm_wayback_spark.operators.similarity import (
+    ann_ivf_candidates,
+    ann_ivf_pq_candidates,
+    ann_lsh_candidates,
+    build_ivf_index,
+    cosine_topk,
+    read_ivf_index,
+    rerank_topk,
+    write_ivf_index,
+)
 
 
 @pytest.fixture(scope="module")
@@ -44,7 +53,8 @@ def test_ann_lsh_reasonable_recall(spark, emb):
     for r in cosine_topk(df, queries, k=3).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
     approx = {}
-    for r in ann_lsh(df, queries, k=3, n_planes=4).collect():
+    cands = ann_lsh_candidates(df, queries, k=3, n_planes=4)
+    for r in rerank_topk(df, queries, cands, k=3).collect():
         approx.setdefault(r.query_id, set()).add(r.vec_id)
     # bucket pruning: results must be a correct re-rank of the bucket —
     # recall over the query set should be nontrivial with 4 planes
@@ -56,7 +66,7 @@ def test_ann_lsh_reasonable_recall(spark, emb):
 
 
 def test_ann_lsh_recall_at_k_and_no_empty(spark):
-    """Recall accountability (VERDICT r1): multiprobe ann_lsh must
+    """Recall accountability (VERDICT r1): multiprobe LSH must
     reach recall@5 >= 0.8 vs cosine_topk on the driver embeddings at
     sf0.01, and the starved-query fallback must guarantee exactly k
     results per query."""
@@ -67,7 +77,8 @@ def test_ann_lsh_recall_at_k_and_no_empty(spark):
     for r in cosine_topk(df, queries, k=k).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
     approx = {}
-    for r in ann_lsh(df, queries, k=k).collect():
+    cands = ann_lsh_candidates(df, queries, k=k)
+    for r in rerank_topk(df, queries, cands, k).collect():
         approx.setdefault(r.query_id, set()).add(r.vec_id)
     # no-empty guarantee: every query answered with exactly k rows
     assert set(approx) == set(exact)
@@ -81,8 +92,6 @@ def test_ann_ivf_recall_and_no_empty(spark):
     driver embeddings (weakly clustered synthetic corpus — LSH is the
     high-recall path; IVF trades recall for a bounded nprobe/n_cells
     candidate ratio)."""
-    from osm_wayback_spark.operators.similarity import ann_ivf
-
     df = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     queries = df.filter("vec_id < 20")
     k = 5
@@ -90,7 +99,9 @@ def test_ann_ivf_recall_and_no_empty(spark):
     for r in cosine_topk(df, queries, k=k).collect():
         exact.setdefault(r.query_id, set()).add(r.vec_id)
     approx = {}
-    for r in ann_ivf(df, queries, k=k, n_centroids=16, nprobe=6).collect():
+    index = build_ivf_index(df, n_centroids=16)
+    cands = ann_ivf_candidates(queries, index, k, nprobe=6)
+    for r in rerank_topk(df, queries, cands, k).collect():
         approx.setdefault(r.query_id, set()).add(r.vec_id)
     assert set(approx) == set(exact)
     assert all(len(v) == k for v in approx.values())
@@ -152,7 +163,7 @@ def test_ivf_training_default_is_sample_bounded(spark):
     )
 
 
-def test_near_dup_candidates_recall_and_plan(spark):
+def test_near_dup_candidates_recall_and_plan(spark, plan_nodes):
     """The LSH-candidate near-dup path (the scale shape replacing the
     all-pairs theta join): recall vs the exact all-pairs set must be
     high at the default params, found pairs must be a subset of the
@@ -191,15 +202,15 @@ def test_near_dup_candidates_recall_and_plan(spark):
     # the engine's own candidates, not candidate completeness
     assert len(found) / len(exact) >= 0.95
 
-    plan = near_dup_pairs(df, near_dup_candidates(df), 0.4)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nodes = plan_nodes(near_dup_pairs(df, near_dup_candidates(df), 0.4))
+    assert "CartesianProduct" not in nodes
+    assert "BroadcastNestedLoopJoin" not in nodes
 
 
 def test_ann_leaves_no_persisted_frames(spark, emb):
     """_guarantee_k persists intermediates while augmenting, but must
     release every cache before returning (round-3 advice: a bench
-    loop of ann_* calls otherwise accumulates cached frames until
+    loop of candidate calls otherwise accumulates cached frames until
     LRU eviction). The materialized candidate set is a reliable
     checkpoint (disk, GC-cleaned), not a cache."""
     _rows, df = emb
@@ -212,12 +223,11 @@ def test_ann_leaves_no_persisted_frames(spark, emb):
         return {int(str(k)) for k in jmap.keySet().toArray()}
 
     before = persisted_ids()
-    from osm_wayback_spark.operators.similarity import ann_ivf
-
-    ann_lsh(df, queries, k=3, n_planes=4).count()
-    ann_ivf(df, queries, k=3, n_centroids=4, nprobe=1).count()
+    ann_lsh_candidates(df, queries, k=3, n_planes=4).count()
+    index = build_ivf_index(df, n_centroids=4)
+    ann_ivf_candidates(queries, index, k=3, nprobe=1).count()
     leaked = persisted_ids() - before
-    assert not leaked, f"persisted RDDs leaked by ann_* calls: {leaked}"
+    assert not leaked, f"persisted RDDs leaked by ANN calls: {leaked}"
 
 
 def test_guarantee_k_bounded_escalation(spark):
@@ -285,8 +295,6 @@ def test_ivf_spherical_beats_l2(spark):
     import math
     import random as rnd
 
-    from osm_wayback_spark.operators.similarity import ann_ivf
-
     rng = rnd.Random(7)
     dirs = []
     for _ in range(8):
@@ -307,76 +315,127 @@ def test_ivf_spherical_beats_l2(spark):
         exact.setdefault(r.query_id, set()).add(r.vec_id)
 
     approx = {}
-    for r in ann_ivf(df, queries, k=k, n_centroids=8, nprobe=1).collect():
+    cands = ann_ivf_candidates(
+        queries, build_ivf_index(df, n_centroids=8), k, nprobe=1
+    )
+    for r in rerank_topk(df, queries, cands, k).collect():
         approx.setdefault(r.query_id, set()).add(r.vec_id)
     recall = sum(len(exact[q] & approx[q]) for q in exact) / (len(exact) * k)
     assert recall >= 0.9
 
 
 def test_ivf_indexed_matches_inline(spark, tmp_path):
-    """ann over a prebuilt persisted index must equal ann_ivf with
-    the same centroids computed inline, and the assignment table must
-    be cell-partitioned (partition pruning on probe)."""
+    """An in-memory index and the same index written and read back
+    give the same top-k, and the written assignment table is
+    cell-partitioned (partition pruning on probe)."""
     import os
 
-    from osm_wayback_spark.operators.similarity import (
-        ann_ivf,
-        ann_ivf_indexed,
-        read_ivf_index,
-        write_ivf_index,
-    )
+    import numpy as np
 
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = df.filter("vec_id < 10")
     path = str(tmp_path / "ivf_index")
-    cent = write_ivf_index(df, path, n_centroids=4, iters=2)
+    index = build_ivf_index(df, n_centroids=4, iters=2)
+    write_ivf_index(index, path)
     # layout: one directory per cell → partition pruning works
     parts = [
         d for d in os.listdir(os.path.join(path, "assignments.parquet"))
         if d.startswith("cell=")
     ]
     assert len(parts) >= 2
-    cent2, assignments = read_ivf_index(spark, path)
-    assert assignments.count() == df.count()
-    import numpy as np
+    read = read_ivf_index(spark, path)
+    assert read.codebooks is None
+    assert read.assignments.count() == df.count()
+    assert np.allclose(index.centroids, read.centroids)  # metadata round-trips
 
-    assert np.allclose(cent, cent2)  # centroid metadata round-trips
+    def topk(ix):
+        cands = ann_ivf_candidates(queries, ix, k=3, nprobe=2)
+        rows = rerank_topk(df, queries, cands, k=3).collect()
+        return sorted((r.query_id, r.rank, r.vec_id, r.cosine) for r in rows)
 
-    key = lambda r: (r.query_id, r.rank)  # noqa: E731
-    a = sorted(
-        ann_ivf_indexed(df, queries, path, k=3, nprobe=2).collect(), key=key
-    )
-    b = sorted(
-        ann_ivf(df, queries, k=3, nprobe=2, centroids=cent).collect(), key=key
-    )
-    assert [(r.query_id, r.vec_id, r.cosine) for r in a] == [
-        (r.query_id, r.vec_id, r.cosine) for r in b
-    ]
+    assert topk(read) == topk(index)
 
 
-def test_ivf_indexed_probe_runs_once(spark, tmp_path):
-    """Round-4 verdict: ann_ivf_indexed built the query-probe DAG
-    twice (once for the probed-cell collect, once in the join). The
-    probe output is now reliable-checkpointed, so the CANDIDATE plan
-    must contain no Python-eval node at all — the pandas-UDF probe
-    ran during the checkpoint job, and the join reads checkpoint
-    files."""
-    from osm_wayback_spark.operators.similarity import (
-        ann_ivf_indexed_candidates,
-        write_ivf_index,
-    )
-
+def test_ivf_indexed_probe_runs_once(spark, tmp_path, plan_nodes):
+    """Round-4 verdict: the persisted-index probe built the query-probe
+    DAG twice (once for the probed-cell collect, once in the join).
+    The probe output is reliable-checkpointed, so the CANDIDATE plan
+    must contain no Python node at all — the pandas-UDF probe ran
+    during the checkpoint job, and the join reads checkpoint files."""
     df = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     queries = df.filter("vec_id < 10")
     path = str(tmp_path / "ivf_index")
-    write_ivf_index(df, path, n_centroids=4, iters=2)
-    cands = ann_ivf_indexed_candidates(
-        df, queries, path, k=3, nprobe=2, fallback=False
+    write_ivf_index(build_ivf_index(df, n_centroids=4, iters=2), path)
+    cands = ann_ivf_candidates(
+        queries, read_ivf_index(spark, path), k=3, nprobe=2, fallback=False
     )
-    plan = cands._jdf.queryExecution().executedPlan().toString()
-    for marker in ("ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
-        assert marker not in plan, plan
+    nodes = plan_nodes(cands)
+    assert not [n for n in nodes if "Python" in n], nodes
     assert cands.count() > 0
+
+
+def _gauss_corpus(spark):
+    """64 Gaussian 16-dim vectors: over 16 cells, most queries starve
+    at nprobe=1."""
+    rng = random.Random(7)
+    rows = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(64)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _per_query(rows) -> dict:
+    out = {}
+    for r in rows:
+        out.setdefault(r.query_id, set()).add(r.vec_id)
+    return out
+
+
+def test_ivfpq_persisted_index_guarantees_k(spark, tmp_path):
+    """64 Gaussian vectors over 16 cells starve most queries at
+    nprobe=1. Over a written-and-read PQ index every query still gets
+    k results: the persisted IVF-PQ path runs the same guaranteed-k
+    probe as the in-memory one (it used to return 2-4 rows for 15 of
+    the 20 queries)."""
+    df = _gauss_corpus(spark)
+    queries = df.filter("vec_id < 20")
+    k = 5
+    path = str(tmp_path / "ivfpq")
+    write_ivf_index(build_ivf_index(df, n_centroids=16, m=4, ksub=16), path)
+    index = read_ivf_index(spark, path)
+    starved = _per_query(
+        ann_ivf_candidates(queries, index, k, nprobe=1, fallback=False)
+        .collect()
+    )
+    assert sum(len(starved.get(q, ())) < k for q in range(20)) >= 10
+    cands = ann_ivf_pq_candidates(queries, index, k, nprobe=1)
+    got = _per_query(rerank_topk(df, queries, cands, k).collect())
+    assert set(got) == set(range(20))
+    assert all(len(v) == k for v in got.values())
+
+
+def test_ivf_escalation_reads_the_index(spark, tmp_path, monkeypatch):
+    """Starved queries escalate by probing the index's assignments at
+    2·nprobe: no step of a read-back index's probe re-assigns the
+    corpus through with_ivf_cell."""
+    from osm_wayback_spark.operators import similarity
+
+    df = _gauss_corpus(spark)
+    queries = df.filter("vec_id < 20")
+    k = 5
+    path = str(tmp_path / "ivf")
+    write_ivf_index(build_ivf_index(df, n_centroids=16), path)
+    index = read_ivf_index(spark, path)
+
+    def no_reassign(*_a, **_kw):
+        raise AssertionError("the probe re-assigned the corpus")
+
+    monkeypatch.setattr(similarity, "with_ivf_cell", no_reassign)
+    starved = _per_query(
+        ann_ivf_candidates(queries, index, k, nprobe=1, fallback=False)
+        .collect()
+    )
+    assert any(len(starved.get(q, ())) < k for q in range(20))
+    got = _per_query(ann_ivf_candidates(queries, index, k, nprobe=1).collect())
+    assert all(len(got[q]) >= k for q in range(20))
 
 
 def test_pq_encode_reconstruction_and_determinism(spark):
@@ -424,8 +483,6 @@ def test_ann_ivf_pq_recall(spark):
     import math
     import random as rnd
 
-    from osm_wayback_spark.operators.similarity import ann_ivf_pq, cosine_topk
-
     rng = rnd.Random(11)
     dirs = []
     for _ in range(8):
@@ -438,14 +495,10 @@ def test_ann_ivf_pq_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     queries = df.filter("vec_id < 15")
     k = 5
-    exact = {}
-    for r in cosine_topk(df, queries, k=k).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
-    got = {}
-    out = ann_ivf_pq(df, queries, k=k, n_centroids=8, nprobe=3,
-                     m=4, ksub=16, refine=4).collect()
-    for r in out:
-        got.setdefault(r.query_id, set()).add(r.vec_id)
+    exact = _per_query(cosine_topk(df, queries, k=k).collect())
+    index = build_ivf_index(df, n_centroids=8, m=4, ksub=16)
+    cands = ann_ivf_pq_candidates(queries, index, k, nprobe=3, refine=4)
+    got = _per_query(rerank_topk(df, queries, cands, k).collect())
     assert set(got) == set(exact)
     assert all(len(v) == k for v in got.values())
     recall = sum(
@@ -456,14 +509,8 @@ def test_ann_ivf_pq_recall(spark):
 
 def test_ivfpq_indexed_roundtrip_and_recall(spark, tmp_path):
     import math
+    import os
     import random as rnd
-
-    from osm_wayback_spark.operators.similarity import (
-        ann_ivfpq_indexed,
-        cosine_topk,
-        read_ivfpq_index,
-        write_ivfpq_index,
-    )
 
     rng = rnd.Random(21)
     dirs = []
@@ -476,15 +523,14 @@ def test_ivfpq_indexed_roundtrip_and_recall(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     idx = str(tmp_path / "ivfpq")
-    cents, books = write_ivfpq_index(df, idx, n_centroids=8, m=4, ksub=16)
-    r_cents, r_books, assigns = read_ivfpq_index(spark, idx)
-    assert r_cents.shape == cents.shape
-    assert (r_books == books).all()
-    assert assigns.count() == 400
-    assert set(assigns.columns) >= {"vec_id", "cell", "codes"}
+    built = build_ivf_index(df, n_centroids=8, m=4, ksub=16)
+    write_ivf_index(built, idx)
+    index = read_ivf_index(spark, idx)
+    assert index.centroids.shape == built.centroids.shape
+    assert (index.codebooks == built.codebooks).all()
+    assert index.assignments.count() == 400
+    assert set(index.assignments.columns) >= {"vec_id", "cell", "codes"}
     # cell is a partition column (directory-partitioned)
-    import os
-
     assert any(
         d.startswith("cell=")
         for d in os.listdir(f"{idx}/assignments.parquet")
@@ -493,13 +539,9 @@ def test_ivfpq_indexed_roundtrip_and_recall(spark, tmp_path):
 
     queries = df.filter("vec_id < 15")
     k = 5
-    exact = {}
-    for r in cosine_topk(df, queries, k=k).collect():
-        exact.setdefault(r.query_id, set()).add(r.vec_id)
-    got = {}
-    for r in ann_ivfpq_indexed(df, queries, idx, k=k, nprobe=3,
-                               refine=4).collect():
-        got.setdefault(r.query_id, set()).add(r.vec_id)
+    exact = _per_query(cosine_topk(df, queries, k=k).collect())
+    cands = ann_ivf_pq_candidates(queries, index, k, nprobe=3, refine=4)
+    got = _per_query(rerank_topk(df, queries, cands, k).collect())
     recall = sum(len(got.get(q, set()) & exact[q]) for q in exact) / (
         k * len(exact)
     )

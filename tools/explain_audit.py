@@ -1,12 +1,13 @@
 """Dump `explain("formatted")` physical plans for the headline
 operators into PLANS.md. Every section checks that its plan has no
-Python row UDF (`BatchEvalPython`). The history join section first
-runs its frame, prints the final adaptive plan, and checks on that
-plan tree the join and the shuffles that ran. The other properties a
-section lists (broadcast joins, pushed filters, WindowGroupLimit, ...)
-are hand-written notes, printed as "NOTE (not checked)" and not
-verified against the plan. Re-run after plan-affecting changes:
-python tools/explain_audit.py"""
+Python row UDF (`BatchEvalPython`). The history join section and the
+two persisted-IVF sections first run their frame, print the final
+adaptive plan, and check on that plan tree what ran: the history
+join's join and shuffles, the IVF probes' partition pruning. The
+other properties a section lists (broadcast joins, pushed filters,
+WindowGroupLimit, ...) are hand-written notes, printed as "NOTE (not
+checked)" and not verified against the plan. Re-run after
+plan-affecting changes: python tools/explain_audit.py"""
 
 from __future__ import annotations
 
@@ -67,6 +68,35 @@ def sort_merge_join_on_cached_partitioning(df, keys: tuple[str, ...]) -> bool:
         and bool(scans)
         and all(on_keys(scan) for scan in scans)
     )
+
+
+def prunes_partitions_on(df, column: str) -> bool:
+    """Call after ``df`` ran. Its final plan scans at least one table
+    partitioned by ``column``, and every such file scan has a static
+    partition filter on ``column`` (an IN list; an isnotnull or a
+    dynamic-pruning subquery does not count) and read fewer of the
+    table's partitions than it has."""
+
+    def has_in_filter(scan) -> bool:
+        filters = scan.partitionFilters()
+        for i in range(filters.size()):
+            f = filters.apply(i)
+            refs = f.references().toSeq()
+            names = {refs.apply(j).name() for j in range(refs.size())}
+            if column in names and f.getClass().getSimpleName() in ("In", "InSet"):
+                return True
+        return False
+
+    def read_fewer(scan) -> bool:
+        total = scan.relation().location().partitionSpec().partitions().size()
+        return scan.metrics().apply("numPartitions").value() < total
+
+    scans = [
+        n for n in _nodes(df._jdf.queryExecution().executedPlan())
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and column in list(n.relation().partitionSchema().fieldNames())
+    ]
+    return bool(scans) and all(has_in_filter(s) and read_fewer(s) for s in scans)
 
 
 def main() -> None:
@@ -218,23 +248,34 @@ def main() -> None:
     import tempfile
 
     from osm_wayback_spark.operators.similarity import (
-        ann_ivf_indexed_candidates,
+        ann_ivf_candidates,
+        build_ivf_index,
+        read_ivf_index,
         write_ivf_index,
     )
 
+    # two queries probe at most 2·nprobe cells, so the pruning shows
+    probe_q = emb.limit(2)
+    pruning_check = (
+        "the assignment scan carries a static IN partition filter on "
+        "cell and read fewer cell partitions than the index has: only "
+        "the probed cells' files are read"
+    )
     idx = tempfile.mkdtemp(prefix="audit_ivf_") + "/ivf"
-    write_ivf_index(emb, idx, n_centroids=8, iters=2)
+    write_ivf_index(build_ivf_index(emb, n_centroids=8, iters=2), idx)
+    ivf = ann_ivf_candidates(
+        probe_q, read_ivf_index(spark, idx), 5, nprobe=2, fallback=False
+    )
+    ivf.collect()
     add(
-        "ann_ivf_indexed (prebuilt index): checkpointed probe + pruned scan",
-        ann_ivf_indexed_candidates(emb, emb.limit(20), idx, 5, nprobe=2,
-                                   fallback=False),
+        "ann_ivf_candidates (persisted index): checkpointed probe + pruned "
+        "scan, final plan",
+        ivf,
         [
             "the pandas-UDF probe ran ONCE during the eager checkpoint — "
             "this plan reads checkpoint files, zero Python nodes",
-            "the IN-filter on the partition column reaches the "
-            "assignment scan as a PartitionFilter: only nprobe cells' "
-            "files are read",
         ],
+        [(pruning_check, prunes_partitions_on(ivf, "cell"))],
     )
 
     add(
@@ -265,15 +306,23 @@ def main() -> None:
             "tokenization rides the scan like a projection",
         ],
     )
+    pq_idx = tempfile.mkdtemp(prefix="audit_ivfpq_") + "/ivfpq"
+    write_ivf_index(build_ivf_index(emb, n_centroids=16, m=8, ksub=16), pq_idx)
+    ivfpq = ann_ivf_candidates(
+        probe_q, read_ivf_index(spark, pq_idx), 5, nprobe=4, fallback=False
+    )
+    ivfpq.collect()
     add(
-        "ann_ivfpq_indexed (persisted IVF-PQ): pruned code-only scan",
-        e.q_ann_ivfpq_indexed(spark, SF),
+        "ann_ivf_candidates (persisted IVF-PQ index): pruned code-only "
+        "scan, final plan",
+        ivfpq,
         [
-            "codes live IN the cell-partitioned assignment table: the "
-            "probe's IN-filter prunes to nprobe cells and those files "
-            "carry (m+8)-byte rows, never 256-byte vectors; floats are "
-            "read only by the final re-rank's vec_id point-joins",
+            "codes live IN the cell-partitioned assignment table, so "
+            "the pruned files carry (m+8)-byte rows, never 256-byte "
+            "vectors; floats are read only by the final re-rank's "
+            "vec_id point-joins",
         ],
+        [(pruning_check, prunes_partitions_on(ivfpq, "cell"))],
     )
     add(
         "ann_ivf_pq (memory-bounded ANN): ADC from m-byte codes",
