@@ -8,11 +8,15 @@
         --out /path/to/checkpoints [--zoom 15] [--no-resume]
 
 Runs the staged, resumable pipeline (pages → versions → history_geom
-→ versions_out → tiles) with per-partition lineage at every stage,
-each stage under <out>/<stage>/data; the tile table is
-<out>/tiles/data, partitioned by (z, x). A re-run skips completed
-stages; --no-resume rebuilds all of them. Prints one JSON line with
-the rows of every stage, read from its lineage.
+→ versions_out → tiles), each stage under <out>/<stage>/data with its
+commit record (per-partition lineage included) in
+<out>/<stage>/_SUCCESS_STAGE; the tile table is <out>/tiles/data,
+partitioned by (z, x). A re-run skips completed stages; --no-resume
+rebuilds all of them. Prints one JSON line with the rows of every
+stage, summed from its commit record (no Spark job).
+
+The session is the active one, else the launcher's when spark-submit
+started the process, else ``session.get_spark``'s local one.
 """
 
 from __future__ import annotations
@@ -30,6 +34,21 @@ if _ROOT not in sys.path:
     sys.path.insert(0, _ROOT)
 
 
+def _session():
+    """PYSPARK_GATEWAY_PORT is pyspark's test for a launcher's JVM;
+    without one, ``builder.getOrCreate()`` starts a vanilla session."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        return spark
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        return SparkSession.builder.getOrCreate()
+    from osm_wayback_spark.session import get_spark
+
+    return get_spark(app_name="osm-wayback-spark")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--pages", required=False, help="pages parquet path; "
@@ -41,19 +60,7 @@ def main(argv: list[str] | None = None) -> int:
                    help="rebuild every stage")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    # under spark-submit the session/master comes from the launcher;
-    # fall back to the local factory otherwise
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        try:
-            spark = SparkSession.builder.getOrCreate()
-        except Exception:  # noqa: BLE001
-            from osm_wayback_spark.session import get_spark
-
-            spark = get_spark(app_name="osm-wayback-spark")
+    spark = _session()
 
     from osm_wayback_spark import pipeline
     from osm_wayback_spark.plans import lineage
@@ -69,9 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     pipeline.walk(pages, root=args.out, force=args.no_resume, zoom=args.zoom)
     stats = {"wall_s": round(time.time() - t0, 2)}
     for stage in pipeline.STAGES:
-        lin = lineage.read_lineage(spark, args.out, stage)
-        # an empty stage has no lineage rows: its sum is null
-        rows = lin.groupBy().agg(F.sum("rows_out")).collect()[0][0] or 0
+        rows = sum(r for _, r, _ in lineage.stage_lineage(args.out, stage))
         stats[f"stage_{stage}"] = {"rows": rows}
 
     print(json.dumps(stats))

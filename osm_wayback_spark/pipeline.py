@@ -44,15 +44,14 @@ def _history_geom(versions_ext: DataFrame) -> DataFrame:
     return add_node_locations(hist, t["node_locations"], refs_source=t["versions"])
 
 
-def _stage_table(with_feature_json: bool = False, zoom: int = DEFAULT_ZOOM):
+def _stage_table(zoom: int = DEFAULT_ZOOM):
     """(name, build from the previous stage's output), in order. The
     reconstruct step always emits the typed [lon,lat] ``coords``, which
     the tile stage reads instead of regexp-parsing the GeoJSON."""
     return (
         ("versions", lambda p: dedup_versions(extract_versions_native(p))),
         ("history_geom", _history_geom),
-        ("versions_out", partial(reconstruct, with_feature_json=with_feature_json,
-                                 with_coords=True)),
+        ("versions_out", partial(reconstruct, with_coords=True)),
         ("tiles", partial(assign_tiles, z=zoom)),
     )
 
@@ -61,8 +60,7 @@ STAGES = tuple(name for name, _ in _stage_table())
 
 
 def walk(pages: DataFrame, last: str = STAGES[-1], root: str | None = None,
-         force: bool = False, with_feature_json: bool = False,
-         zoom: int = DEFAULT_ZOOM) -> DataFrame:
+         force: bool = False, zoom: int = DEFAULT_ZOOM) -> DataFrame:
     """Build the stage table from ``pages`` up to and including ``last``.
 
     Lazy (``root`` None): one plan; the versions table, read three
@@ -83,7 +81,7 @@ def walk(pages: DataFrame, last: str = STAGES[-1], root: str | None = None,
             if stale:
                 lineage.invalidate(root, stage)
     df = pages
-    for name, build in _stage_table(with_feature_json, zoom)[:stop]:
+    for name, build in _stage_table(zoom)[:stop]:
         if root is None:
             df = build(df)
             if name == "versions":
@@ -106,15 +104,12 @@ def geometry_pipeline(pages: DataFrame) -> DataFrame:
     return walk(pages, "history_geom")
 
 
-def reconstruction_pipeline(pages: DataFrame,
-                            with_feature_json: bool = False) -> DataFrame:
+def reconstruction_pipeline(pages: DataFrame) -> DataFrame:
     """pages → per-version features (≙ stage-4 WRITE_EVERY_GEOMETRY)."""
-    return walk(pages, "versions_out", with_feature_json=with_feature_json)
+    return walk(pages, "versions_out")
 
 
-def staged_pipeline(spark, pages: DataFrame, checkpoint_root: str,
-                    with_feature_json: bool = False) -> DataFrame:
+def staged_pipeline(spark, pages: DataFrame, checkpoint_root: str) -> DataFrame:
     """``reconstruction_pipeline`` staged under ``checkpoint_root``, the
     tile stage left to the caller (``spark`` is ``pages``' session)."""
-    return walk(pages, "versions_out", checkpoint_root,
-                with_feature_json=with_feature_json)
+    return walk(pages, "versions_out", checkpoint_root)

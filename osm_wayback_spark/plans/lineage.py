@@ -3,14 +3,15 @@
 North rule: "per-partition lineage and metrics checkpointed so any
 stage is resumable mid-run". Each pipeline stage writes
 
-    <root>/<stage>/data/        the stage output (parquet)
-    <root>/<stage>/lineage/     per-partition rows_out/checksum
-    <root>/<stage>/_SUCCESS_STAGE   completion marker: commit time and
-                                the read-back schema (JSON)
+    <root>/<stage>/data/            the stage output (parquet)
+    <root>/<stage>/_SUCCESS_STAGE   its one commit record, JSON written
+        atomically (temp file + os.replace): commit time, read-back
+        schema, [partition_id, rows_out, checksum] per partition
 
 `run_stage` is idempotent: a completed stage short-circuits to a read
-of its data (resume = skip), an interrupted one (no marker) is
-recomputed and overwritten. The reference's analog is its run
+of its data (resume = skip); one without a complete record (no marker,
+an unparseable one, or one without ``partitions`` as older checkpoints
+have) is recomputed and overwritten. The reference's analog is its run
 counters + staged files (add_history.cpp:54-60, README.md:52-62);
 here the metrics are computed distributedly JVM-side (xxhash64 +
 modular sum per spark_partition_id) — only the per-partition summary
@@ -29,32 +30,41 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def _paths(root: str, stage: str) -> tuple[str, str, str]:
+def _paths(root: str, stage: str) -> tuple[str, str]:
     base = os.path.join(root, stage)
-    return (
-        os.path.join(base, "data"),
-        os.path.join(base, "lineage"),
-        os.path.join(base, "_SUCCESS_STAGE"),
-    )
+    return os.path.join(base, "data"), os.path.join(base, "_SUCCESS_STAGE")
 
 
-def _committed_schema(root: str, stage: str) -> StructType | None:
-    """The read-back schema the stage's marker holds; None when the
-    stage has no readable marker (never built, or interrupted)."""
+def _commit_record(root: str, stage: str) -> tuple[StructType, list] | None:
+    """(read-back schema, partition triples) from the stage's marker;
+    None when the stage has no complete record."""
     try:
-        with open(_paths(root, stage)[2]) as fh:
-            return StructType.fromJson(json.load(fh)["schema"])
+        with open(_paths(root, stage)[1]) as fh:
+            record = json.load(fh)
+        return (
+            StructType.fromJson(record["schema"]),
+            [tuple(p) for p in record["partitions"]],
+        )
     except (OSError, ValueError, KeyError, TypeError):
         return None
 
 
 def stage_complete(root: str, stage: str) -> bool:
-    return _committed_schema(root, stage) is not None
+    return _commit_record(root, stage) is not None
+
+
+def stage_lineage(root: str, stage: str) -> list[tuple[int, int, int]]:
+    """The committed stage's (partition_id, rows_out, checksum) triples,
+    ordered by partition_id; an empty stage has none."""
+    record = _commit_record(root, stage)
+    if record is None:
+        raise FileNotFoundError(f"stage {stage!r} under {root!r} is not committed")
+    return record[1]
 
 
 def invalidate(root: str, stage: str) -> None:
     """Remove the stage's marker, so its next run_stage rebuilds it."""
-    marker = _paths(root, stage)[2]
+    marker = _paths(root, stage)[1]
     if os.path.exists(marker):
         os.remove(marker)
 
@@ -96,8 +106,8 @@ def partition_metrics(written: DataFrame) -> DataFrame:
 def write_stage(
     df: DataFrame, root: str, stage: str, partition_by: tuple[str, ...] = ()
 ) -> None:
-    """Write stage output (directory-partitioned by ``partition_by``)
-    + per-partition lineage, then the marker.
+    """Write stage output (directory-partitioned by ``partition_by``),
+    then the marker with the per-partition lineage of what was written.
 
     The lineage pass is 100% JVM-side (round-3 verdict item: the old
     mapInPandas metrics pass Arrow-round-tripped the ENTIRE stage
@@ -112,8 +122,7 @@ def write_stage(
     columns last, as a directory-partitioned read returns them): a
     partitioned write of zero rows leaves no data file to infer one
     from."""
-    data_path, lineage_path, marker = _paths(root, stage)
-    spark = df.sparkSession
+    data_path, marker = _paths(root, stage)
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(data_path)
     schema = StructType(
         [f for f in df.schema if f.name not in partition_by]
@@ -121,16 +130,13 @@ def write_stage(
     )
 
     # lineage over what was written (stable file-based partitions)
-    written = spark.read.schema(schema).parquet(data_path)
-    # driver traffic is the lineage summary only (one row per
-    # partition), never data
-    rows = partition_metrics(written).collect()
-    spark.createDataFrame(
-        [(stage, r.partition_id, r.rows_out, r.checksum) for r in rows],
-        schema="stage string, partition_id int, rows_out long, checksum long",
-    ).write.mode("overwrite").parquet(lineage_path)
-    with open(marker, "w") as fh:
-        json.dump({"committed": time.time(), "schema": schema.jsonValue()}, fh)
+    written = df.sparkSession.read.schema(schema).parquet(data_path)
+    partitions = sorted(tuple(r) for r in partition_metrics(written).collect())
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"committed": time.time(), "schema": schema.jsonValue(),
+                   "partitions": partitions}, fh)
+    os.replace(tmp, marker)
 
 
 def run_stage(
@@ -144,11 +150,8 @@ def run_stage(
     compute, checkpoint, read back (so downstream stages consume the
     materialized artifact, cutting lineage like the reference's staged
     files). ``invalidate`` forces a rebuild."""
-    if not stage_complete(root, stage):
+    record = _commit_record(root, stage)
+    if record is None:
         write_stage(build(), root, stage, partition_by)
-    schema = _committed_schema(root, stage)
-    return spark.read.schema(schema).parquet(_paths(root, stage)[0])
-
-
-def read_lineage(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    return spark.read.parquet(_paths(root, stage)[1])
+        record = _commit_record(root, stage)
+    return spark.read.schema(record[0]).parquet(_paths(root, stage)[0])

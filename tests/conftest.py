@@ -1,3 +1,5 @@
+from collections import Counter
+
 import pytest
 
 
@@ -25,6 +27,28 @@ def plan_nodes():
             out.append(node.nodeName())
             kids = node.children()
             todo += [kids.apply(i) for i in range(kids.size())]
+        return out
+
+    return names
+
+
+@pytest.fixture(scope="session")
+def optimized_exprs():
+    """df → a Counter of the expression classes (``Tan``,
+    ``JsonToStructs``, …) in its optimized plan, read from the
+    expression trees of every plan node."""
+
+    def names(df) -> Counter:
+        nodes, exprs, out = [df._jdf.queryExecution().optimizedPlan()], [], Counter()
+        while nodes:
+            node = nodes.pop()
+            for seq, todo in ((node.expressions(), exprs), (node.children(), nodes)):
+                todo += [seq.apply(i) for i in range(seq.size())]
+        while exprs:
+            expr = exprs.pop()
+            out[expr.getClass().getSimpleName()] += 1
+            kids = expr.children()
+            exprs += [kids.apply(i) for i in range(kids.size())]
         return out
 
     return names

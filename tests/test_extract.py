@@ -134,27 +134,14 @@ def test_dedup_versions_last_write_wins(spark):
     assert "warc_ts" not in out[0].asDict()
 
 
-def test_native_extraction_parses_each_island_once(spark):
+def test_native_extraction_parses_each_island_once(spark, optimized_exprs):
     """The optimized plan holds one from_json and one regexp_extract:
     the validity filter must not be pushed below the parse, where it
     would re-evaluate the island chain and both parses per page.
     Counted over the expression trees of every plan node."""
-    from collections import Counter
-
     from osm_wayback_spark.sources.extract import extract_versions_native
 
-    df = extract_versions_native(synth_pages(spark, SF))
-    nodes = [df._jdf.queryExecution().optimizedPlan()]
-    exprs, names = [], Counter()
-    while nodes:
-        node = nodes.pop()
-        for seq, todo in ((node.expressions(), exprs), (node.children(), nodes)):
-            todo += [seq.apply(i) for i in range(seq.size())]
-    while exprs:
-        expr = exprs.pop()
-        names[expr.getClass().getSimpleName()] += 1
-        kids = expr.children()
-        exprs += [kids.apply(i) for i in range(kids.size())]
+    names = optimized_exprs(extract_versions_native(synth_pages(spark, SF)))
     assert names["JsonToStructs"] == 1, names
     assert names["RegExpExtract"] == 1, names
 

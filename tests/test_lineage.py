@@ -1,5 +1,8 @@
 """Checkpoint/resume with per-partition lineage."""
 
+import json
+import os
+
 import pytest
 
 from osm_wayback_spark.plans import lineage
@@ -21,10 +24,13 @@ def test_stage_checkpoint_and_resume(spark, tmp_path):
     assert out2.count() == 100
     assert calls["n"] == 1
 
-    lin = lineage.read_lineage(spark, root, "stage_a")
-    rows = lin.collect()
-    assert sum(r.rows_out for r in rows) == 100
-    assert all(r.stage == "stage_a" for r in rows)
+    # one commit record: the marker carries the per-partition lineage
+    # of what was written
+    assert sorted(os.listdir(f"{root}/stage_a")) == ["_SUCCESS_STAGE", "data"]
+    committed = lineage.stage_lineage(root, "stage_a")
+    data = spark.read.parquet(f"{root}/stage_a/data")
+    assert committed == sorted(tuple(r) for r in lineage.partition_metrics(data).collect())
+    assert sum(rows_out for _, rows_out, _ in committed) == data.count() == 100
 
     # invalidated: marker removed → recompute
     lineage.invalidate(root, "stage_a")
@@ -79,18 +85,40 @@ def test_checksum_is_multiplicity_sensitive(spark):
 
 
 def test_incomplete_stage_recomputed(spark, tmp_path):
-    import os
+    """A stage without a complete commit record is rebuilt: no marker
+    (a crash mid-write), a truncated one, or one without
+    ``partitions`` (an older checkpoint)."""
+    marker = str(tmp_path / "ckpt2" / "s" / "_SUCCESS_STAGE")
+
+    def no_marker():
+        os.remove(marker)
+
+    def truncated():
+        with open(marker) as fh:
+            text = fh.read()
+        with open(marker, "w") as fh:
+            fh.write(text[: len(text) // 2])
+
+    def no_partitions():
+        with open(marker) as fh:
+            record = json.load(fh)
+        del record["partitions"]
+        with open(marker, "w") as fh:
+            json.dump(record, fh)
 
     root = str(tmp_path / "ckpt2")
-    lineage.run_stage(spark, root, "s", lambda: spark.range(10))
-    # simulate a crash mid-write: marker removed
-    os.remove(f"{root}/s/_SUCCESS_STAGE")
-    calls = {"n": 0}
+    for n, damage in enumerate((no_marker, truncated, no_partitions)):
+        lineage.run_stage(spark, root, "s", lambda: spark.range(10))
+        damage()
+        assert not lineage.stage_complete(root, "s"), damage.__name__
+        calls = {"n": 0}
 
-    def build():
-        calls["n"] += 1
-        return spark.range(20)
+        def build():
+            calls["n"] += 1
+            return spark.range(20 + n)
 
-    out = lineage.run_stage(spark, root, "s", build)
-    assert out.count() == 20
-    assert calls["n"] == 1
+        out = lineage.run_stage(spark, root, "s", build)
+        assert out.count() == 20 + n, damage.__name__
+        assert calls["n"] == 1, damage.__name__
+        assert sum(r for _, r, _ in lineage.stage_lineage(root, "s")) == 20 + n
+        lineage.invalidate(root, "s")

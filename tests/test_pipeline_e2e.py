@@ -12,6 +12,7 @@ import pytest
 
 from osm_wayback_spark import pipeline
 from osm_wayback_spark.operators._reconstruct_core import reconstruct_feature
+from osm_wayback_spark.operators.reconstruction import reconstruct
 from osm_wayback_spark.synth import synth_pages
 
 from .oracle import (
@@ -27,7 +28,8 @@ SF = 0.001
 @pytest.fixture(scope="module")
 def spark_outputs(spark):
     pages = synth_pages(spark, SF)
-    rows = pipeline.reconstruction_pipeline(pages, with_feature_json=True).collect()
+    geom = pipeline.geometry_pipeline(pages)
+    rows = reconstruct(geom, with_feature_json=True).collect()
     by_key: dict[tuple, list[str]] = {}
     for r in rows:
         by_key.setdefault((r.element_type, r.id), []).append(r.feature_json)
@@ -91,7 +93,6 @@ def test_reconstruct_tolerates_all_empty_batches(spark):
     map/array types) — regression for the sorted-cache bench crash."""
     from pyspark.sql import types as T
 
-    from osm_wayback_spark.operators.reconstruction import reconstruct
     from osm_wayback_spark.schemas import HISTORY_RECORD
 
     schema = T.StructType(

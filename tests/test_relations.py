@@ -165,11 +165,10 @@ def test_relation_geometry_flows_into_mvt_tiles(spark, frames, tmp_path):
     assert found_poly_with_hole
 
 
-def test_assembly_plan_shape(spark, frames):
+def test_assembly_plan_shape(spark, frames, plan_nodes):
     """The as-of join must stay relational (equi-join + window): no
     Python node before the final assembly kernel."""
     members, way_geoms = frames
-    asof = member_ways_asof(members, way_geoms)
-    plan = asof._jdf.queryExecution().executedPlan().toString()
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
+    nodes = plan_nodes(member_ways_asof(members, way_geoms))
+    for python_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
+        assert python_node not in nodes, nodes

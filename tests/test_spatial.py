@@ -133,7 +133,7 @@ def test_parent_cell_derivation_exact(spark):
             assert row.derived == row.direct, (r, row.point_id)
 
 
-def test_pip_single_pass_point_side(spark, pts):
+def test_pip_single_pass_point_side(spark, pts, optimized_exprs):
     """The point side's expensive projection appears ONCE in the plan
     (one tan/log pair), not once per distinct res in use."""
     rows, pdf = pts
@@ -144,8 +144,8 @@ def test_pip_single_pass_point_side(spark, pts):
         "polygon_id long, rings_json string",
     )
     out = point_in_polygon(pdf, poly_df, res=12)  # mixed res guaranteed
-    plan = out._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("TAN(") == 1, plan
+    names = optimized_exprs(out)
+    assert names["Tan"] == 1, names
 
 
 def test_knn_exact_matches_brute(spark, pts):
@@ -190,10 +190,11 @@ def test_knn_exact_leaves_no_persisted_frames(spark, pts):
     assert not leaked, f"persisted RDDs leaked by knn_exact: {leaked}"
 
 
-def test_knn_cells_plan_has_no_python_row_udf(spark):
+def test_knn_cells_plan_has_no_python_row_udf(spark, plan_nodes):
     """The ring expansion must stay native (neighbor_cells column
-    math): no BatchEvalPython / PythonUDF node may appear in the
-    physical plan of the single-ring path."""
+    math): no Python evaluation node (BatchEvalPython, where a
+    PythonUDF runs, or ArrowEvalPython) may appear in the physical
+    plan of the single-ring path."""
     from pyspark.sql import functions as F
 
     from osm_wayback_spark.operators.spatial import knn_cells
@@ -208,6 +209,6 @@ def test_knn_cells_plan_has_no_python_row_udf(spark):
         (F.col("id") * 31.0 - 60.0).alias("lon"),
         (F.col("id") * 17.0 - 40.0).alias("lat"),
     )
-    plan = knn_cells(pts, q, k=3, res=4, ring=1)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "PythonUDF" not in plan
+    nodes = plan_nodes(knn_cells(pts, q, k=3, res=4, ring=1))
+    for python_node in ("BatchEvalPython", "ArrowEvalPython"):
+        assert python_node not in nodes, nodes

@@ -30,9 +30,9 @@ def test_staged_equals_lazy(spark, tmp_path):
         }
         return df.columns, rows
 
-    lazy = by_key(pipeline.reconstruction_pipeline(pages, with_feature_json=True))
+    lazy = by_key(pipeline.reconstruction_pipeline(pages))
     root = str(tmp_path / "ck")
-    staged = by_key(pipeline.staged_pipeline(spark, pages, root, with_feature_json=True))
+    staged = by_key(pipeline.staged_pipeline(spark, pages, root))
     assert "coords" in lazy[0]
     assert staged == lazy
 
