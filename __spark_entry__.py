@@ -935,13 +935,14 @@ def q_token_stats_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Frozen output of train_bpe(documents @ sf0.001, num_merges=40) —
-# reproducible (deterministic tie-break) but embedded as a literal so
-# the DuckDB oracle can apply the IDENTICAL merge list. Training
-# itself is an iterative algorithm (not SQL-expressible) and is
-# pytest-gated against an independent pure-Python trainer
-# (tests/test_bpe.py); encoding — the per-row hot path — is
-# hash-gated here.
+# Frozen merge list of the classic BPE trainer (tests/test_bpe.py
+# `_ref_train`: pair frequency desc, then pair lexicographic asc) over
+# the whitespace-word histogram of the sf0.001 documents, 40 merges,
+# min_freq=2 — embedded as a literal so the DuckDB oracle can apply
+# the IDENTICAL merge list. Training is iterative (not
+# SQL-expressible); tests/test_bpe.py::
+# test_ref_train_rederives_frozen_merges re-derives this list, and
+# encoding — the per-row hot path — is hash-gated here.
 BPE_MERGES = [
     ("e", "r"), ("o", "r"), ("i", "n"), ("o", "w"), ("s", "t"),
     ("l", "u"), ("a", "r"), ("p", "ar"), ("m", "er"), ("a", "t"),
@@ -1032,15 +1033,17 @@ def q_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ppl_buckets(scored)
 
 
-# Frozen output of train_logreg on the sf0.001 documents, label =
-# the corpus_filter quality gate (quality_score >= 0.3) — the
+# Frozen weights of full-batch logistic-regression GD on the sf0.001
+# documents' `doc_features`, rows ordered by doc_id, label = the
+# corpus_filter quality gate (quality_score >= 0.3) — the
 # distillation target a production pipeline uses (learn the
-# expensive gate, apply the cheap linear scorer). 0.99 train
-# accuracy vs a 0.948 majority baseline. Training (iterative GD,
-# one Spark aggregation per step) is pytest-gated against an
-# independent numpy implementation (tests/test_classifier.py);
-# scoring with these frozen weights is pure column math, hash-gated
-# below. Order: [bias, f_len, f_stop, f_punct, f_wlen, f_digit].
+# expensive gate, apply the cheap linear scorer). The trainer is
+# tests/test_classifier.py `_numpy_gd` (z-score standardize, GD,
+# fold back) with iters=400, lr=4.0; tests/test_classifier.py::
+# test_numpy_gd_rederives_frozen_weights re-derives these weights.
+# 0.99 train accuracy vs a 0.948 majority baseline. Scoring with
+# them is pure column math, hash-gated below.
+# Order: [bias, f_len, f_stop, f_punct, f_wlen, f_digit].
 QUALITY_LR_WEIGHTS = [
     -15.768520742952, 22.158186020951, 28.861193160611, 0.0,
     2.418786669526, 0.0,

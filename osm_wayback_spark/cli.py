@@ -16,7 +16,8 @@ rebuilds all of them. Prints one JSON line with the rows of every
 stage, summed from its commit record (no Spark job).
 
 The session is the active one, else the launcher's when spark-submit
-started the process, else ``session.get_spark``'s local one.
+started the process, else ``session.get_spark``'s local one, whose
+Python workers get the repo root on their PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -46,7 +47,12 @@ def _session():
         return SparkSession.builder.getOrCreate()
     from osm_wayback_spark.session import get_spark
 
-    return get_spark(app_name="osm-wayback-spark")
+    # the Python workers import the package too; run from another
+    # working directory they would not find it without the repo root
+    return get_spark(
+        app_name="osm-wayback-spark",
+        extra_conf={"spark.executorEnv.PYTHONPATH": _ROOT},
+    )
 
 
 def main(argv: list[str] | None = None) -> int:

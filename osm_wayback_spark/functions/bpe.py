@@ -1,35 +1,26 @@
-"""Trainable byte-pair-encoding tokenizer (Sennrich et al. 2016,
+"""Byte-pair-encoding tokenizer, encode side (Sennrich et al. 2016,
 "Neural Machine Translation of Rare Words with Subword Units" —
 public algorithm), Spark-first.
 
 The reference engine only counts whitespace/regex tokens
 (osm-wayback has no tokenizer at all); real token accounting for a
-training-data pipeline needs the tokenizer the model will use. This
-module provides the classic BPE pair: `train_bpe` learns a merge
-list, `encode_bpe` applies it — both shaped for 100 TB.
+training-data pipeline needs the tokenizer the model will use.
+`encode_bpe` applies an ordered merge list learned elsewhere; the
+list the queries use is frozen in `__spark_entry__.BPE_MERGES`, and
+the classic histogram trainer that re-derives it (frequency desc,
+then pair lexicographic asc) lives in tests/test_bpe.py as
+`_ref_train`.
 
-Design (100 TB shape):
-
-- **train**: the ONLY corpus-sized step is one `groupBy(word)`
-  histogram (a single Exchange with map-side partial aggregation),
-  capped at the `max_words` most frequent words. By Zipf's law the
-  head histogram carries almost all pair mass, so the cap bounds
-  driver memory at O(max_words) INDEPENDENT of corpus size — the
-  same histogram-not-corpus training shape every production BPE
-  trainer uses. The merge loop itself runs driver-side over the
-  histogram only (cost O(max_words · avg_len) per merge, zero Spark
-  jobs).
-
-- **encode**: pure JVM column math — zero Python, zero shuffle,
-  zero data movement. Each word is rendered as a separator-wrapped
-  symbol string (`\\x1f a \\x1f\\x1f b \\x1f`-style: every symbol
-  carries its OWN leading+trailing separator, so adjacent matches
-  never compete for a shared boundary char) and the ordered merge
-  list is folded over it with `F.aggregate` — ONE expression node
-  regardless of merge count, each merge a single `replace`.
+Design (100 TB shape): pure JVM column math — zero Python, zero
+shuffle, zero data movement. Each word is rendered as a
+separator-wrapped symbol string (`\\x1f a \\x1f\\x1f b \\x1f`-style:
+every symbol carries its OWN leading+trailing separator, so adjacent
+matches never compete for a shared boundary char) and the ordered
+merge list is folded over it with `F.aggregate` — ONE expression
+node regardless of merge count, each merge a single `replace`.
 
 Correctness of the string trick (property-tested in
-tests/test_bpe.py against the classic list implementation, 20k
+tests/test_bpe.py against the classic list implementation, 5,000
 random cases): a single non-overlapping left-to-right substring
 replace of ``\\x1fl\\x1f\\x1fr\\x1f`` with ``\\x1flr\\x1f`` is
 EXACTLY one left-to-right non-overlapping pair-merge pass. And one
@@ -50,82 +41,12 @@ whitespace because encoding is per-word.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # \x1f (ASCII unit separator) cannot appear in learned symbols:
-# encode strips it from the input, and train strips it from words.
+# encode strips it from the input.
 SEP = "\x1f"
-
-
-def _pair_stats(vocab: dict[tuple[str, ...], int]) -> dict[tuple[str, str], int]:
-    stats: dict[tuple[str, str], int] = {}
-    for syms, freq in vocab.items():
-        for i in range(len(syms) - 1):
-            p = (syms[i], syms[i + 1])
-            stats[p] = stats.get(p, 0) + freq
-    return stats
-
-
-def merge_word(syms: tuple[str, ...], l: str, r: str) -> tuple[str, ...]:
-    """Classic left-to-right non-overlapping pair merge (the list
-    form the string `replace` trick must agree with)."""
-    out: list[str] = []
-    i = 0
-    while i < len(syms):
-        if i + 1 < len(syms) and syms[i] == l and syms[i + 1] == r:
-            out.append(l + r)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return tuple(out)
-
-
-def train_bpe(
-    docs: DataFrame,
-    num_merges: int = 200,
-    text_col: str = "text",
-    max_words: int = 100_000,
-    min_freq: int = 2,
-) -> list[tuple[str, str]]:
-    """Learn `num_merges` BPE merges from a document corpus.
-
-    Returns the ordered merge list [(left, right), ...]. Stops early
-    when the best remaining pair's frequency drops below `min_freq`.
-    Ties break deterministically: frequency desc, then pair
-    lexicographic asc — so training is reproducible across runs,
-    partitionings and engines.
-    """
-    from .text import words
-
-    hist = (
-        docs.select(
-            F.explode(words(F.col(text_col))).alias("w")
-        )
-        .filter((F.col("w") != "") & ~F.col("w").contains(SEP))
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("w"))
-        .limit(max_words)
-        .collect()
-    )
-    vocab: dict[tuple[str, ...], int] = {}
-    for row in hist:
-        vocab[tuple(row.w)] = vocab.get(tuple(row.w), 0) + row.n
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        stats = _pair_stats(vocab)
-        if not stats:
-            break
-        best = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_freq:
-            break
-        l, r = best[0]
-        merges.append((l, r))
-        vocab = {merge_word(s, l, r): f for s, f in vocab.items()}
-    return merges
 
 
 def render_merges(merges: list[tuple[str, str]]) -> list[str]:
@@ -187,15 +108,3 @@ def encode_bpe(text: Column, merges: list[tuple[str, str]]) -> Column:
 def bpe_token_count(text: Column, merges: list[tuple[str, str]]) -> Column:
     """Token count under a learned BPE vocabulary."""
     return F.size(encode_bpe(text, merges)).cast("long")
-
-
-def encode_bpe_reference(text: str, merges: list[tuple[str, str]]) -> list[str]:
-    """Independent pure-Python reference encoder (classic list
-    implementation) — the pytest golden for `encode_bpe`."""
-    toks: list[str] = []
-    for w in text.replace(SEP, "").split():
-        syms = tuple(w)
-        for l, r in merges:
-            syms = merge_word(syms, l, r)
-        toks.extend(syms)
-    return toks

@@ -1,5 +1,5 @@
-"""Distilled quality/language classifier — logistic regression
-trained WITH Spark aggregations, scored as pure column math.
+"""Distilled quality/language classifier — logistic-regression
+scoring as pure column math.
 
 Production training pipelines gate documents with a cheap linear
 classifier distilled from an expensive signal (CCNet / RefinedWeb
@@ -13,26 +13,16 @@ Design (100 TB shape):
   IEEE column arithmetic (integer counts and divisions — no libm),
   so the DuckDB oracle reproduces them bit-identically. Zero
   shuffle; rides the scan.
-- **train** (`train_logreg`): full-batch gradient descent where each
-  iteration is ONE Spark aggregation job (d+1 `avg` expressions over
-  the persisted feature frame — map-side partial aggregation, a
-  single scalar row to the driver per step). Driver state is just
-  the weight vector. At corpus scale you train on
-  `sample_fraction` — gradient noise from sampling dwarfs the gain
-  from exact full-batch gradients, and the cached sample makes each
-  step seconds, not a corpus scan. This is the same
-  aggregate-per-step shape MLlib's own optimizers use, written
-  plainly.
 - **score** (`score_logreg`): sigmoid(w·x) as a column expression —
   zero Python, zero shuffle; the only libm call is one `exp`, and
   the driver-gate query rounds to 6 decimals so cross-engine libm
   ulp drift cannot flip the hash.
 
-Training itself is iterative (not SQL-expressible) and is
-pytest-gated against an independent numpy implementation on the
-collected sample; scoring with a FROZEN weight vector is hash-gated
-(`__spark_entry__.q_quality_classifier`), mirroring the
-train-pytest / encode-oracle split used for BPE.
+The weight vector is trained once, off the hot path, and frozen
+(`__spark_entry__.QUALITY_LR_WEIGHTS`): the numpy gradient-descent
+reference in tests/test_classifier.py re-derives it, and scoring
+with it is hash-gated (`__spark_entry__.q_quality_classifier`),
+mirroring the train-pytest / encode-oracle split used for BPE.
 """
 
 from __future__ import annotations
@@ -79,74 +69,9 @@ def doc_features(
 
 def score_logreg(weights: list[float], cols: list[str] | None = None) -> Column:
     """sigmoid(w0 + w·x) as a pure column expression. `weights` is
-    [bias, w1..wd] frozen from `train_logreg`."""
+    [bias, w1..wd] over raw (unstandardized) features."""
     cols = cols or FEATURES
     z = F.lit(float(weights[0]))
     for w, c in zip(weights[1:], cols):
         z = z + F.lit(float(w)) * F.col(c)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-
-
-def train_logreg(
-    features: DataFrame,
-    label_col: str,
-    feature_cols: list[str] | None = None,
-    iters: int = 80,
-    lr: float = 2.0,
-    l2: float = 0.0,
-    sample_fraction: float | None = None,
-    seed: int = 7,
-) -> list[float]:
-    """Full-batch logistic regression by gradient descent; one Spark
-    aggregation job per iteration over the persisted feature frame.
-    Returns [bias, w1..wd]."""
-    feature_cols = feature_cols or FEATURES
-    df = features.select(
-        F.col(label_col).cast("double").alias("_y"), *feature_cols
-    )
-    if sample_fraction is not None:
-        df = df.sample(fraction=sample_fraction, seed=seed)
-    df = df.persist()
-    try:
-        d = len(feature_cols)
-        # z-score standardization (one extra aggregation pass) — GD
-        # on raw ratio features is badly conditioned; training runs
-        # in standardized space and the learned weights are folded
-        # back so score_logreg applies to RAW features
-        m = df.agg(
-            *[F.avg(c).alias(f"m{j}") for j, c in enumerate(feature_cols)],
-            *[
-                F.stddev_pop(c).alias(f"s{j}")
-                for j, c in enumerate(feature_cols)
-            ],
-        ).first()
-        mu = [m[f"m{j}"] for j in range(d)]
-        sd = [m[f"s{j}"] or 1.0 for j in range(d)]
-        sd = [s if s > 0 else 1.0 for s in sd]
-        zcols = [
-            ((F.col(c) - F.lit(mu[j])) / F.lit(sd[j])).alias(f"_z{j}")
-            for j, c in enumerate(feature_cols)
-        ]
-        zdf = df.select("_y", *zcols).persist()
-        znames = [f"_z{j}" for j in range(d)]
-        w = [0.0] * (d + 1)
-        for _ in range(iters):
-            p = score_logreg(w, znames)
-            err = p - F.col("_y")
-            aggs = [F.avg(err).alias("g0")] + [
-                F.avg(err * F.col(c)).alias(f"g{j + 1}")
-                for j, c in enumerate(znames)
-            ]
-            g = zdf.agg(*aggs).first()
-            w = [
-                wj - lr * (gj + l2 * wj)
-                for wj, gj in zip(w, [g[f"g{j}"] for j in range(d + 1)])
-            ]
-        zdf.unpersist()
-        # fold standardization into raw-space weights:
-        # w_raw_j = w_j / sd_j;  b_raw = b - Σ w_j·mu_j / sd_j
-        w_raw = [w[j + 1] / sd[j] for j in range(d)]
-        b_raw = w[0] - sum(w[j + 1] * mu[j] / sd[j] for j in range(d))
-        return [b_raw, *w_raw]
-    finally:
-        df.unpersist()

@@ -1,20 +1,17 @@
-"""Trainable BPE: train vs an independent pure-Python trainer,
-encode vs an independent pure-Python encoder, and the string-replace
-merge trick vs the classic list merge."""
+"""BPE: the pure-Python reference trainer re-derives the frozen
+merge list, encode matches the reference encoder, and the
+string-replace merge trick matches the classic list merge."""
 
 import random
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from osm_wayback_spark.functions.bpe import (
-    SEP,
-    bpe_token_count,
-    encode_bpe,
-    merge_word,
-    train_bpe,
-)
+import __spark_entry__
+from osm_wayback_spark.functions.bpe import SEP, bpe_token_count, encode_bpe
+from tests.test_streaming import SF_DIR
 
-# ---- independent reference (no imports from the engine's merge) ----
+# ---- the reference trainer and encoder (no imports from the engine) ----
 
 
 def _ref_merge(syms, l, r):
@@ -47,6 +44,14 @@ def _ref_train(word_freqs, num_merges, min_freq=2):
     return merges
 
 
+def _word_freqs(texts):
+    freqs = {}
+    for t in texts:
+        for w in t.split():
+            freqs[w] = freqs.get(w, 0) + 1
+    return freqs
+
+
 def _ref_encode(text, merges):
     toks = []
     for w in text.split():
@@ -74,26 +79,17 @@ def test_string_replace_trick_is_ltr_merge():
         body = replaced.strip(SEP)
         got = tuple(body.split(SEP + SEP)) if body else ()
         assert got == _ref_merge(syms, l, r), (syms, l, r)
-        assert got == merge_word(syms, l, r)
 
 
-def test_train_matches_independent_reference(spark):
-    corpus = [
-        "low lower lowest low low newer newest wider new new",
-        "the newer the better the wider the lower",
-        "low low low newest widest the the the",
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id long, text string"
-    )
-    freqs = {}
-    for t in corpus:
-        for w in t.split():
-            freqs[w] = freqs.get(w, 0) + 1
-    for n in (1, 5, 25):
-        assert train_bpe(docs, num_merges=n) == _ref_train(freqs, n)
-    # min_freq stops early identically
-    assert train_bpe(docs, num_merges=500) == _ref_train(freqs, 500)
+def test_ref_train_rederives_frozen_merges():
+    """`BPE_MERGES` is the reference trainer's output over the
+    whitespace-word histogram of the sf0.001 documents (40 merges,
+    min_freq=2)."""
+    texts = pq.read_table(
+        f"{SF_DIR}/documents.parquet", columns=["text"]
+    ).column("text").to_pylist()
+    merges = _ref_train(_word_freqs(texts), 40, min_freq=2)
+    assert merges == __spark_entry__.BPE_MERGES
 
 
 def test_encode_matches_independent_reference(spark):
@@ -106,11 +102,8 @@ def test_encode_matches_independent_reference(spark):
         "   ",
         "unseen zzz qqq",               # chars outside training set
     ]
-    train = spark.createDataFrame(
-        [(0, "low low lower newest aa aa aaaa ab abab the the")],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(train, num_merges=12, min_freq=1)
+    train = ["low low lower newest aa aa aaaa ab abab the the"]
+    merges = _ref_train(_word_freqs(train), 12, min_freq=1)
     assert ("a", "a") in merges  # the overlap-prone case is exercised
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
@@ -129,11 +122,8 @@ def test_encode_matches_independent_reference(spark):
 
 
 def test_encode_partition_independent(spark):
-    train = spark.createDataFrame(
-        [(0, "pack my box with five dozen liquor jugs " * 3)],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(train, num_merges=8, min_freq=1)
+    train = ["pack my box with five dozen liquor jugs " * 3]
+    merges = _ref_train(_word_freqs(train), 8, min_freq=1)
     docs = spark.createDataFrame(
         [(i, f"box of dozen jugs item{i}") for i in range(40)],
         "doc_id long, text string",

@@ -1,17 +1,19 @@
-"""Distilled quality/language classifier: Spark-aggregation GD vs an
-independent numpy implementation, and scoring as column math."""
+"""Distilled quality classifier: the numpy reference trainer
+re-derives the frozen weights, and scoring is column math."""
 
 import math
 
 import numpy as np
 from pyspark.sql import functions as F
 
+import __spark_entry__
+from osm_wayback_spark.functions.text import quality_score
 from osm_wayback_spark.operators.classifier import (
     FEATURES,
     doc_features,
     score_logreg,
-    train_logreg,
 )
+from tests.test_streaming import SF_DIR
 
 
 def _docs(spark):
@@ -19,16 +21,15 @@ def _docs(spark):
     for i in range(120):
         if i % 2 == 0:
             t = ("the cat and the dog of a house is to go " * (1 + i % 3)).strip()
-            lab = 1
         else:
             t = ("der hund 123 und 456; die katze; 789!!! " * (1 + i % 3)).strip()
-            lab = 0
-        rows.append((i, t, lab))
-    return spark.createDataFrame(rows, "doc_id long, text string, y long")
+        rows.append((i, t))
+    return spark.createDataFrame(rows, "doc_id long, text string")
 
 
 def _numpy_gd(X, y, iters, lr):
-    # mirrors train_logreg: z-score standardize, GD, fold back
+    # reference trainer: z-score standardize, full-batch GD, then fold
+    # the standardization back into raw-feature weights
     mu = X.mean(axis=0)
     sd = X.std(axis=0)
     sd = np.where(sd > 0, sd, 1.0)
@@ -43,16 +44,24 @@ def _numpy_gd(X, y, iters, lr):
     return np.concatenate([[b_raw], w_raw])
 
 
-def test_train_matches_numpy_and_separates(spark):
-    docs = _docs(spark)
-    feats = doc_features(docs).join(docs.select("doc_id", "y"), "doc_id")
-    w = train_logreg(feats, "y", iters=60, lr=2.0)
+def test_numpy_gd_rederives_frozen_weights(spark):
+    """`QUALITY_LR_WEIGHTS` is `_numpy_gd(..., 400, 4.0)` over the
+    sf0.001 documents' features, label = the quality gate
+    (quality_score >= 0.3), rows ordered by doc_id; the frozen
+    weights separate their own labels and score as the driver-side
+    sigmoid."""
+    w = __spark_entry__.QUALITY_LR_WEIGHTS
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    labels = docs.select(
+        "doc_id", (quality_score(F.col("text")) >= 0.3).cast("long").alias("y")
+    )
+    feats = doc_features(docs).join(labels, "doc_id")
 
     pdf = feats.orderBy("doc_id").toPandas()
     w_ref = _numpy_gd(
-        pdf[FEATURES].to_numpy(), pdf["y"].to_numpy().astype(float), 60, 2.0
+        pdf[FEATURES].to_numpy(), pdf["y"].to_numpy().astype(float), 400, 4.0
     )
-    assert np.allclose(w, w_ref, atol=1e-8), (w, w_ref)
+    assert np.allclose(w, w_ref, rtol=0, atol=1e-9), (w, w_ref)
 
     scored = feats.select(
         "doc_id", "y", score_logreg(w).alias("p")
@@ -64,18 +73,6 @@ def test_train_matches_numpy_and_separates(spark):
         frow = feats.filter(F.col("doc_id") == r.doc_id).first()
         z = w[0] + sum(wj * frow[c] for wj, c in zip(w[1:], FEATURES))
         assert abs(r.p - 1.0 / (1.0 + math.exp(-z))) < 1e-12
-
-
-def test_sample_fraction_and_l2(spark):
-    docs = _docs(spark)
-    feats = doc_features(docs).join(docs.select("doc_id", "y"), "doc_id")
-    w_l2 = train_logreg(feats, "y", iters=30, lr=2.0, l2=0.1)
-    w_no = train_logreg(feats, "y", iters=30, lr=2.0)
-    assert np.linalg.norm(w_l2) < np.linalg.norm(w_no)
-    w_s = train_logreg(feats, "y", iters=30, lr=2.0, sample_fraction=0.5)
-    scored = feats.select("y", score_logreg(w_s).alias("p")).collect()
-    acc = sum((r.p > 0.5) == (r.y == 1) for r in scored) / len(scored)
-    assert acc >= 0.9, acc
 
 
 def test_features_partition_independent(spark):

@@ -158,62 +158,6 @@ def test_shingle_semantics_python_model(tokens, n):
     assert got == exp
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.floats(min_value=-179.9, max_value=179.9),
-            st.floats(min_value=-84.9, max_value=84.9),
-        ),
-        min_size=1,
-        max_size=20,
-    ),
-    st.integers(min_value=0, max_value=10),
-)
-@settings(max_examples=50, deadline=None)
-def test_mvt_geometry_roundtrip(points, z):
-    """Pure-core MVT property: any MultiPoint encodes then decodes to
-    exactly its projected integer tile coordinates, for any zoom and
-    the tile containing the first point (coords outside the tile are
-    legal per-spec buffer values and must survive too)."""
-    from osm_wayback_spark.functions.mvt import (
-        decode_tile,
-        encode_tile,
-        project,
-    )
-
-    # tile of the first point at this zoom
-    n = 1 << z
-    tx = min(n - 1, max(0, int((points[0][0] + 180.0) / 360.0 * n)))
-    import math
-
-    lat = points[0][1]
-    rad = math.radians(lat)
-    merc = math.log(math.tan(rad) + 1.0 / math.cos(rad))
-    ty = min(n - 1, max(0, int((1.0 - merc / math.pi) / 2.0 * n)))
-    feat = {
-        "type": "Feature",
-        "geometry": {
-            "type": "MultiPoint",
-            "coordinates": [[lon, lat] for lon, lat in points],
-        },
-        "properties": {"n": len(points)},
-    }
-    layer = decode_tile(encode_tile([feat], z, tx, ty))["features"]
-    (f,) = layer["features"]
-    got = [pt for part in f["parts"] for pt in part]
-    exp = [project(lon, lat, z, tx, ty) for lon, lat in points]
-    assert got == exp
-    assert f["properties"] == {"n": len(points)}
-
-
-@given(st.integers(min_value=-(2**62), max_value=2**62))
-@settings(max_examples=200, deadline=None)
-def test_mvt_zigzag_roundtrip_property(n):
-    from osm_wayback_spark.functions.mvt import _unzigzag, _zigzag
-
-    assert _unzigzag(_zigzag(n)) == n
-
-
 # -- BPE merge/encode purity --------------------------------------------------
 
 
@@ -231,34 +175,12 @@ def test_bpe_python_core_train_encode_inverse(words_list, n_merges):
     the same tiny corpus never INCREASES token count vs raw chars,
     concatenating the tokens reproduces the word, and every token is
     either a single char or a learned merge product."""
-    from osm_wayback_spark.functions.bpe import (
-        encode_bpe_reference,
-        merge_word,
-    )
+    from tests.test_bpe import _ref_encode, _ref_train, _word_freqs
 
-    freqs = {}
-    for w in words_list:
-        freqs[w] = freqs.get(w, 0) + 1
-    # train with the module's own pure helpers (mirrors train_bpe's
-    # histogram loop without a Spark session)
-    vocab = {tuple(w): c for w, c in freqs.items()}
-    merges = []
-    for _ in range(n_merges):
-        stats = {}
-        for syms, c in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                stats[(a, b)] = stats.get((a, b), 0) + c
-        if not stats:
-            break
-        best = min(stats.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < 2:
-            break
-        merges.append(best[0])
-        vocab = {merge_word(s, *best[0]): c for s, c in vocab.items()}
-
+    merges = _ref_train(_word_freqs(words_list), n_merges)
     produced = {l + r for l, r in merges}
     text = " ".join(words_list)
-    toks = encode_bpe_reference(text, merges)
+    toks = _ref_encode(text, merges)
     assert "".join(toks) == "".join(words_list)
     assert len(toks) <= sum(len(w) for w in words_list)
     for t in toks:

@@ -132,16 +132,11 @@ def test_stitch_reversal_and_unclosed():
     assert rings == [] and unc == 1
 
 
-def test_relation_geometry_flows_into_mvt_tiles(spark, frames, tmp_path):
+def test_relation_geometry_flows_into_tiles(spark, frames):
     """End-to-end extension path: assembled relation MultiPolygons
-    feed assign_tiles and the MVT mbtiles sink unchanged — decode a
-    tile back and find the polygon with its hole."""
-    import gzip
-    import sqlite3
-
-    from osm_wayback_spark.functions.mvt import decode_tile
+    feed assign_tiles unchanged — some tile row carries the polygon
+    with its hole."""
     from osm_wayback_spark.operators.tiles import assign_tiles
-    from osm_wayback_spark.sources.sinks import write_mbtiles
 
     members, way_geoms = frames
     recon = reconstruct_relations(members, way_geoms).filter(
@@ -149,20 +144,18 @@ def test_relation_geometry_flows_into_mvt_tiles(spark, frames, tmp_path):
     )
     tiles = assign_tiles(
         recon, z=9, geometry_col="geometry", payload_cols=("id", "version")
+    ).collect()
+    assert tiles
+
+    def polygons(feature_json):
+        geom = json.loads(feature_json)
+        if geom["type"] == "Polygon":
+            return [geom["coordinates"]]
+        return geom["coordinates"] if geom["type"] == "MultiPolygon" else []
+
+    assert any(
+        len(rings) >= 2 for r in tiles for rings in polygons(r.feature_json)
     )
-    assert tiles.count() > 0
-    path = str(tmp_path / "relations.mbtiles")
-    stats = write_mbtiles(tiles, path, name="relations")
-    assert stats["tiles"] >= 1
-    con = sqlite3.connect(path)
-    blobs = [r[0] for r in con.execute("SELECT tile_data FROM tiles")]
-    con.close()
-    found_poly_with_hole = False
-    for blob in blobs:
-        for f in decode_tile(gzip.decompress(blob))["features"]["features"]:
-            if f["type"] == "POLYGON" and len(f["parts"]) >= 2:
-                found_poly_with_hole = True
-    assert found_poly_with_hole
 
 
 def test_assembly_plan_shape(spark, frames, plan_nodes):
