@@ -333,7 +333,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from osm_wayback_spark.operators.dedup import jaccard_pairs
 
     docs = _t(spark, sf_dir, "documents")
-    return jaccard_pairs(docs, n=3, threshold=0.2, max_df=None)
+    return jaccard_pairs(docs, n=3, threshold=0.2)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:

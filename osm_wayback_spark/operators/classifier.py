@@ -35,10 +35,9 @@ FEATURES = ["f_len", "f_stop", "f_punct", "f_wlen", "f_digit"]
 _PUNCT = r"[^\.\,\;\:\!\?]"
 
 
-def doc_features(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Surface features per document (exact arithmetic only):
+def doc_features(docs: DataFrame) -> DataFrame:
+    """Surface features of each document's ``text`` → (doc_id,
+    f_len, …, f_digit), exact arithmetic only:
 
     - f_len:   min(len/500, 1) — length saturation
     - f_stop:  English stopword hits / tokens
@@ -48,11 +47,11 @@ def doc_features(
     """
     from ..functions.text import _EN, _hits, token_count
 
-    t = F.col(text_col)
+    t = F.col("text")
     n_tok = F.greatest(token_count(t), F.lit(1)).cast("double")
     n_chr = F.greatest(F.length(t), F.lit(1)).cast("double")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.least(F.length(t) / 500.0, F.lit(1.0)).alias("f_len"),
         (_hits(t, _EN).cast("double") / n_tok).alias("f_stop"),
         (
@@ -67,11 +66,10 @@ def doc_features(
     )
 
 
-def score_logreg(weights: list[float], cols: list[str] | None = None) -> Column:
+def score_logreg(weights: list[float]) -> Column:
     """sigmoid(w0 + w·x) as a pure column expression. `weights` is
-    [bias, w1..wd] over raw (unstandardized) features."""
-    cols = cols or FEATURES
+    [bias, w1..wd] over the raw (unstandardized) ``FEATURES``."""
     z = F.lit(float(weights[0]))
-    for w, c in zip(weights[1:], cols):
+    for w, c in zip(weights[1:], FEATURES):
         z = z + F.lit(float(w)) * F.col(c)
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))

@@ -31,15 +31,15 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sample_bucket(id_col: Column, buckets: int = 100) -> Column:
-    """Deterministic per-id bucket in [0, buckets): integer value of
-    the first 8 hex chars of md5(id) mod buckets. Stable across
+def sample_bucket(id_col: Column) -> Column:
+    """Deterministic per-id percent bucket in [0, 100): integer value
+    of the first 8 hex chars of md5(id) mod 100. Stable across
     engines (DuckDB mirrors it exactly), runs, and partitionings —
     the property a reproducible corpus sample needs."""
     return (
         F.conv(F.substring(F.md5(id_col.cast("string")), 1, 8), 16, 10)
         .cast("long")
-        % buckets
+        % 100
     )
 
 
@@ -47,29 +47,22 @@ def stratified_sample(
     documents: DataFrame,
     rates: dict[str, int],
     default_rate: int = 100,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Keep each document with a per-stratum percentage: document d
+    """Keep each document with a per-``lang`` percentage: document d
     of stratum s survives iff sample_bucket(d) < rates.get(s,
     default_rate). Zero-shuffle, reproducible (hash-based, not
     random), and exact in expectation — the standard way to rebalance
     a language/source mix at corpus scale."""
     rate = F.lit(default_rate)
     for stratum, pct in sorted(rates.items()):
-        rate = F.when(F.col(stratum_col) == stratum, F.lit(pct)).otherwise(rate)
-    return documents.filter(sample_bucket(F.col(id_col)) < rate)
+        rate = F.when(F.col("lang") == stratum, F.lit(pct)).otherwise(rate)
+    return documents.filter(sample_bucket(F.col("doc_id")) < rate)
 
 
-def _with_stream_end(
-    documents: DataFrame,
-    token_col: str,
-    stratum_col: str,
-    id_col: str,
-    shards: int | None,
-) -> DataFrame:
-    """+ ``_stream_end``: the INCLUSIVE per-stratum running token sum
-    in global (stratum, id) order — the prefix sum both packers need.
+def _with_stream_end(documents: DataFrame, shards: int | None) -> DataFrame:
+    """+ ``_stream_end``: the INCLUSIVE per-stratum running ``n_tokens``
+    sum in global (lang, doc_id) order — the prefix sum both packers
+    need.
 
     Two physically different plans, same values (pytest-pinned on a
     90%-one-stratum skew fixture):
@@ -102,52 +95,47 @@ def _with_stream_end(
         shards = n if n > par else 0
     if shards and shards > 1:
         d = documents.repartitionByRange(
-            shards, F.col(stratum_col), F.col(id_col)
+            shards, F.col("lang"), F.col("doc_id")
         ).withColumn("_pid", F.spark_partition_id())
         w_in = (
-            Window.partitionBy(stratum_col, "_pid")
-            .orderBy(id_col)
+            Window.partitionBy("lang", "_pid")
+            .orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
-        totals = d.groupBy(stratum_col, "_pid").agg(
-            F.sum(token_col).alias("_t")
-        )
+        totals = d.groupBy("lang", "_pid").agg(F.sum("n_tokens").alias("_t"))
         w_off = (
-            Window.partitionBy(stratum_col)
+            Window.partitionBy("lang")
             .orderBy("_pid")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         offsets = totals.select(
-            stratum_col,
+            "lang",
             "_pid",
             F.coalesce(F.sum("_t").over(w_off), F.lit(0)).alias("_off"),
         )
         return (
-            d.join(F.broadcast(offsets), [stratum_col, "_pid"])
+            d.join(F.broadcast(offsets), ["lang", "_pid"])
             .withColumn(
-                "_stream_end", F.sum(token_col).over(w_in) + F.col("_off")
+                "_stream_end", F.sum("n_tokens").over(w_in) + F.col("_off")
             )
             .drop("_pid", "_off")
         )
     w = (
-        Window.partitionBy(stratum_col)
-        .orderBy(id_col)
+        Window.partitionBy("lang")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return documents.withColumn("_stream_end", F.sum(token_col).over(w))
+    return documents.withColumn("_stream_end", F.sum("n_tokens").over(w))
 
 
 def pack_tokens(
     documents: DataFrame,
     budget: int,
-    token_col: str = "n_tokens",
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
     shards: int | None = None,
 ) -> DataFrame:
-    """Greedy sequential token packing: within each stratum, in
-    deterministic ``id_col`` order, assign each document to chunk
-    floor(tokens_before_it / budget). → input columns +
+    """Greedy sequential token packing: within each ``lang`` stratum,
+    in ``doc_id`` order, assign each document to chunk
+    floor(n_tokens_before_it / budget). → input columns +
     ``chunk_id``. A chunk may overflow by the one document that
     straddles its boundary (documents are never split).
 
@@ -155,11 +143,11 @@ def pack_tokens(
     a distributed two-pass form at scale so no stratum serializes
     through one window reducer (r6 verdict item 2)."""
     cols = list(documents.columns)
-    d = _with_stream_end(documents, token_col, stratum_col, id_col, shards)
+    d = _with_stream_end(documents, shards)
     cum = F.col("_stream_end")
     return d.select(
         *cols,
-        F.floor((cum - F.col(token_col)) / budget)
+        F.floor((cum - F.col("n_tokens")) / budget)
         .cast("long")
         .alias("chunk_id"),
     )
@@ -168,13 +156,10 @@ def pack_tokens(
 def example_windows(
     documents: DataFrame,
     example_len: int,
-    token_col: str = "n_tokens",
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
     shards: int | None = None,
 ) -> DataFrame:
-    """GPT-style concat-and-chunk sequence packing: the stratum's
-    token stream (documents concatenated in deterministic ``id_col``
+    """GPT-style concat-and-chunk sequence packing: the ``lang``
+    stratum's ``n_tokens`` stream (documents concatenated in ``doc_id``
     order) is cut into fixed ``example_len`` training examples, and
     documents ARE split across example boundaries — the complement
     of ``pack_tokens`` (which never splits). → one row per
@@ -197,16 +182,12 @@ def example_windows(
     bigint offsets — floating-point floor() drifts past 2^53
     cumulative tokens (r6 advice)."""
     L = F.lit(example_len)
-    d = _with_stream_end(
-        documents.filter(F.col(token_col) > 0),
-        token_col, stratum_col, id_col, shards,
-    )
+    d = _with_stream_end(documents.filter(F.col("n_tokens") > 0), shards)
     end = F.col("_stream_end")  # exclusive end offset in stream
     with_off = d.select(
-        F.col(stratum_col).alias("stratum"),
-        F.col(id_col).alias("doc_id"),
-        F.col(token_col).alias("_n"),
-        (end - F.col(token_col)).alias("_start"),
+        F.col("lang").alias("stratum"),
+        "doc_id",
+        (end - F.col("n_tokens")).alias("_start"),
         end.alias("_end"),
     )
     seg = with_off.select(
@@ -237,8 +218,6 @@ def contamination_screen(
     train_docs: DataFrame,
     eval_docs: DataFrame,
     n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing any
     word n-gram with an evaluation set → (doc_id, n_hits = distinct
@@ -258,8 +237,8 @@ def contamination_screen(
     from ..plans.parallel import fanout_small
 
     def side(df: DataFrame, out_id: str) -> DataFrame:
-        g = F.explode(shingles(F.col(text_col), n)).alias("g")
-        return df.select(F.col(id_col).alias(out_id), g)
+        g = F.explode(shingles(F.col("text"), n)).alias("g")
+        return df.select(F.col("doc_id").alias(out_id), g)
 
     t = side(fanout_small(train_docs), "doc_id")
     ev = F.broadcast(side(eval_docs, "eval_id"))
@@ -276,10 +255,8 @@ def contamination_screen(
 def mix_rebalance(
     docs: DataFrame,
     targets: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
 ) -> DataFrame:
-    """Rebalance the corpus to a target stratum mix (the
+    """Rebalance the corpus to a target ``lang`` mix (the
     Pile/Dolma-style domain-mixing step): given target PROPORTIONS
     per stratum, keep the largest deterministic subset whose mix
     matches them — the achievable total is limited by the scarcest
@@ -296,13 +273,9 @@ def mix_rebalance(
     `targets` (or with target 0) are dropped."""
     tgt = docs.sparkSession.createDataFrame(
         [(k, float(v)) for k, v in targets.items() if v > 0],
-        f"{stratum_col} string, p double",
+        "lang string, p double",
     )
-    cnt = (
-        docs.groupBy(stratum_col)
-        .agg(F.count("*").alias("n"))
-        .join(tgt, stratum_col)
-    )
+    cnt = docs.groupBy("lang").agg(F.count("*").alias("n")).join(tgt, "lang")
     # limiting-stratum minimum as a global window over the TINY
     # per-stratum counts frame (bounded by |targets| rows) instead of
     # a separate scalar aggregate + crossJoin(broadcast(...)): one
@@ -311,7 +284,7 @@ def mix_rebalance(
     # IEEE evaluation order), so keep_pct and the kept row set are
     # unchanged.
     rates = cnt.select(
-        stratum_col,
+        "lang",
         F.floor(
             F.lit(100.0)
             * F.min(F.col("n") / F.col("p")).over(Window.partitionBy())
@@ -320,24 +293,16 @@ def mix_rebalance(
         ).cast("int").alias("keep_pct"),
     )
     return (
-        docs.join(F.broadcast(rates), stratum_col)
-        .filter(sample_bucket(F.col(id_col)) < F.col("keep_pct"))
-        .select(F.col(id_col).alias("doc_id"), stratum_col)
+        docs.join(F.broadcast(rates), "lang")
+        .filter(sample_bucket(F.col("doc_id")) < F.col("keep_pct"))
+        .select("doc_id", "lang")
     )
 
 
-def pack_summary(
-    packed: DataFrame,
-    token_col: str = "n_tokens",
-    stratum_col: str = "lang",
-) -> DataFrame:
-    """Per (stratum, chunk) fill report → (stratum, chunk_id,
-    n_docs, chunk_tokens): the number a batch scheduler actually
-    consumes."""
-    return (
-        packed.groupBy(stratum_col, "chunk_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(token_col).cast("long").alias("chunk_tokens"),
-        )
+def pack_summary(packed: DataFrame) -> DataFrame:
+    """Per (lang, chunk) fill report → (lang, chunk_id, n_docs,
+    chunk_tokens): the number a batch scheduler actually consumes."""
+    return packed.groupBy("lang", "chunk_id").agg(
+        F.count("*").alias("n_docs"),
+        F.sum("n_tokens").cast("long").alias("chunk_tokens"),
     )

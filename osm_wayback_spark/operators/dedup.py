@@ -143,10 +143,10 @@ def band_buckets(
     signatures: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    id_col: str = "doc_id",
-    id_out: str | None = None,
+    id_out: str = "doc_id",
 ) -> DataFrame:
-    """Banded LSH bucket rows → (``id_out``, band, bh).
+    """Banded LSH bucket rows → (``id_out``, band, bh); ``id_out``
+    names the signatures' doc_id in the output.
 
     Band hash = md5(concat_ws('|') of the band's signature slots).
     THE one banding
@@ -154,7 +154,6 @@ def band_buckets(
     ``streaming_near_dup_flags`` (stream-static join) both call this,
     so corpus bucket tables precomputed by one path are always
     compatible with the other (cross-checked by pytest)."""
-    id_out = id_out or id_col
     rows_per_band = num_hashes // bands
     band_cols = []
     for b in range(bands):
@@ -165,7 +164,7 @@ def band_buckets(
             )
         )
     return signatures.select(
-        F.col(id_col).alias(id_out), F.explode(F.array(*band_cols)).alias("bk")
+        F.col("doc_id").alias(id_out), F.explode(F.array(*band_cols)).alias("bk")
     ).select(id_out, F.col("bk.band").alias("band"), F.col("bk.bh").alias("bh"))
 
 
@@ -206,21 +205,19 @@ def jaccard_pairs(
     documents: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = 1000,
+    max_df: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard over pairs sharing ≥1 shingle.
 
     → (doc_a, doc_b, jaccard) with jaccard ≥ threshold. ``max_df``
     drops shingles appearing in more than that many docs before the
-    self-join (quadratic-blowup guard at planet scale); pass None to
-    disable (the oracle-parity configuration)."""
-    sh = doc_shingles(documents, n)
-    if max_df is not None:
-        df_counts = sh.groupBy("shingle").agg(F.countDistinct("doc_id").alias("df"))
-        sh = sh.join(
-            F.broadcast(df_counts.filter(F.col("df") <= max_df).select("shingle")),
-            on="shingle",
-        )
+    self-join (quadratic-blowup guard at planet scale; logged, see
+    _cap_buckets); None is the exact/oracle configuration. Each
+    (doc_id, shingle) row is unique (``shingles`` is array_distinct),
+    so a shingle's row count is its document frequency."""
+    sh = _cap_buckets(
+        doc_shingles(documents, n), ["shingle"], max_df, "jaccard_pairs"
+    )
     sizes = sh.groupBy("doc_id").agg(F.countDistinct("shingle").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -254,7 +251,6 @@ def minhash_dedup(
     documents: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    n: int = 3,
     threshold: float = 0.5,
     max_bucket: int | None = None,
     shingled: DataFrame | None = None,
@@ -267,7 +263,7 @@ def minhash_dedup(
     its checkpointed table."""
     if shingled is None:
         shingled = fanout_small(documents).select(
-            "doc_id", shingles(F.col("text"), n).alias("_sh")
+            "doc_id", shingles(F.col("text")).alias("_sh")
         )
     else:
         # a checkpointed (doc_id, _sh) table is scan-adjacent — same
@@ -327,7 +323,7 @@ def _verify_jaccard_arrays(
 SIMHASH_BITS = 48  # fits a signed 64-bit long in both engines
 
 
-def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """→ (doc_id, simhash): weighted bit votes over token hashes.
 
     Token hash = first 12 hex chars of md5(token) (48 bits), weights =
@@ -346,11 +342,11 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
             F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, F.col("cnt"))
             .otherwise(-F.col("cnt"))
         ).alias(f"v{b}")
-        for b in range(bits)
+        for b in range(SIMHASH_BITS)
     ]
     voted = counted.groupBy("doc_id").agg(*votes)
     sig = None
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"v{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
     return voted.select("doc_id", sig.cast("long").alias("simhash"))
@@ -358,11 +354,9 @@ def simhash(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFrame:
 
 def connected_components(
     pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
     max_iters: int = 20,
 ) -> DataFrame:
-    """Near-duplicate CLUSTERING: undirected candidate pairs →
+    """Near-duplicate CLUSTERING: undirected (doc_a, doc_b) pairs →
     (node, component) with component = min node id reachable.
 
     Iterative min-label propagation: each round every node takes the
@@ -380,9 +374,10 @@ def connected_components(
     # → 2.9 s for the dedupe_corpus CC stage at sf0.1). The edge set
     # is candidate-bounded — the standard persist point of every
     # iterative graph algorithm on Spark.
+    a, b = F.col("doc_a"), F.col("doc_b")
     edges = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionByName(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
+        pairs.select(a.alias("src"), b.alias("dst"))
+        .unionByName(pairs.select(b.alias("src"), a.alias("dst")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -440,9 +435,7 @@ def connected_components(
     return labels.select("node", F.col("label").alias("component"))
 
 
-def line_dedup(
-    documents: DataFrame, min_chars: int = 30, sep: str = "\n"
-) -> DataFrame:
+def line_dedup(documents: DataFrame, min_chars: int = 30) -> DataFrame:
     """Corpus-wide LINE-level exact dedup (the C4/MassiveText recipe:
     any line occurring more than once in the corpus survives only at
     its FIRST occurrence) → (doc_id, text, n_lines, n_dropped) with
@@ -464,7 +457,7 @@ def line_dedup(
     self-join, no Python. Fully SQL-expressible → under the DuckDB
     hash gate."""
     lines = documents.select(
-        "doc_id", F.posexplode(F.split("text", sep)).alias("idx", "ln")
+        "doc_id", F.posexplode(F.split("text", "\n")).alias("idx", "ln")
     ).withColumn(
         "_h",
         F.when(F.length("ln") >= min_chars, F.md5("ln")).otherwise(
@@ -488,7 +481,7 @@ def line_dedup(
                 ),
                 lambda s: s["ln"],
             ),
-            sep,
+            "\n",
         ).alias("text"),
         F.count("*").alias("n_lines"),
         F.sum(F.when(~F.col("_keep"), 1).otherwise(0)).alias("n_dropped"),
@@ -499,7 +492,6 @@ def dedupe_corpus(
     documents: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    n: int = 3,
     threshold: float = 0.5,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -528,7 +520,7 @@ def dedupe_corpus(
         .select(
             "doc_id",
             F.md5("text").alias("_h"),
-            shingles(F.col("text"), n).alias("_sh"),
+            shingles(F.col("text")).alias("_sh"),
         )
         .localCheckpoint(eager=True)
     )
@@ -536,7 +528,7 @@ def dedupe_corpus(
         st.select("doc_id", F.col("_h").alias("h"))
     ).select("doc_id", "keep_id", F.col("is_dup").alias("is_exact_dup"))
     verified = minhash_dedup(
-        documents, num_hashes, bands, n, threshold,
+        documents, num_hashes, bands, threshold,
         max_bucket=max_bucket,
         shingled=st.select("doc_id", "_sh"),
     ).select("doc_a", "doc_b")
@@ -568,7 +560,6 @@ def dedupe_increment(
     corpus_docs: DataFrame,
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
-    n: int = 3,
     threshold: float = 0.3,
     max_bucket: int | None = None,
 ) -> DataFrame:
@@ -599,8 +590,8 @@ def dedupe_increment(
         .select("doc_id")
         .withColumn("exact_dup", F.lit(True))
     )
-    sig_new = minhash_signatures(new_docs, num_hashes, n)
-    sig_c = minhash_signatures(corpus_docs, num_hashes, n)
+    sig_new = minhash_signatures(new_docs, num_hashes)
+    sig_c = minhash_signatures(corpus_docs, num_hashes)
     bk_new = band_buckets(sig_new, num_hashes, bands, id_out="doc_a")
     bk_c = band_buckets(sig_c, num_hashes, bands, id_out="doc_b")
     bk_c = _cap_buckets(bk_c, ["band", "bh"], max_bucket, "dedupe_increment")
@@ -625,11 +616,9 @@ def dedupe_increment(
     # by fanout_small, so only the new side gets the parallelism floor
     shing = (
         fanout_small(new_docs)
-        .select("doc_id", shingles(F.col("text"), n).alias("_sh"))
+        .select("doc_id", shingles(F.col("text")).alias("_sh"))
         .unionByName(
-            corpus_cand.select(
-                "doc_id", shingles(F.col("text"), n).alias("_sh")
-            )
+            corpus_cand.select("doc_id", shingles(F.col("text")).alias("_sh"))
         )
     )
     near = (
@@ -658,8 +647,6 @@ def winnow_fingerprints(
     documents: DataFrame,
     k: int = 16,
     w: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     chunk_chars: int | None = 4096,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
@@ -702,9 +689,9 @@ def winnow_fingerprints(
     span = k + w - 1  # chars covered by one hash window
     documents = fanout_small(documents)
     norm = documents.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.lower(
-            F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+            F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
         ).alias("_t"),
     ).filter(F.length("_t") >= span)
     t = F.col("_t")

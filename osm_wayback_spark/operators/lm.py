@@ -16,12 +16,12 @@ Design (100 TB shape):
   pair counts and the derived prefix totals), so scoring is
   explode → broadcast-join → per-doc aggregate: the only shuffle is
   the final groupBy(doc_id), and unseen n-grams fall out of the
-  add-k smoothing algebra for free — with c and C coalesced to 0,
-  log((0+k)/(0+k·V)) = log(1/V), the uniform backoff, with NO
+  add-one smoothing algebra for free — with c and C coalesced to 0,
+  log((0+1)/(0+V)) = log(1/V), the uniform backoff, with NO
   special-case branch.
 
-Smoothing: add-k (Laplace, k=1 default):
-    logp(next | prefix) = ln((c + k) / (C + k·V))
+Smoothing: add-one (Laplace):
+    logp(next | prefix) = ln((c + 1) / (C + V))
 where c = count(prefix, next), C = count(prefix, ·) and V is the
 alphabet size measured as distinct `next` chars in training.
 Per-doc perplexity = exp(-avg logp) over the doc's n-grams; docs
@@ -69,37 +69,29 @@ def char_ngrams(text: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<struct<prefix:string,nxt:string>>"))
 
 
-def _exploded(docs: DataFrame, n: int, text_col: str) -> DataFrame:
+def _exploded(docs: DataFrame, n: int) -> DataFrame:
     # normalization in its OWN projection so the transform lambda
     # sees a plain column (substring per element, not regex per
     # element — see char_ngrams docstring)
     return (
         fanout_small(docs)
-        .select("doc_id", _norm(F.col(text_col)).alias("_t"))
+        .select("doc_id", _norm(F.col("text")).alias("_t"))
         .select("doc_id", F.explode(char_ngrams(F.col("_t"), n)).alias("g"))
         .select("doc_id", "g.prefix", "g.nxt")
     )
 
 
-def train_char_lm(
-    docs: DataFrame, n: int = 3, text_col: str = "text"
-) -> DataFrame:
+def train_char_lm(docs: DataFrame, n: int = 3) -> DataFrame:
     """→ model (prefix, nxt, c_pair): char n-gram counts. Alphabet-bounded
     (≤ |Σ|^n rows), broadcastable by construction."""
     return (
-        _exploded(docs, n, text_col)
+        _exploded(docs, n)
         .groupBy("prefix", "nxt")
         .agg(F.count("*").alias("c_pair"))
     )
 
 
-def lm_perplexity(
-    docs: DataFrame,
-    model: DataFrame,
-    n: int = 3,
-    k: float = 1.0,
-    text_col: str = "text",
-) -> DataFrame:
+def lm_perplexity(docs: DataFrame, model: DataFrame, n: int = 3) -> DataFrame:
     """Score documents against a trained model → (doc_id, n_grams,
     ppl). Broadcast-joins the model; one shuffle total (the per-doc
     aggregate). An empty model is an error: with v=0 the smoothing
@@ -121,18 +113,15 @@ def lm_perplexity(
             "non-empty corpus before scoring"
         )
     totals = model.groupBy("prefix").agg(F.sum("c_pair").alias("c_prefix"))
-    grams = _exploded(docs, n, text_col)
+    grams = _exploded(docs, n)
     scored = (
         grams.join(F.broadcast(model), ["prefix", "nxt"], "left")
         .join(F.broadcast(totals), ["prefix"], "left")
         .select(
             "doc_id",
             F.log(
-                (F.coalesce(F.col("c_pair"), F.lit(0)) + F.lit(float(k)))
-                / (
-                    F.coalesce(F.col("c_prefix"), F.lit(0))
-                    + F.lit(float(k)) * F.lit(float(v))
-                )
+                (F.coalesce(F.col("c_pair"), F.lit(0)) + F.lit(1.0))
+                / (F.coalesce(F.col("c_prefix"), F.lit(0)) + F.lit(float(v)))
             ).alias("logp"),
         )
     )
@@ -144,13 +133,13 @@ def lm_perplexity(
 
 def ppl_buckets(
     scored: DataFrame,
-    col: str = "ppl",
     probs: tuple[float, float] = (1.0 / 3, 2.0 / 3),
     labels: tuple[str, str, str] = ("head", "middle", "tail"),
 ) -> DataFrame:
     """CCNet-style perplexity terciles (Wenzek et al. 2020 split the
     corpus into head/middle/tail by LM perplexity terciles; head =
-    lowest perplexity = most in-distribution): + ``bucket``.
+    lowest perplexity = most in-distribution): + ``bucket`` from
+    ``ppl``.
 
     The cut points are ONE scalar aggregate row broadcast back onto
     the corpus — no global sort, no ntile window over the full
@@ -158,15 +147,15 @@ def ppl_buckets(
     semantics to DuckDB's quantile_cont, so the whole operator is
     hash-gatable)."""
     cuts = scored.agg(
-        F.percentile(F.col(col), F.lit(list(probs))).alias("_t")
+        F.percentile(F.col("ppl"), F.lit(list(probs))).alias("_t")
     ).select(F.col("_t")[0].alias("_t1"), F.col("_t")[1].alias("_t2"))
     lo, mid, hi = labels
     return (
         scored.crossJoin(F.broadcast(cuts))
         .withColumn(
             "bucket",
-            F.when(F.col(col) <= F.col("_t1"), F.lit(lo))
-            .when(F.col(col) <= F.col("_t2"), F.lit(mid))
+            F.when(F.col("ppl") <= F.col("_t1"), F.lit(lo))
+            .when(F.col("ppl") <= F.col("_t2"), F.lit(mid))
             .otherwise(F.lit(hi)),
         )
         .drop("_t1", "_t2")

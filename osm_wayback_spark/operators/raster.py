@@ -72,9 +72,8 @@ def zonal_stats(
     values: DataFrame,
     polygons: DataFrame,
     res: int = DEFAULT_RES,
-    value_col: str = "value",
 ) -> DataFrame:
-    """Zonal statistics: aggregate a cell-keyed value raster per
+    """Zonal statistics: aggregate a values(cell, value) raster per
     polygon zone → (polygon_id, n_cells, v_min, v_max, v_sum, v_avg).
 
     Scale shape: the polygon side rasterizes ONCE (bounded per-
@@ -86,15 +85,14 @@ def zonal_stats(
     absent (LEFT-join the polygon table afterwards if zeros are
     wanted)."""
     zones = rasterize_polygons(polygons, res)
-    v = values.select("cell", F.col(value_col).alias("_v"))
     return (
-        zones.join(v, on="cell")
+        zones.join(values.select("cell", "value"), on="cell")
         .groupBy("polygon_id")
         .agg(
             F.count("*").alias("n_cells"),
-            F.min("_v").alias("v_min"),
-            F.max("_v").alias("v_max"),
-            F.sum("_v").alias("v_sum"),
-            F.avg("_v").alias("v_avg"),
+            F.min("value").alias("v_min"),
+            F.max("value").alias("v_max"),
+            F.sum("value").alias("v_sum"),
+            F.avg("value").alias("v_avg"),
         )
     )

@@ -58,9 +58,10 @@ def _norm(a):
     )
 
 
-def with_cosine(pairs: DataFrame, a: str = "a_emb", b: str = "b_emb") -> DataFrame:
-    ca = F.transform(F.col(a), lambda x: x.cast("double"))
-    cb = F.transform(F.col(b), lambda x: x.cast("double"))
+def with_cosine(pairs: DataFrame) -> DataFrame:
+    """+ ``cosine`` of the ``a_emb`` and ``b_emb`` arrays."""
+    ca = F.transform(F.col("a_emb"), lambda x: x.cast("double"))
+    cb = F.transform(F.col("b_emb"), lambda x: x.cast("double"))
     return pairs.withColumn(
         "cosine", F.round(_dot(ca, cb) / (_norm(ca) * _norm(cb)), 6)
     )
@@ -303,25 +304,22 @@ def ann_lsh_candidates(
 
 
 def near_dup_candidates(
-    embeddings: DataFrame,
-    n_planes: int = 3,
-    tables: int = 12,
-    max_bucket: int | None = None,
+    embeddings: DataFrame, max_bucket: int | None = None
 ) -> DataFrame:
     """Embedding near-dup CANDIDATE pairs → distinct (vec_a, vec_b),
-    a < b: pairs sharing ≥1 LSH bucket in any table.
+    a < b: pairs sharing ≥1 LSH bucket in any of 12 tables of 3
+    hyperplanes each.
 
     The scale-safe replacement for the all-pairs theta self-join: the
     only join is an equi-join on the bucket id (shuffle on a short
     key), so cost is Σ_buckets C(n_b, 2), not C(N, 2). Recall for a
-    cosine-θ pair is 1-(1-(1-θ/π)^n_planes)^tables — the defaults give
-    ≥ 0.95 for cosine ≥ 0.4 (pytest-gated vs the exact all-pairs at
-    test scale). At planet scale raise ``n_planes`` (smaller buckets)
-    and ``tables`` together, and set ``max_bucket`` to guard degenerate
-    buckets (logged, see operators.dedup._cap_buckets)."""
+    cosine-θ pair is 1-(1-(1-θ/π)^3)^12 — ≥ 0.95 for cosine ≥ 0.4
+    (pytest-gated vs the exact all-pairs at test scale). At planet
+    scale set ``max_bucket`` to guard degenerate buckets (logged, see
+    operators.dedup._cap_buckets)."""
     from .dedup import _cap_buckets
 
-    rows = lsh_bucket_rows(embeddings, n_planes, tables).select(
+    rows = lsh_bucket_rows(embeddings, 3, 12).select(
         "vec_id", "bucket"
     )
     rows = _cap_buckets(rows, ["bucket"], max_bucket, "near_dup_candidates")
@@ -654,9 +652,6 @@ def train_pq_codebooks(
     embeddings: DataFrame,
     m: int = 8,
     ksub: int = 16,
-    iters: int = 10,
-    max_train: int = 20_000,
-    seed: int = 42,
 ) -> np.ndarray:
     """Product-quantization codebooks (Jégou, Douze & Schmid 2011,
     "Product Quantization for Nearest Neighbor Search" — public
@@ -669,9 +664,10 @@ def train_pq_codebooks(
     cluster RAM (64-dim float32 = 256 B → 8 B at m=8, 32×).
 
     Codebooks are ALWAYS sample-trained (the paper's own protocol):
-    a deterministic vec_id-ordered sample of ``max_train`` rows is
-    collected and Lloyd's runs per-subspace in numpy on the driver —
-    cost O(max_train·ksub·d·iters), independent of corpus size.
+    the first 20,000 rows in vec_id order are collected and 10 Lloyd
+    iterations run per subspace in numpy on the driver (seeded
+    initial centroids) — cost O(20,000·ksub·d·10), independent of
+    corpus size.
     Vectors are unit-normalized before splitting, matching the
     cosine re-rank metric downstream (L2 on unit vectors is
     monotone in cosine)."""
@@ -681,12 +677,12 @@ def train_pq_codebooks(
     rows = (
         embeddings.select("vec_id", "embedding")
         .orderBy("vec_id")
-        .limit(max_train)
+        .limit(20_000)
         .collect()
     )
     mat = _unit_rows(np.array([r.embedding for r in rows], dtype=np.float64))
     dsub = dim // m
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     books = np.empty((m, ksub, dsub))
     for j in range(m):
         sub = mat[:, j * dsub : (j + 1) * dsub]
@@ -694,7 +690,7 @@ def train_pq_codebooks(
         cent = sub[rng.choice(len(sub), size=k_eff, replace=False)]
         if k_eff < ksub:  # degenerate tiny corpus: pad by repetition
             cent = np.vstack([cent] * ((ksub + k_eff - 1) // k_eff))[:ksub]
-        for _ in range(iters):
+        for _ in range(10):
             d2 = ((sub[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for c in range(ksub):

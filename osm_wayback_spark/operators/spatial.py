@@ -94,9 +94,6 @@ def point_in_polygon(
     points: DataFrame,
     polygons: DataFrame,
     res: int = DEFAULT_RES,
-    point_id: str = "point_id",
-    lon: str = "lon",
-    lat: str = "lat",
 ) -> DataFrame:
     """→ (point_id, polygon_id) pairs where the point lies inside.
 
@@ -114,11 +111,7 @@ def point_in_polygon(
     # exactness argued there). Fully lazy, no driver action; the only
     # per-res cost is the explode + one integer divide, not a second
     # mercator projection.
-    base = points.select(
-        F.col(point_id).alias("point_id"),
-        F.col(lon).alias("lon"),
-        F.col(lat).alias("lat"),
-    )
+    base = points.select("point_id", "lon", "lat")
     from ..functions.cells import parent_cell_cols, tile_xy_cols
 
     res_agg = F.broadcast(
@@ -174,14 +167,9 @@ def point_in_polygon(
 # ---------------------------------------------------------------------------
 # kNN
 
-def knn_brute(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    point_id: str = "point_id",
-    query_id: str = "query_id",
-) -> DataFrame:
-    """Exact kNN, query side broadcast (small). → (query_id, point_id,
+def knn_brute(points: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """Exact kNN of points(point_id, lon, lat) for queries(query_id,
+    lon, lat), query side broadcast (small). → (query_id, point_id,
     dist2, rank). Deterministic tie-break on point_id.
 
     Scale shape: broadcast nested-loop against the (huge) point side
@@ -191,16 +179,8 @@ def knn_brute(
     |point-partitions|·k·|queries| rows — a per-partition local top-k
     for free, no manual pre-reduce needed.
     """
-    q = F.broadcast(
-        queries.select(
-            F.col(query_id).alias("query_id"),
-            F.col("lon").alias("q_lon"),
-            F.col("lat").alias("q_lat"),
-        )
-    )
-    p = points.select(
-        F.col(point_id).alias("point_id"), F.col("lon"), F.col("lat")
-    )
+    q = F.broadcast(_q_frame(queries))
+    p = points.select("point_id", "lon", "lat")
     d2 = (F.col("lon") - F.col("q_lon")) ** 2 + (F.col("lat") - F.col("q_lat")) ** 2
     pairs = p.crossJoin(q).select(
         "query_id", "point_id", d2.alias("dist2")
@@ -213,17 +193,17 @@ def knn_brute(
     )
 
 
-def _q_frame(queries: DataFrame, query_id: str) -> DataFrame:
+def _q_frame(queries: DataFrame) -> DataFrame:
     return queries.select(
-        F.col(query_id).alias("query_id"),
+        "query_id",
         F.col("lon").alias("q_lon"),
         F.col("lat").alias("q_lat"),
     )
 
 
-def _p_frame(points: DataFrame, point_id: str, res: int) -> DataFrame:
+def _p_frame(points: DataFrame, res: int) -> DataFrame:
     return points.select(
-        F.col(point_id).alias("point_id"),
+        "point_id",
         "lon",
         "lat",
         cell_id(F.col("lon"), F.col("lat"), res).alias("cell"),
@@ -298,8 +278,6 @@ def knn_exact(
     k: int,
     res: int = DEFAULT_RES,
     ring: int = 1,
-    point_id: str = "point_id",
-    query_id: str = "query_id",
 ) -> DataFrame:
     """EXACT kNN at scale: cell-ring candidates + a per-query
     exactness certificate + brute-force fallback only where needed.
@@ -320,8 +298,8 @@ def knn_exact(
     from ..session import ensure_checkpoint_dir
 
     ensure_checkpoint_dir(points.sparkSession)
-    p = _p_frame(points, point_id, res)
-    q = _q_frame(queries, query_id)
+    p = _p_frame(points, res)
+    q = _q_frame(queries)
     approx = _ring_topk(p, q, k, res, ring).persist()
     try:
         exact_ids = _certified_ids(q, approx, k, res, ring).checkpoint(
@@ -332,12 +310,8 @@ def knn_exact(
         ).checkpoint(eager=True)
     finally:
         approx.unpersist()
-    fallback_q = queries.join(
-        exact_ids.select(F.col("query_id").alias(query_id)),
-        on=query_id,
-        how="left_anti",
-    )
-    brute_part = knn_brute(points, fallback_q, k, point_id, query_id)
+    fallback_q = queries.join(exact_ids, on="query_id", how="left_anti")
+    brute_part = knn_brute(points, fallback_q, k)
     return exact_part.unionByName(brute_part)
 
 
@@ -347,10 +321,7 @@ def knn_cells(
     k: int,
     res: int = DEFAULT_RES,
     ring: int = 1,
-    point_id: str = "point_id",
-    query_id: str = "query_id",
     expand: bool = False,
-    max_rounds: int = 5,
 ) -> DataFrame:
     """Cell-pruned kNN — the scale path when |queries| is large
     (equi-join on cell instead of a broadcast nested loop).
@@ -361,20 +332,20 @@ def knn_cells(
 
     ``expand=True``: EXACT — the ring doubles per round until every
     query carries the boundary certificate (``_certified_ids``), with
-    a knn_brute sweep for any stragglers after ``max_rounds``. Each
+    a knn_brute sweep for any stragglers after five rounds. Each
     round re-joins only the still-uncertified queries, so the work
     per round shrinks; the per-round isEmpty() is a driver action on
     the (small) query side only.
     """
-    p = _p_frame(points, point_id, res)
-    q_all = _q_frame(queries, query_id)
+    p = _p_frame(points, res)
+    q_all = _q_frame(queries)
     if not expand:
         return _ring_topk(p, q_all, k, res, ring)
 
     out: DataFrame | None = None
     remaining = q_all
     r = ring
-    for _ in range(max_rounds):
+    for _ in range(5):
         approx = _ring_topk(p, remaining, k, res, r).persist()
         cert = _certified_ids(remaining, approx, k, res, r)
         # localCheckpoint (eager): materializes this round's results
@@ -397,9 +368,7 @@ def knn_cells(
         r *= 2
     if remaining is not None:
         brute_q = remaining.select(
-            F.col("query_id").alias(query_id),
-            F.col("q_lon").alias("lon"),
-            F.col("q_lat").alias("lat"),
+            "query_id", F.col("q_lon").alias("lon"), F.col("q_lat").alias("lat")
         )
-        out = out.unionByName(knn_brute(points, brute_q, k, point_id, query_id))
+        out = out.unionByName(knn_brute(points, brute_q, k))
     return out

@@ -24,27 +24,26 @@ TILE_PARTITIONS = ("z", "x")  # the tile table's directory partitioning
 BBOX_COVER_MAX = 256
 
 
-def _flat_lonlats(geometry_col: str):
-    """array<array<double>> of every [lon,lat] pair in a GeoJSON
-    string — native: regexp extract of number pairs."""
+def _flat_lonlats():
+    """array<array<double>> of every [lon,lat] pair in the GeoJSON
+    ``geometry`` string — native: regexp extract of number pairs."""
     return F.expr(
         r"""
         transform(
-          regexp_extract_all(%s, '(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?),(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)', 0),
+          regexp_extract_all(geometry, '(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?),(-?[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)', 0),
           s -> array(cast(split(s, ',')[0] as double), cast(split(s, ',')[1] as double))
         )
         """
-        % geometry_col
     )
 
 
 def assign_tiles(
     features: DataFrame,
     z: int = DEFAULT_ZOOM,
-    geometry_col: str = "geometry",
     payload_cols: tuple[str, ...] = ("element_type", "id"),
 ) -> DataFrame:
-    """features with a GeoJSON column → one row per (z, x, y, feature).
+    """features with a GeoJSON ``geometry`` column → one row per
+    (z, x, y, feature).
 
     Cover strategy: the distinct tiles of the geometry's VERTICES —
     exact for points, bounded by vertex count for lines/areas (a
@@ -70,7 +69,7 @@ def assign_tiles(
             F.col("coords"), F.array().cast("array<array<double>>")
         ))
     else:
-        df = features.withColumn("_pts", _flat_lonlats(geometry_col))
+        df = features.withColumn("_pts", _flat_lonlats())
     df = df.filter(F.size("_pts") > 0)
     vert = F.array_distinct(
         F.transform(
@@ -82,7 +81,7 @@ def assign_tiles(
     )
     bounds = df.select(
         *payload_cols,
-        F.col(geometry_col).alias("feature_json"),
+        F.col("geometry").alias("feature_json"),
         vert.alias("_vt"),
         tile_x(F.array_min(F.transform("_pts", lambda p: p[0])), z).alias("_x0"),
         tile_x(F.array_max(F.transform("_pts", lambda p: p[0])), z).alias("_x1"),

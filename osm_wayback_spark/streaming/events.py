@@ -12,7 +12,9 @@ counterparts a continuously-crawled pages/events feed would need:
   analog of the reference's changeset clustering;
 - ``run_available_now``: drains everything currently in the source
   (Trigger.AvailableNow) into an in-memory table — batch-equivalent
-  semantics, used by tests to golden-compare against the batch plan.
+  semantics, used by tests to golden-compare against the batch plan;
+  a drain still running after ``DRAIN_TIMEOUT_S`` raises rather than
+  leave a partial table.
 """
 
 from __future__ import annotations
@@ -20,30 +22,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+DRAIN_TIMEOUT_S = 120  # seconds run_available_now waits for a drain
 
-def read_event_stream(
-    spark: SparkSession, path: str, schema=None
-) -> DataFrame:
-    """Parquet file-stream source. ``path`` must be a DIRECTORY (the
-    file stream source lists a directory for arriving files; a bare
-    single-file path is rejected by Spark's basePath check — stage
-    single files into a directory first)."""
-    if schema is None:
-        schema = spark.read.parquet(path).schema
+
+def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
+    """Parquet file-stream source with the schema of the files already
+    there. ``path`` must be a DIRECTORY (the file stream source lists a
+    directory for arriving files; a bare single-file path is rejected
+    by Spark's basePath check — stage single files into a directory
+    first)."""
+    schema = spark.read.parquet(path).schema
     return spark.readStream.schema(schema).parquet(path)
 
 
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Tumbling-window counts + sums per event_type with a watermark
-    bounding late-data state."""
+def windowed_event_counts(events: DataFrame) -> DataFrame:
+    """One-hour tumbling-window counts + sums per event_type with a
+    10-minute watermark bounding late-data state."""
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             F.round(F.sum("value"), 6).alias("sum_value"),
@@ -57,17 +55,14 @@ def windowed_event_counts(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Per-user session windows with a gap timeout — the streaming
-    form of the reference's changeset temporal clustering (≤60 s gap
-    merges minor changesets, way-history-builder.js:266-272)."""
+def sessionize(events: DataFrame, gap: str = "5 minutes") -> DataFrame:
+    """Per-user session windows with a gap timeout and a 10-minute
+    watermark — the streaming form of the reference's changeset
+    temporal clustering (≤60 s gap merges minor changesets,
+    way-history-builder.js:266-272)."""
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(
@@ -80,12 +75,13 @@ def sessionize(
 
 
 def run_available_now(
-    stream_df: DataFrame, table_name: str, timeout_s: int = 120,
-    output_mode: str = "complete",
+    stream_df: DataFrame, table_name: str, output_mode: str = "complete"
 ) -> None:
     """Drain the source with Trigger.AvailableNow into an in-memory
     table and block until done. ``complete`` for aggregations,
-    ``append`` for row-level operators (dedup, maps)."""
+    ``append`` for row-level operators (dedup, maps). A drain still
+    running after ``DRAIN_TIMEOUT_S`` is stopped and raises
+    ``TimeoutError``: the table would hold a partial answer."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(table_name)
@@ -93,8 +89,13 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_s)
+    done = q.awaitTermination(DRAIN_TIMEOUT_S)
     q.stop()
+    if not done:
+        raise TimeoutError(
+            f"streaming drain into {table_name!r} did not finish in "
+            f"{DRAIN_TIMEOUT_S} s; its memory table is partial"
+        )
 
 
 def streaming_near_dup_flags(
@@ -102,7 +103,6 @@ def streaming_near_dup_flags(
     corpus_signatures: DataFrame,
     num_hashes: int = 8,
     bands: int = 4,
-    n: int = 3,
 ) -> DataFrame:
     """Streaming near-dup screening of a document stream against a
     STATIC reference corpus — the shape a continuously-fed training
@@ -130,7 +130,7 @@ def streaming_near_dup_flags(
     """
     from ..operators.dedup import band_buckets, minhash_signatures
 
-    stream_sigs = minhash_signatures(documents, num_hashes, n)
+    stream_sigs = minhash_signatures(documents, num_hashes)
     stream_buckets = band_buckets(stream_sigs, num_hashes, bands)
     corpus_buckets = band_buckets(
         corpus_signatures, num_hashes, bands, id_out="corpus_doc_id"
@@ -140,23 +140,19 @@ def streaming_near_dup_flags(
     )
 
 
-def streaming_exact_dedup(
-    documents: DataFrame,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_exact_dedup(documents: DataFrame) -> DataFrame:
     """Streaming exact dedup for a continuously-crawled corpus:
     ``dropDuplicatesWithinWatermark`` on the content fingerprint
     (md5 of normalized text) — the first-seen copy of each document
-    passes, re-crawls inside the watermark horizon are dropped, and
-    the dedup state is bounded by the watermark (old fingerprints
-    age out instead of growing forever, the property that matters on
-    an unbounded crawl)."""
+    passes, re-crawls inside the one-hour watermark horizon on ``ts``
+    are dropped, and the dedup state is bounded by the watermark (old
+    fingerprints age out instead of growing forever, the property
+    that matters on an unbounded crawl)."""
     fp = F.md5(F.lower(F.regexp_replace(F.trim("text"), r"\s+", " ")))
     return (
-        documents.withColumn("ts", F.col(ts_col).cast("timestamp"))
+        documents.withColumn("ts", F.col("ts").cast("timestamp"))
         .withColumn("_fp", fp)
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["_fp"])
         .drop("_fp")
     )

@@ -69,7 +69,7 @@ def test_minhash_dedup_verified_jaccard(docs):
 def test_jaccard_pairs_match_python(docs):
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_pairs(docs, threshold=0.2, max_df=None).collect()
+        for r in jaccard_pairs(docs, threshold=0.2).collect()
     }
     exp = {}
     for i, (ida, ta) in enumerate(DOCS):
@@ -292,6 +292,69 @@ def test_dedupe_increment(spark):
     assert got[1] == (True, True, False)
     assert got[2] == (False, True, False)
     assert got[3] == (False, False, True)
+
+
+def _warned(caplog, what):
+    return any(
+        r.message.startswith(f"{what}: dropped") and "hot bucket" in r.message
+        for r in caplog.records
+    )
+
+
+def test_dedupe_increment_max_bucket(spark, caplog):
+    """The corpus-side hot-bucket cap: five identical corpus docs make
+    every band bucket of their text 5 deep; at max_bucket=3 those
+    buckets are dropped (logged), so the new doc that is a near-copy
+    of them loses its near-dup flag while the one near-copying a cold
+    corpus doc keeps it."""
+    import logging
+
+    from osm_wayback_spark.operators.dedup import dedupe_increment
+
+    base = "the quick brown fox jumps over the lazy dog again and again "
+    cold = "completely different corpus text about spark plans and stages"
+    corpus = spark.createDataFrame(
+        [(100 + i, base * 3) for i in range(5)] + [(105, cold)],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [(1, base * 3 + "tail changed a bit"), (2, cold + " today")],
+        "doc_id long, text string",
+    )
+
+    def near(**kw):
+        return {
+            r.doc_id
+            for r in dedupe_increment(new, corpus, threshold=0.3, **kw).collect()
+            if r.near_dup
+        }
+
+    uncapped = near()
+    with caplog.at_level(logging.WARNING, logger="osm_wayback_spark.operators.dedup"):
+        capped = near(max_bucket=3)
+    assert _warned(caplog, "dedupe_increment")
+    assert capped < uncapped
+    assert capped == {2}
+
+
+def test_jaccard_pairs_max_df(spark, caplog):
+    """The shingle document-frequency cap: the five copies of one text
+    share shingles of df 5, dropped at max_df=3 (logged); the pair
+    whose shingles all have df ≤ 2 keeps its row and its Jaccard."""
+    import logging
+
+    hot = [(i, "alpha beta gamma delta epsilon") for i in range(5)]
+    cold = [
+        (10, "one two three four five six"),
+        (11, "one two three four five seven"),
+    ]
+    docs = spark.createDataFrame(hot + cold, "doc_id long, text string")
+    uncapped = set(jaccard_pairs(docs, threshold=0.2).collect())
+    with caplog.at_level(logging.WARNING, logger="osm_wayback_spark.operators.dedup"):
+        capped = set(jaccard_pairs(docs, threshold=0.2, max_df=3).collect())
+    assert _warned(caplog, "jaccard_pairs")
+    assert capped < uncapped
+    assert {(r.doc_a, r.doc_b) for r in capped} == {(10, 11)}
 
 
 def test_line_dedup_semantics(spark):

@@ -143,7 +143,7 @@ def test_relation_geometry_flows_into_tiles(spark, frames):
         "geometry IS NOT NULL"
     )
     tiles = assign_tiles(
-        recon, z=9, geometry_col="geometry", payload_cols=("id", "version")
+        recon, z=9, payload_cols=("id", "version")
     ).collect()
     assert tiles
 

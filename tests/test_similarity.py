@@ -207,6 +207,28 @@ def test_near_dup_candidates_recall_and_plan(spark, plan_nodes):
     assert "BroadcastNestedLoopJoin" not in nodes
 
 
+def test_near_dup_candidates_max_bucket(spark, emb, caplog):
+    """The hot-bucket cap: twenty copies of one vector fill one bucket
+    per table 20 deep; at max_bucket=15 those buckets are dropped
+    (logged) and their pairs with them, while pairs from the other
+    buckets are kept."""
+    import logging
+
+    from osm_wayback_spark.operators.similarity import near_dup_candidates
+
+    rows, _ = emb
+    hot = [(1000 + i, [1.0] + [0.0] * 7) for i in range(20)]
+    df = spark.createDataFrame(rows + hot, "vec_id long, embedding array<float>")
+    uncapped = set(near_dup_candidates(df).collect())
+    with caplog.at_level(logging.WARNING, logger="osm_wayback_spark.operators.dedup"):
+        capped = set(near_dup_candidates(df, max_bucket=15).collect())
+    assert any(
+        r.message.startswith("near_dup_candidates: dropped") for r in caplog.records
+    )
+    assert capped < uncapped
+    assert capped
+
+
 def test_ann_leaves_no_persisted_frames(spark, emb):
     """_guarantee_k persists intermediates while augmenting, but must
     release every cache before returning (round-3 advice: a bench

@@ -59,6 +59,19 @@ def test_sessionize_matches_batch(spark, events_path):
     assert sum(got.values()) == spark.read.parquet(events_path).count()
 
 
+def test_run_available_now_timeout_raises(spark, events_path, monkeypatch):
+    """A drain still running at the deadline raises TimeoutError naming
+    the table, instead of returning over a partial memory table, and
+    leaves no stream running."""
+    from osm_wayback_spark.streaming import events
+
+    monkeypatch.setattr(events, "DRAIN_TIMEOUT_S", 0.001)
+    stream = windowed_event_counts(read_event_stream(spark, events_path))
+    with pytest.raises(TimeoutError, match="win_counts_timeout"):
+        run_available_now(stream, "win_counts_timeout")
+    assert spark.streams.active == []
+
+
 def test_streaming_exact_dedup(spark, tmp_path):
     """Duplicate texts in the stream collapse to one surviving row
     per fingerprint; distinct texts all pass."""
